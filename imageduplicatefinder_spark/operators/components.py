@@ -18,26 +18,13 @@ realistic inputs. Each round ``localCheckpoint``s to truncate lineage —
 without it the plan doubles per iteration and the job dies at scale
 (SURVEY.md §4 hard part (a)).
 
-Driver-job economy (the round-3 F ~= 32 s job-submit constant,
-BENCH.md): two levers were implemented and MEASURED this round, and
-the measurements say to keep per-round checks the default —
-
-- ``check_every`` batches k propagation rounds into one convergence-
-  check action (rounds build lazily; the monotone label sum stalls iff
-  every round in the block was a no-op, so batching cannot mis-detect
-  convergence). Measured at sf0.1 (simhash_radius_clusters, 4724
-  clusters): k=2 SLOWS the query 13 s -> 19-23 s — a no-op round still
-  shuffles the full label table, and detecting convergence needs the
-  sum to stall across a whole block, so k=2 pays ~2 extra full rounds.
-  The saved job submits (~0.2 s each) never repay that at this or any
-  larger scale. Default is therefore 1; k>1 is for latency-bound
-  many-tiny-graph callers only.
-- disabling AQE for the loop (fewer per-stage driver jobs: 69 -> 24 on
-  the same query) was measured at 38-78 s for the identical result —
-  AQE's runtime broadcast of the per-round label join and its
-  data-sized partition coalescing are worth far more than the submit
-  latency it costs. The loop therefore runs under whatever AQE config
-  the caller's session has; no session conf is touched.
+Disabling AQE for the loop (fewer per-stage driver jobs: 69 -> 24 on
+simhash_radius_clusters at sf0.1) was measured at 38-78 s against
+12.7-14.6 s with AQE on, for the identical result (BENCH.md): AQE's
+runtime broadcast of the per-round label join and its data-sized
+partition coalescing are worth far more than the submit latency it
+costs. The loop therefore runs under whatever AQE config the caller's
+session has; no session conf is touched.
 """
 
 from __future__ import annotations
@@ -54,40 +41,49 @@ from pyspark.sql import functions as F
 #: verified rep-rep edges) — while 2M edges collect as ~32 MB of two
 #: int64 columns: the same guarded bounded-collect dispatch as
 #: TILE_MAX_SKETCHES and BROADCAST_VERIFY_MAX_SIGS, with the iterative
-#: path remaining the only scalable shape beyond the bound. Pass
-#: ``driver_max_edges=0`` to force the distributed rounds (the
-#: convergence/iteration contract tests do).
+#: path remaining the only scalable shape beyond the bound. 0 forces
+#: the distributed rounds (the convergence/iteration contract tests
+#: monkeypatch it).
 CC_DRIVER_MAX_EDGES = 2_000_000
 
 
-def _driver_components(edges_small: DataFrame) -> DataFrame | None:
-    """One-pass exact components for a bounded edge set: nodes are the
-    distinct endpoint values (self-loops label themselves, matching the
-    distributed contract), labels are the exact min-label fixpoint, so
-    the output is row-identical to the iterative implementations.
-    Returns None when a null endpoint is present — null-edge semantics
-    stay on the distributed path, the same fall-through style as
-    ``_verify_pairs_vectorized``."""
-    import numpy as np
+def _driver_guard(edges: DataFrame) -> tuple[DataFrame, DataFrame | None]:
+    """The bounded-size dispatch both CC implementations open with:
+    ``(e0, labels)``, where ``e0`` is the (src, dst) edges, lazily
+    checkpointed so their lineage computes once for the count and
+    whichever path runs, and ``labels`` is the one-pass driver result
+    within ``CC_DRIVER_MAX_EDGES`` edges, else None (run the rounds).
 
-    pdf = edges_small.toPandas()
+    The driver pass is exact: nodes are the distinct endpoint values
+    (self-loops label themselves, matching the distributed contract)
+    and labels are the exact min-label fixpoint, so the output is
+    row-identical to the iterative implementations. A null endpoint
+    also yields None — null-edge semantics stay on the distributed
+    path, the same fall-through style as ``_verify_pairs_vectorized``.
+    """
+    import numpy as np
+    import pandas as pd
+
+    e0 = edges.select("src", "dst").localCheckpoint(eager=False)
+    if not CC_DRIVER_MAX_EDGES or e0.count() > CC_DRIVER_MAX_EDGES:
+        return e0, None
+    pdf = e0.toPandas()
     if pdf.isnull().values.any():
-        return None
+        return e0, None
     from imageduplicatefinder_spark.operators.hamming_lsh import (
         _np_min_label_components,
     )
 
-    spark = edges_small.sparkSession
+    spark = e0.sparkSession
     schema = "doc_id long, cluster_id long"
     if not len(pdf):
-        return spark.createDataFrame([], schema)
+        return e0, spark.createDataFrame([], schema)
     a = pdf["src"].to_numpy(dtype=np.int64)
     b = pdf["dst"].to_numpy(dtype=np.int64)
     nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
     lab = _np_min_label_components(nodes, inv[: len(a)], inv[len(a):], np)
-    import pandas as pd
 
-    return spark.createDataFrame(
+    return e0, spark.createDataFrame(
         pd.DataFrame({"doc_id": nodes, "cluster_id": nodes[lab]}), schema
     )
 
@@ -96,8 +92,6 @@ def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
     on_nonconverged: str = "raise",
-    check_every: int = 1,
-    driver_max_edges: int = CC_DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """edges(src:long, dst:long) -> (doc_id:long, cluster_id:long).
 
@@ -112,36 +106,17 @@ def connected_components(
     into several clusters, so the default is to ``raise``; pass
     ``on_nonconverged="warn"`` to log and return the partial labels.
 
-    ``check_every`` batches that many propagation rounds into ONE Spark
-    action (the convergence check). Correctness is unaffected — the
-    monotone label sum stalls iff every round in the block was a no-op
-    — but each batched block costs up to check_every-1 extra full
-    propagation rounds before convergence is visible, and a no-op round
-    shuffles the whole label table. Default 1 (check every round): the
-    extra rounds measured strictly slower than the saved job submits at
-    every scale tried (module docstring). Raise it only for
-    latency-bound workloads on tiny graphs.
-
-    At or below ``driver_max_edges`` edges (see ``CC_DRIVER_MAX_EDGES``)
-    the computation dispatches to one bounded driver pass with the
-    exact same output; the driver kernel computes the true fixpoint, so
-    ``max_iterations``/``on_nonconverged``/``check_every`` only govern
-    the distributed rounds beyond the bound (or when
-    ``driver_max_edges=0`` forces them).
+    At or below ``CC_DRIVER_MAX_EDGES`` edges the computation
+    dispatches to one bounded driver pass with the exact same output;
+    the driver kernel computes the true fixpoint, so
+    ``max_iterations``/``on_nonconverged`` only govern the distributed
+    rounds beyond the bound.
     """
     if on_nonconverged not in ("raise", "warn"):
         raise ValueError(f"unknown on_nonconverged {on_nonconverged!r}")
-    if check_every < 1:
-        raise ValueError(f"check_every must be >= 1, got {check_every}")
-    # bounded-size dispatch (CC_DRIVER_MAX_EDGES): the count runs over a
-    # lazily checkpointed edge frame so the (possibly expensive) edge
-    # lineage computes once and both the driver kernel and the
-    # distributed rounds read the materialized rows
-    e0 = edges.select("src", "dst").localCheckpoint(eager=False)
-    if driver_max_edges and e0.count() <= driver_max_edges:
-        out = _driver_components(e0)
-        if out is not None:
-            return out
+    e0, out = _driver_guard(edges)
+    if out is not None:
+        return out
     sym = e0.select(
         F.col("src").alias("a"), F.col("dst").alias("b")
     ).union(e0.select(F.col("dst").alias("a"), F.col("src").alias("b")))
@@ -167,27 +142,20 @@ def connected_components(
 
     converged = False
     prev_sum = label_sum(labels)
-    rounds_since_check = 0
-    for i in range(max_iterations):
+    for _ in range(max_iterations):
         # neighbor messages: label(a) offered to b
         msgs = sym.join(labels, sym.a == labels.node).select(
             F.col("b").alias("node"), "label"
         )
-        # lazy checkpoint: unchecked rounds stay unmaterialized and
-        # run inside the next check's single action (lineage still
-        # truncates at each round's checkpoint when that action
-        # computes them)
+        # lazy checkpoint: the convergence check below materializes the
+        # round and truncates its lineage
         labels = (
             msgs.union(labels.select("node", "label"))
             .groupBy("node")
             .agg(F.min("label").alias("label"))
             .localCheckpoint(eager=False)
         )
-        rounds_since_check += 1
-        if rounds_since_check < check_every and i < max_iterations - 1:
-            continue
         new_sum = label_sum(labels)
-        rounds_since_check = 0
         if new_sum == prev_sum:
             converged = True
             break
@@ -248,7 +216,6 @@ def connected_components_star(
     edges: DataFrame,
     max_iterations: int = 50,
     on_nonconverged: str = "raise",
-    driver_max_edges: int = CC_DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -282,16 +249,12 @@ def connected_components_star(
     """
     if on_nonconverged not in ("raise", "warn"):
         raise ValueError(f"unknown on_nonconverged {on_nonconverged!r}")
-    # bounded-size dispatch, identical to connected_components: on the
-    # raw edges (self-loops included — the driver kernel labels
-    # self-loop-only nodes as their own singletons, same as the
-    # distributed contract below)
-    e0 = edges.select("src", "dst").localCheckpoint(eager=False)
-    if driver_max_edges and e0.count() <= driver_max_edges:
-        out = _driver_components(e0)
-        if out is not None:
-            return out
-    edges = e0
+    # bounded-size dispatch on the raw edges (self-loops included — the
+    # driver kernel labels self-loop-only nodes as their own singletons,
+    # same as the distributed contract below)
+    edges, out = _driver_guard(edges)
+    if out is not None:
+        return out
     # every node mentioned in edges gets a label — contraction works on
     # self-loop-free canonical edges, but self-loop-only nodes must come
     # back as singletons (contract parity with connected_components and

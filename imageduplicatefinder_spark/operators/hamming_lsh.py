@@ -58,11 +58,11 @@ sketches -> shared chunk values) explodes far past the uniform estimate
 versus 18.5M true close pairs. In EXACT mode (no explicit ``n_agree``,
 no engaged cap) at or below ``TILE_MAX_SKETCHES`` distinct sketches,
 the operator therefore runs a tiled all-pairs XOR/popcount kernel
-instead (``_close_pairs_tiles`` — the ``blocked_cosine_pairs`` shape:
-B(B+1)/2 applyInPandas tiles over the distinct-sketch table, SWAR
-popcount, no join at all); connected-components consumers additionally
-get a per-tile spanning forest (``_forest_edges_tiles``) so the edge
-volume stays ~linear in sketches. The pigeonhole key join remains the
+instead (``_close_pairs_tiles``: ``block_pair_tiles`` over the
+distinct-sketch table, SWAR popcount, no join at all);
+connected-components consumers additionally get a per-tile spanning
+forest (``_forest_edges_tiles``) so the edge volume stays ~linear in
+sketches. The pigeonhole key join remains the
 dispersed/web-scale path, where the auto cap bounds it linearly.
 """
 
@@ -76,6 +76,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from imageduplicatefinder_spark.functions.fingerprints import hamming_distance_col
+from imageduplicatefinder_spark.operators.tiles import block_pair_tiles
 
 _LOG = logging.getLogger(__name__)
 
@@ -116,15 +117,15 @@ AUTO_M2_MIN_SKETCHES = 50_000
 #: (measured: cap 32 gives growth exponent 0.211 at 64k->256k, 45.0M ->
 #: 60.3M candidates, while cap 128 barely engages — uniform m=2 key
 #: groups at 256k run 62-250 deep, so 128 leaves the quadratic mostly
-#: intact at exponent 1.53; both measured via
-#: tools/bench_hamming_candidates.py, BENCH.md rounds 3-4). The cap
-#: engages only past AUTO_CAP_MIN_SKETCHES distinct sketches, so small
-#: and clustered corpora — where every key group is tiny and the cap
-#: would never trigger anyway — skip the group-size pass entirely and
-#: keep byte-identical exact results (the driver-scale hash-matches
-#: are unaffected; pinned by test_hamming_auto_cap_*). Exact mode at
-#: any scale stays one explicit ``max_key_group=None`` away, and
-#: ``hamming_key_stats`` surfaces exactly which keys a cap truncated.
+#: intact at exponent 1.53; BENCH.md rounds 3-4, "Bounded radius-10
+#: Hamming plan"). The cap engages only past AUTO_CAP_MIN_SKETCHES
+#: distinct sketches, so small and clustered corpora — where every key
+#: group is tiny and the cap would never trigger anyway — skip the
+#: group-size pass entirely and keep byte-identical exact results (the
+#: driver-scale hash-matches are unaffected; pinned by
+#: test_hamming_auto_cap_*). Exact mode at any scale stays one explicit
+#: ``max_key_group=None`` away, and ``hamming_key_stats`` surfaces
+#: exactly which keys a cap truncated.
 AUTO_CAP_MIN_SKETCHES = 50_000
 AUTO_MAX_KEY_GROUP = 32
 _AUTO_CAP_MIN_RADIUS = 6
@@ -229,14 +230,6 @@ def sketch_keys(
     )
 
 
-# back-compat alias for the single-chunk form (m=1, radius+1 chunks)
-def sketch_chunks(sketches: DataFrame, radius: int,
-                  sketch_col: str = "simhash") -> DataFrame:
-    """(sketch, chunk_id, chunk_val) for the radius+1 single-bit-chunk
-    pigeonhole keys — ``sketch_keys`` with n_agree=1."""
-    return sketch_keys(sketches, radius, n_agree=1, sketch_col=sketch_col)
-
-
 def capped_sketch_keys(
     keys: DataFrame, max_key_group: int
 ) -> tuple[DataFrame, DataFrame]:
@@ -284,85 +277,64 @@ def _popcount64(x):
     return (x * h01) >> np.uint64(56)
 
 
-def _tile_groups(src: DataFrame, n_sk: int) -> tuple[DataFrame, int]:
-    """Replicate the distinct-sketch table into B(B+1)/2 unordered
-    block-pair groups (the ``blocked_cosine_pairs`` shape): every
-    unordered sketch pair occurs in EXACTLY one (gi, gj) group, so the
-    tile kernels need no cross-tile dedup."""
+def _tile_pairs(src: DataFrame, n_sk: int, kernel, schema: str) -> DataFrame:
+    """``block_pair_tiles`` over the distinct-sketch table, blocked by
+    sketch value at ~``_TILE_BLOCK_ROWS`` sketches per block."""
     n_blocks = max(1, min(64, -(-n_sk // _TILE_BLOCK_ROWS)))
-    base = src.select(
-        "sketch",
-        F.pmod(F.xxhash64("sketch"), F.lit(n_blocks)).alias("_blk"),
-    )
-    rep = base.withColumn(
-        "_p", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
-    ).select(
-        F.least("_blk", "_p").alias("_gi"),
-        F.greatest("_blk", "_p").alias("_gj"),
-        "sketch",
-        "_blk",
-    )
-    return rep, n_blocks
+    return block_pair_tiles(src.select("sketch"), "sketch", n_blocks,
+                            kernel, schema)
 
 
-def _tile_sides(key: tuple, pdf, np):
-    """(A, B) int64 sketch arrays for one tile: the full block for a
-    diagonal tile (A is B), the two distinct blocks otherwise."""
-    gi, gj = int(key[0]), int(key[1])
-    sk = pdf["sketch"].to_numpy(dtype=np.int64)
-    if gi == gj:
-        return sk, sk, True
-    left = pdf["_blk"].to_numpy() == gi
-    return sk[left], sk[~left], False
+def _close_positions(A, B, diag: bool, radius: int):
+    """(ai, bi, hamming) positions of every pair of sketch arrays A x B
+    within ``radius`` (only i < j on a diagonal tile, where A and B
+    hold the same rows).
+    Streams A in row stripes so the xor temp stays tens of MB
+    regardless of block size."""
+    import numpy as np
+
+    bu = B.view(np.uint64)
+    stripe = max(1, (1 << 22) // max(len(B), 1))
+    ai_all, bi_all, ham_all = [], [], []
+    for s in range(0, len(A), stripe):
+        a = A[s : s + stripe]
+        ham = _popcount64(a.view(np.uint64)[:, None] ^ bu[None, :])
+        mask = ham <= radius
+        if diag:
+            ii = np.arange(s, s + len(a))
+            mask &= ii[:, None] < np.arange(len(B))[None, :]
+        ai, bi = np.nonzero(mask)
+        ai_all.append(ai + s)
+        bi_all.append(bi)
+        ham_all.append(ham[ai, bi].astype(np.int64))
+    if not ai_all:
+        empty = np.empty(0, dtype=np.int64)
+        return empty, empty, empty
+    return (np.concatenate(ai_all), np.concatenate(bi_all),
+            np.concatenate(ham_all))
 
 
 def _close_pairs_tiles(src: DataFrame, radius: int, n_sk: int) -> DataFrame:
     """EXACT (sk_a, sk_b, hamming) pairs over distinct sketches via
     tiled vectorized XOR/popcount — the clustered/moderate-S regime of
     the dispatch (see ``TILE_MAX_SKETCHES``). Identical output contract
-    to the key-join form: sk_a < sk_b (signed), 0 < hamming <= radius.
-    Each tile streams the A side in row stripes so the xor temp stays
-    tens of MB regardless of block size."""
+    to the key-join form: sk_a < sk_b (signed), 0 < hamming <= radius."""
     import numpy as np
     import pandas as pd
 
-    rep, _ = _tile_groups(src, n_sk)
     r = int(radius)
 
-    def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        A, B, diag = _tile_sides(key, pdf, np)
-        out_a: list[np.ndarray] = []
-        out_b: list[np.ndarray] = []
-        out_h: list[np.ndarray] = []
-        if len(A) and len(B):
-            bu = B.view(np.uint64)
-            stripe = max(1, (1 << 22) // max(len(B), 1))
-            for s in range(0, len(A), stripe):
-                a = A[s : s + stripe]
-                ham = _popcount64(a.view(np.uint64)[:, None] ^ bu[None, :])
-                mask = ham <= r
-                if diag:
-                    mask &= a[:, None] < B[None, :]
-                ai, bi = np.nonzero(mask)
-                if not len(ai):
-                    continue
-                xa, xb = a[ai], B[bi]
-                out_a.append(np.minimum(xa, xb))
-                out_b.append(np.maximum(xa, xb))
-                out_h.append(ham[ai, bi].astype(np.int64))
-        if not out_a:
-            return pd.DataFrame(columns=["sk_a", "sk_b", "hamming"])
+    def kernel(pdf, a_idx, b_idx, diag):
+        sk = pdf["sketch"].to_numpy(dtype=np.int64)
+        A, B = sk[a_idx], sk[b_idx]
+        ai, bi, ham = _close_positions(A, B, diag, r)
+        xa, xb = A[ai], B[bi]
         return pd.DataFrame(
-            {
-                "sk_a": np.concatenate(out_a),
-                "sk_b": np.concatenate(out_b),
-                "hamming": np.concatenate(out_h),
-            }
+            {"sk_a": np.minimum(xa, xb), "sk_b": np.maximum(xa, xb),
+             "hamming": ham}
         )
 
-    return rep.groupBy("_gi", "_gj").applyInPandas(
-        tile, "sk_a long, sk_b long, hamming long"
-    )
+    return _tile_pairs(src, n_sk, kernel, "sk_a long, sk_b long, hamming long")
 
 
 def _forest_edges_tiles(src: DataFrame, radius: int, n_sk: int) -> DataFrame:
@@ -387,37 +359,16 @@ def _forest_edges_tiles(src: DataFrame, radius: int, n_sk: int) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    rep, _ = _tile_groups(src, n_sk)
     r = int(radius)
 
-    def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        A, B, diag = _tile_sides(key, pdf, np)
-        if not len(A) or not len(B):
-            return pd.DataFrame(columns=["sk_a", "sk_b"])
+    def kernel(pdf, a_idx, b_idx, diag):
+        sk = pdf["sketch"].to_numpy(dtype=np.int64)
+        A, B = sk[a_idx], sk[b_idx]
+        ai, bi, _ = _close_positions(A, B, diag, r)
         # local close pairs as node indices into the tile's node list
         nodes = A if diag else np.concatenate([A, B])
-        ai_all: list[np.ndarray] = []
-        bi_all: list[np.ndarray] = []
-        bu = B.view(np.uint64)
-        off = 0 if diag else len(A)
-        stripe = max(1, (1 << 22) // max(len(B), 1))
-        for s in range(0, len(A), stripe):
-            a = A[s : s + stripe]
-            ham = _popcount64(a.view(np.uint64)[:, None] ^ bu[None, :])
-            mask = ham <= r
-            if diag:
-                # index-based upper triangle (values are distinct, any
-                # one orientation per pair suffices for connectivity)
-                ii = np.arange(s, s + len(a))
-                mask &= ii[:, None] < np.arange(len(B))[None, :]
-            ai, bi = np.nonzero(mask)
-            if len(ai):
-                ai_all.append(ai + s)
-                bi_all.append(bi + off)
-        if not ai_all:
-            return pd.DataFrame(columns=["sk_a", "sk_b"])
-        ai = np.concatenate(ai_all)
-        bi = np.concatenate(bi_all)
+        if not diag:
+            bi = bi + len(A)
         lab = _np_min_label_components(nodes, ai, bi, np)
         member = np.nonzero(lab != np.arange(len(nodes)))[0]
         xa, xb = nodes[lab[member]], nodes[member]
@@ -425,9 +376,7 @@ def _forest_edges_tiles(src: DataFrame, radius: int, n_sk: int) -> DataFrame:
             {"sk_a": np.minimum(xa, xb), "sk_b": np.maximum(xa, xb)}
         )
 
-    return rep.groupBy("_gi", "_gj").applyInPandas(
-        tile, "sk_a long, sk_b long"
-    )
+    return _tile_pairs(src, n_sk, kernel, "sk_a long, sk_b long")
 
 
 def _np_min_label_components(nodes, ai, bi, np):

@@ -110,8 +110,8 @@ def hot_band_stats(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
     drop-accounting table AND the exact join input ``kept_bands_given_
     hot`` needs, so a pipeline that checkpoints it first aggregates the
     band table exactly once (measured: the stats-after-bands ordering
-    re-ran this groupBy for 7.5 s of an 88 s run, tools/
-    bench_stage_breakdown.py)."""
+    re-ran this groupBy for 7.5 s of an 88 s run, BENCH.md "Band-stats
+    fold")."""
     return (
         bands.groupBy("band_id", "band_hash")
         .agg(F.count("*").alias("band_size"))

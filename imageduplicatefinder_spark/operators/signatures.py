@@ -42,23 +42,28 @@ def add_doc_id(df: DataFrame) -> DataFrame:
     return df.withColumn("doc_id", F.xxhash64("repo", "path", "commit"))
 
 
-def _widen_if_narrow(df: DataFrame, source: DataFrame) -> DataFrame:
-    """Repartition when the source scan is narrower than the cluster.
+def widen_if_narrow(df: DataFrame, key: str = "doc_id") -> DataFrame:
+    """Repartition by ``key`` when the source scan is narrower than the
+    cluster — the one narrow-scan rule for pipeline stages and catalog
+    queries.
 
-    CPU-bound stages (sha256, the fingerprint UDF) serialize on a
-    single core when the input is one parquet file / one cached
-    partition. inputFiles() is metadata-only (an rdd.getNumPartitions()
-    probe triggers an extra job under AQE); non-file sources report 0
-    files and are small, so they are widened too. At real scale the
-    source has thousands of files and this is a no-op.
+    CPU-bound per-row work fused into the scan stage (sha256, the
+    fingerprint UDF, gram builds) serializes on 1-2 tasks when the input
+    is one parquet file or one cached partition (guide §2.5 input
+    skew); hash-partitioning by ``key`` also lets downstream per-key
+    aggregations reuse the exchange. inputFiles() is metadata-only (an
+    rdd.getNumPartitions() probe triggers an extra job under AQE);
+    non-file sources report 0 files and are small, so they are widened
+    too. At real scale the source has more files than cores and this
+    is a no-op.
     """
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     try:
-        n_files = len(source.inputFiles())
+        n_files = len(df.inputFiles())
     except Exception:  # noqa: BLE001 - conservative: widen on unknown sources
         n_files = 0
     if n_files < parallelism:
-        return df.repartition(parallelism * 2, "doc_id")
+        return df.repartition(parallelism * 2, key)
     return df
 
 
@@ -78,7 +83,7 @@ def hash_documents(
     df = documents
     if langs:
         df = df.filter(F.col("lang").isin(langs))
-    df = _widen_if_narrow(add_doc_id(df), documents)
+    df = widen_if_narrow(add_doc_id(df))
     return df.select(
         "doc_id",
         "repo",
@@ -114,7 +119,7 @@ def compute_signatures(
     df = add_doc_id(df)
 
     if widen:
-        df = _widen_if_narrow(df, documents)
+        df = widen_if_narrow(df)
 
     fp = make_fingerprint_udf(cfg)
     df = df.select(

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from imageduplicatefinder_spark.operators.tiles import block_pair_tiles
+
 
 def blocked_cosine_pairs(
     df: DataFrame,
@@ -46,20 +48,15 @@ def blocked_cosine_pairs(
     partition_col: str | None = None,
 ) -> DataFrame:
     """Exact pairs with cosine >= threshold, distributed block-matrix
-    form: rows are hashed into ``n_blocks`` blocks, each row is
-    replicated once per partner block, and every unordered block pair
-    (i <= j) becomes one ``applyInPandas`` group computing its tile of
-    the similarity matrix with a single float64 BLAS matmul.
-
-    Pair-uniqueness invariant: a same-block pair {a, b} exists only in
-    group (i, i); a cross-block pair only in group (i, j), i < j, as a
-    cross product of the two sides — so no distinct() pass is needed.
+    form: a ``block_pair_tiles`` self-join (operators/tiles.py, which
+    holds the pair-uniqueness invariant) whose every tile of the
+    similarity matrix is a single float64 BLAS matmul.
     Zero-norm vectors produce NaN cosine and fail the threshold (same
     semantics as a null from ``try_divide``).
 
-    Shuffle volume is n_blocks x the input (replication), compute is
-    O(n^2/2) multiply-adds spread over B(B+1)/2 independent tasks —
-    pick ``n_blocks`` ~ sqrt(2 x cores) so every core gets a tile.
+    Compute is O(n^2/2) multiply-adds spread over B(B+1)/2 independent
+    tasks — pick ``n_blocks`` ~ sqrt(2 x cores) so every core gets a
+    tile.
     Output: (out_a, out_b, cosine_milli) with out_a < out_b.
 
     Cross-engine caveat: BLAS uses pairwise float64 summation while a
@@ -76,55 +73,35 @@ def blocked_cosine_pairs(
     """
     part = [F.col(partition_col).alias("_part")] if partition_col else []
     base = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_vec"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("_blk"),
-        *part,
-    )
-    rep = base.withColumn(
-        "_p", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
-    ).select(
-        F.least("_blk", "_p").alias("_gi"),
-        F.greatest("_blk", "_p").alias("_gj"),
-        "_id",
-        "_vec",
-        "_blk",
-        *(["_part"] if partition_col else []),
+        F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"), *part
     )
 
-    def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        gi, gj = int(key[-2]), int(key[-1])
+    def kernel(pdf, a_idx, b_idx, diag):
         ids = pdf["_id"].to_numpy(dtype=np.int64)
         mat = np.array(list(pdf["_vec"]), dtype=np.float64)
         norms = np.sqrt((mat * mat).sum(axis=1))
         norms[norms == 0.0] = np.nan
-        if gi == gj:
-            with np.errstate(invalid="ignore"):
-                cos = (mat @ mat.T) / np.outer(norms, norms)
-                mask = (cos >= threshold) & (ids[:, None] < ids[None, :])
-            ai, bi = np.nonzero(mask)
-            a_ids, b_ids = ids[ai], ids[bi]
-        else:
-            left = pdf["_blk"].to_numpy() == gi
-            la, lb = np.nonzero(left)[0], np.nonzero(~left)[0]
-            with np.errstate(invalid="ignore"):
-                cos = (mat[la] @ mat[lb].T) / np.outer(norms[la], norms[lb])
-                mask = cos >= threshold
-            ai, bi = np.nonzero(mask)
-            xa, xb = ids[la][ai], ids[lb][bi]
-            a_ids, b_ids = np.minimum(xa, xb), np.maximum(xa, xb)
-        vals = cos[ai, bi]
+        a = mat[a_idx]
+        b = a if diag else mat[b_idx]
+        with np.errstate(invalid="ignore"):
+            cos = (a @ b.T) / np.outer(norms[a_idx], norms[b_idx])
+            mask = cos >= threshold
+        if diag:
+            mask &= ids[:, None] < ids[None, :]
+        ai, bi = np.nonzero(mask)
+        xa, xb = ids[a_idx][ai], ids[b_idx][bi]
         return pd.DataFrame(
             {
-                out_a: a_ids,
-                out_b: b_ids,
-                "cosine_milli": np.floor(vals * 1000).astype(np.int64),
+                out_a: np.minimum(xa, xb),
+                out_b: np.maximum(xa, xb),
+                "cosine_milli": np.floor(cos[ai, bi] * 1000).astype(np.int64),
             }
         )
 
-    group_cols = (["_part"] if partition_col else []) + ["_gi", "_gj"]
-    return rep.groupBy(*group_cols).applyInPandas(
-        tile, f"{out_a} long, {out_b} long, cosine_milli long"
+    return block_pair_tiles(
+        base, "_id", n_blocks, kernel,
+        f"{out_a} long, {out_b} long, cosine_milli long",
+        partition_col="_part" if partition_col else None,
     )
 
 
@@ -186,17 +163,6 @@ def int_cosine_tile_pairs(
         F.col(id_col).alias("_id"),
         F.col(idx_col).alias("_idx"),
         F.col(val_col).alias("_val"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("_blk"),
-    )
-    rep = base.withColumn(
-        "_p", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
-    ).select(
-        F.least("_blk", "_p").alias("_gi"),
-        F.greatest("_blk", "_p").alias("_gj"),
-        "_id",
-        "_idx",
-        "_val",
-        "_blk",
     )
     num, den = int(cos2_num), int(cos2_den)
 
@@ -218,18 +184,12 @@ def int_cosine_tile_pairs(
             mat[rows, cols.astype(np.int64)] = vals
         return mat
 
-    def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        gi, gj = int(key[0]), int(key[1])
+    def kernel(pdf, a_sel, b_sel, diag):
         out_cols = ["src", "dst", "n_shared", "dot", "cos2_permille"]
         ids = pdf["_id"].to_numpy(dtype=np.int64)
         idx_rows = [np.asarray(v, dtype=np.int64) for v in pdf["_idx"]]
         val_rows = [np.asarray(v, dtype=np.int64) for v in pdf["_val"]]
         mat = _densify32(pdf)
-        if gi == gj:
-            a_sel = b_sel = np.arange(len(pdf))
-        else:
-            left = (pdf["_blk"].to_numpy() == gi)
-            a_sel, b_sel = np.nonzero(left)[0], np.nonzero(~left)[0]
         if not len(a_sel) or not len(b_sel):
             return pd.DataFrame(columns=out_cols)
         max_val = max((int(v.max()) for v in val_rows if v.size), default=0)
@@ -261,7 +221,7 @@ def int_cosine_tile_pairs(
         sa = (np.sqrt(n2a.astype(np.float64)) * root).astype(np.float32)
         sb = np.sqrt(n2b.astype(np.float64)).astype(np.float32)
         ai, bi = np.nonzero(D >= sa[:, None] * sb[None, :])
-        if gi == gj:
+        if diag:
             keep = ids[ai] < ids[bi]
             ai, bi = ai[keep], bi[keep]
         rows = []
@@ -284,8 +244,8 @@ def int_cosine_tile_pairs(
                 )
         return pd.DataFrame(rows, columns=out_cols)
 
-    return rep.groupBy("_gi", "_gj").applyInPandas(
-        tile,
+    return block_pair_tiles(
+        base, "_id", n_blocks, kernel,
         "src long, dst long, n_shared long, dot long, cos2_permille long",
     )
 

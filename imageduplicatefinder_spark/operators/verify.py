@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from imageduplicatefinder_spark.config import DedupConfig
 from imageduplicatefinder_spark.functions.fingerprints import hamming_distance_col
+from imageduplicatefinder_spark.operators.hamming_lsh import _popcount64
 
 #: signature-table row count at or below which verify_pairs BROADCASTS
 #: the attach side instead of shuffle-joining the pair table against it
@@ -72,26 +73,12 @@ def _minhash_estimate() -> F.Column:
     return F.coalesce(eq / F.size("minhash_src"), F.lit(0.0))
 
 
-def _popcount64_np(x):
-    """SWAR popcount over a uint64 ndarray (shared shape with
-    operators/hamming_lsh._popcount64; numpy < 2 lacks bitwise_count)."""
-    import numpy as np
-
-    m1 = np.uint64(0x5555555555555555)
-    m2 = np.uint64(0x3333333333333333)
-    m4 = np.uint64(0x0F0F0F0F0F0F0F0F)
-    h01 = np.uint64(0x0101010101010101)
-    x = x - ((x >> np.uint64(1)) & m1)
-    x = (x & m2) + ((x >> np.uint64(2)) & m2)
-    x = (x + (x >> np.uint64(4))) & m4
-    return (x * h01) >> np.uint64(56)
-
-
 def _verify_pairs_vectorized(
     pairs: DataFrame,
     signatures: DataFrame,
     cfg: DedupConfig,
     only_verified: bool,
+    n_sigs: int,
 ) -> DataFrame | None:
     """Vectorized verify kernel for the broadcast-sized regime: the
     signature table (guarded by ``BROADCAST_VERIFY_MAX_SIGS``, the same
@@ -107,15 +94,14 @@ def _verify_pairs_vectorized(
     values (integer inter/size counts feeding the same float64
     divisions).
 
-    Returns None when the kernel does not apply (table over the cap,
-    NULL/duplicate-id rows, no shingles) — the caller falls back to the
-    join path, which is also the only scalable shape at real corpus
-    sizes.
+    ``n_sigs`` is the caller's ``signatures.count()``. Returns None when
+    the kernel does not apply (table over the cap, NULL/duplicate-id
+    rows, no shingles) — the caller falls back to the join path, which
+    is also the only scalable shape at real corpus sizes.
     """
     import numpy as np
     import pandas as pd
 
-    n_sigs = signatures.count()
     if n_sigs > BROADCAST_VERIFY_MAX_SIGS:
         return None
     # Arrow collect (toPandas): the row-collect path pickles every
@@ -185,8 +171,9 @@ def _verify_pairs_vectorized(
 
     def _rebatch(batches, target=65536):
         """Coalesce incoming Arrow batches (the session caps them at
-        4096 rows for wide-row UDFs) to ~64k-pair chunks so the
-        per-batch numpy fixed costs amortize."""
+        65,536 records or 16 MB, and upstream partitions often end in
+        short batches) to ~64k-pair chunks so the per-batch numpy fixed
+        costs amortize."""
         buf: list[pd.DataFrame] = []
         held = 0
         for pdf in batches:
@@ -264,7 +251,7 @@ def _verify_pairs_vectorized(
                 jac = np.where(union > 0, interf / union, 0.0)
                 mins = np.minimum(sa, sb)
                 con = np.where(mins > 0, interf / mins, 0.0)
-            ham = _popcount64_np(
+            ham = _popcount64(
                 (sims_b[ai] ^ sims_b[bi]).view(np.uint64)
             ).astype(np.int32)
             verified = (jac >= t_j) | (con >= t_c)
@@ -325,10 +312,13 @@ def verify_pairs(
     otherwise (web-scale tables, NULL-shingle unions, estimate mode)
     as the shuffle/broadcast join below.
     """
+    # one count serves both dispatches below — metadata-only when
+    # signatures is the pipeline's parquet checkpoint read-back
+    n_sigs = signatures.count()
     has_shingles = "shingles" in signatures.columns
     if has_shingles:
         fast = _verify_pairs_vectorized(pairs, signatures, cfg,
-                                        only_verified)
+                                        only_verified, n_sigs)
         if fast is not None:
             return fast
     has_minhash = "minhash" in signatures.columns
@@ -338,11 +328,10 @@ def verify_pairs(
         cols.append("shingles")
     if not has_shingles or use_fallback:
         cols.append("minhash")  # estimate path / per-row NULL fallback
-    # attach-side dispatch (see BROADCAST_VERIFY_MAX_SIGS): one cheap
-    # count — metadata-only when signatures is the pipeline's parquet
-    # checkpoint read-back — decides broadcast vs shuffle join
+    # attach-side dispatch (see BROADCAST_VERIFY_MAX_SIGS): broadcast vs
+    # shuffle join
     cap = BROADCAST_VERIFY_MAX_SIGS // (4 if "minhash" in cols else 1)
-    bc = signatures.count() <= cap
+    bc = n_sigs <= cap
     df = _attach(_attach(pairs, signatures, "src", cols, broadcast=bc),
                  signatures, "dst", cols, broadcast=bc)
 

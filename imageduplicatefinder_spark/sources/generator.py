@@ -27,7 +27,6 @@ external data.
 
 from __future__ import annotations
 
-import hashlib
 import itertools
 import random
 from dataclasses import dataclass, field
@@ -222,7 +221,3 @@ DOCUMENTS_SCHEMA = T.StructType(
 def corpus_to_dataframe(spark: SparkSession, corpus: GeneratedCorpus) -> DataFrame:
     return spark.createDataFrame(corpus.rows, schema=DOCUMENTS_SCHEMA)
 
-
-def sha256_hex(content: str) -> str:
-    """Driver-side oracle for the per-row sha256 invariant (BASELINE.json input_hint)."""
-    return hashlib.sha256(content.encode("utf-8")).hexdigest()

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from imageduplicatefinder_spark.config import DedupConfig
+from imageduplicatefinder_spark.operators import components
 from imageduplicatefinder_spark.operators.components import connected_components
 from imageduplicatefinder_spark.operators.lsh import (
     band_table,
@@ -161,27 +162,28 @@ def test_cc_long_chain_converges(spark):
     assert _comps(spark, pairs) == [list(range(n + 1))]
 
 
-def test_cc_raises_on_nonconvergence(spark):
+def test_cc_raises_on_nonconvergence(spark, monkeypatch):
     # a 12-node chain cannot converge in 2 rounds of min propagation
-    # (driver_max_edges=0 forces the distributed rounds whose iteration
-    # guard is under test — the driver kernel always reaches fixpoint)
+    # (CC_DRIVER_MAX_EDGES=0 forces the distributed rounds whose
+    # iteration guard is under test — the driver kernel always reaches
+    # fixpoint)
+    monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
     chain = [(i, i + 1) for i in range(12)]
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(_edges(spark, chain), max_iterations=2,
-                             driver_max_edges=0)
+        connected_components(_edges(spark, chain), max_iterations=2)
 
 
-def test_cc_warn_mode_returns_partial(spark):
+def test_cc_warn_mode_returns_partial(spark, monkeypatch):
+    monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
     chain = [(i, i + 1) for i in range(12)]
     with pytest.warns(RuntimeWarning, match="did not converge"):
         rows = connected_components(
             _edges(spark, chain), max_iterations=2, on_nonconverged="warn",
-            driver_max_edges=0,
         ).collect()
     assert len(rows) == 13
 
 
-def test_cc_driver_dispatch_matches_distributed(spark):
+def test_cc_driver_dispatch_matches_distributed(spark, monkeypatch):
     """The bounded driver kernel (default below CC_DRIVER_MAX_EDGES)
     must be row-identical to the distributed rounds for BOTH
     algorithms on chain / cycle / self-loop / random shapes."""
@@ -198,49 +200,25 @@ def test_cc_driver_dispatch_matches_distributed(spark):
         [(5, 5), (7, 8), (9, 9)],          # self-loops incl. loop-only
         [(rng.randrange(50), rng.randrange(50)) for _ in range(80)],
     ]
-    for es in shapes:
-        edges = _edges(spark, es)
-        for fn in (connected_components, connected_components_star):
-            fast = sorted((r.doc_id, r.cluster_id)
-                          for r in fn(edges).collect())
-            slow = sorted((r.doc_id, r.cluster_id)
-                          for r in fn(edges, driver_max_edges=0).collect())
-            assert fast == slow, (fn.__name__, es)
+    fns = (connected_components, connected_components_star)
+
+    def labels():
+        return [sorted((r.doc_id, r.cluster_id)
+                       for r in fn(_edges(spark, es)).collect())
+                for es in shapes for fn in fns]
+
+    fast = labels()
+    monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
+    assert labels() == fast
 
 
-def test_cc_check_every_parity(spark):
-    # batched convergence checks must produce the identical labeling:
-    # a chain (worst case for min-propagation), disjoint groups, and a
-    # cycle, at check_every = 1 (per-round), 3, and 7 (> rounds needed)
-    cases = [
-        [(i, i + 1) for i in range(9)],
-        [(1, 2), (3, 4), (4, 5), (10, 11), (11, 12), (12, 10)],
-        [(7, 3), (3, 9), (100, 7)],
-    ]
-    for pairs in cases:
-        expected = None
-        for k in (1, 3, 7):
-            rows = connected_components(
-                _edges(spark, pairs), check_every=k, driver_max_edges=0
-            ).collect()
-            got = sorted((r.doc_id, r.cluster_id) for r in rows)
-            if expected is None:
-                expected = got
-            assert got == expected, f"check_every={k} diverged on {pairs}"
-
-
-def test_cc_check_every_restores_session_confs(spark):
+def test_cc_rounds_restore_session_confs(spark, monkeypatch):
+    monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     parts = spark.conf.get("spark.sql.shuffle.partitions")
-    connected_components(_edges(spark, [(1, 2), (2, 3)]), check_every=2,
-                         driver_max_edges=0)
+    connected_components(_edges(spark, [(1, 2), (2, 3)]))
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts
-
-
-def test_cc_check_every_validation(spark):
-    with pytest.raises(ValueError, match="check_every"):
-        connected_components(_edges(spark, [(1, 2)]), check_every=0)
 
 
 def test_band_table_fallback_matches_udf_family(spark):
@@ -297,10 +275,11 @@ def test_verify_pairs_mixed_null_shingles_falls_back_to_estimate(spark):
     assert strict.jaccard is None and strict.verified is None
 
 
-def test_star_cc_matches_label_propagation(spark):
+def test_star_cc_matches_label_propagation(spark, monkeypatch):
     """Alternating large/small-star must produce identical memberships
     and cluster ids to min-label propagation on chain / cycle /
     disjoint / random shapes."""
+    monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
     import random
 
     from imageduplicatefinder_spark.operators.components import (
@@ -323,19 +302,18 @@ def test_star_cc_matches_label_propagation(spark):
         )
         want = {(r.doc_id, r.cluster_id)
                 for r in connected_components(
-                    edges, max_iterations=60, driver_max_edges=0
+                    edges, max_iterations=60
                 ).collect()}
         got = {(r.doc_id, r.cluster_id)
-               for r in connected_components_star(
-                   edges, driver_max_edges=0
-               ).collect()}
+               for r in connected_components_star(edges).collect()}
         assert got == want, name
 
 
-def test_star_cc_deep_chain_logarithmic_rounds(spark):
+def test_star_cc_deep_chain_logarithmic_rounds(spark, monkeypatch):
     """A 200-node chain has diameter 199 — label propagation at
     max_iterations=20 must fail, star contraction must converge well
     within 20 alternation rounds (O(log n))."""
+    monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
     import pytest
 
     from imageduplicatefinder_spark.operators.components import (
@@ -347,10 +325,8 @@ def test_star_cc_deep_chain_logarithmic_rounds(spark):
         [(i, i + 1) for i in range(199)], "src long, dst long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iterations=20, driver_max_edges=0)
-    got = connected_components_star(
-        edges, max_iterations=20, driver_max_edges=0
-    ).collect()
+        connected_components(edges, max_iterations=20)
+    got = connected_components_star(edges, max_iterations=20).collect()
     assert len(got) == 200
     assert {r.cluster_id for r in got} == {0}
 
@@ -377,7 +353,8 @@ def test_star_cc_empty_and_self_loops(spark):
     assert got == cc
 
 
-def test_star_cc_warn_mode_returns_partial(spark):
+def test_star_cc_warn_mode_returns_partial(spark, monkeypatch):
+    monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
     import pytest
 
     from imageduplicatefinder_spark.operators.components import (
@@ -390,7 +367,6 @@ def test_star_cc_warn_mode_returns_partial(spark):
     with pytest.warns(RuntimeWarning, match="did not converge"):
         rows = connected_components_star(
             chain, max_iterations=1, on_nonconverged="warn",
-            driver_max_edges=0,
         ).collect()
     assert len(rows) == 41  # partial labels still cover every node
 
