@@ -84,15 +84,6 @@ class DedupConfig:
     # O(n^2) pair blowup on one key (north_rule: skew handled explicitly).
     max_band_size: int = 256
 
-    # --- clustering --------------------------------------------------
-    # "labelprop": min-label propagation, O(diameter) rounds, one
-    # shuffle per round — right for shallow dup families (the default).
-    # "star": alternating large/small-star contraction, O(log^2 n)
-    # proven rounds regardless of diameter — pick when edges may chain
-    # deeply (transitive containment). Both produce identical labels
-    # (cross-algorithm oracle equivalence, near_dup_clusters_star).
-    cc_algorithm: str = "labelprop"
-
     # --- misc -------------------------------------------------------
     min_tokens: int = 1           # docs with fewer tokens skip MinHash/LSH
     # drop low-quality files (minified bundles, binary-ish blobs,
@@ -111,25 +102,12 @@ class DedupConfig:
             raise ValueError(f"unknown tokenizer {self.tokenizer!r}")
         if self.sketch not in ("simhash", "gradsign"):
             raise ValueError(f"unknown sketch family {self.sketch!r}")
-        if self.cc_algorithm not in ("labelprop", "star"):
-            raise ValueError(f"unknown cc_algorithm {self.cc_algorithm!r}")
         if self.candidates not in ("lsh", "prefix", "exact"):
             raise ValueError(f"unknown candidate scheme {self.candidates!r}")
 
     # identical config => identical hash => checkpoint reuse is safe
     def config_hash(self) -> str:
         knobs = asdict(self)
-        # cc_algorithm is EXCLUDED: both algorithms produce identical
-        # labels (cross-algorithm oracle equivalence, property-tested),
-        # so checkpoints — including the components stage — stay valid
-        # when a user flips to "star" to recover a run that label
-        # propagation could not converge (the motivating scenario;
-        # invalidating hours of signature/band/edge work over an
-        # output-identical knob would be pure waste). pop (not pin):
-        # the hashed blob is then byte-identical to the pre-knob config
-        # format, so checkpoints from before the knob existed stay
-        # valid too.
-        knobs.pop("cc_algorithm", None)
         # candidates DOES change which pairs are found (lsh is
         # probabilistic, prefix/exact are not), so non-default schemes
         # get distinct hashes; the default is popped so the hashed blob

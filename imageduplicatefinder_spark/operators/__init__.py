@@ -4,7 +4,6 @@ from imageduplicatefinder_spark.operators.lsh import band_table, candidate_pairs
 from imageduplicatefinder_spark.operators.verify import verify_pairs
 from imageduplicatefinder_spark.operators.components import (
     connected_components,
-    connected_components_star,
     refresh_clusters,
 )
 from imageduplicatefinder_spark.operators.hamming_lsh import hamming_pairs
@@ -23,7 +22,6 @@ __all__ = [
     "candidate_pairs",
     "verify_pairs",
     "connected_components",
-    "connected_components_star",
     "refresh_clusters",
     "hamming_pairs",
     "clusters_table",

@@ -76,6 +76,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from imageduplicatefinder_spark.functions.fingerprints import hamming_distance_col
+from imageduplicatefinder_spark.operators.components import (
+    _np_edge_components,
+    _np_min_label_components,
+)
 from imageduplicatefinder_spark.operators.tiles import block_pair_tiles
 
 _LOG = logging.getLogger(__name__)
@@ -379,25 +383,6 @@ def _forest_edges_tiles(src: DataFrame, radius: int, n_sk: int) -> DataFrame:
     return _tile_pairs(src, n_sk, kernel, "sk_a long, sk_b long")
 
 
-def _np_min_label_components(nodes, ai, bi, np):
-    """Vectorized min-label propagation with pointer jumping over edge
-    index arrays; returns the component-min index per node. Shared by
-    the per-tile forest kernel and the global forest contraction."""
-    lab = np.arange(len(nodes), dtype=np.int64)
-    while True:
-        before = lab.copy()
-        np.minimum.at(lab, ai, lab[bi])
-        np.minimum.at(lab, bi, lab[ai])
-        while True:
-            jumped = lab[lab]
-            if np.array_equal(jumped, lab):
-                break
-            lab = jumped
-        if np.array_equal(lab, before):
-            break
-    return lab
-
-
 def _contract_forest(forest: DataFrame) -> DataFrame:
     """Collapse the union of per-tile spanning forests to ONE star per
     connected component (root = component-min sketch value): a single
@@ -424,9 +409,7 @@ def _contract_forest(forest: DataFrame) -> DataFrame:
                             for c in chunks])
         b = np.concatenate([c["sk_b"].to_numpy(dtype=np.int64)
                             for c in chunks])
-        nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
-        ai, bi = inv[: len(a)], inv[len(a):]
-        lab = _np_min_label_components(nodes, ai, bi, np)
+        nodes, lab = _np_edge_components(a, b, np)
         member = np.nonzero(lab != np.arange(len(nodes)))[0]
         # np.unique sorts ascending, so the min label index IS the min
         # signed sketch value: sk_a < sk_b holds by construction

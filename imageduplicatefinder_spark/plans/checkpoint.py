@@ -272,9 +272,13 @@ class CheckpointManager:
         )
         d = os.path.join(self.root, "_metrics")
         os.makedirs(d, exist_ok=True)
-        pq.write_table(
-            table, os.path.join(d, f"part-{uuid.uuid4().hex}.parquet")
-        )
+        # write under a dot-prefixed name (hidden from Spark's reader)
+        # and rename into place, so a crash mid-write never leaves a
+        # torn part file that breaks every later metrics_table() read
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(d, f".{name}")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(d, name))
         self._pending_metric_rows = []
 
     def metrics_table(self) -> DataFrame:

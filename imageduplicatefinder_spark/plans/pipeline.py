@@ -13,7 +13,7 @@
       -> LSH bands (JVM band hashing, salted hot-band cap; ckpt)
       -> candidates (band equi-join; ckpt)
       -> verified edges (Jaccard/containment/Hamming; ckpt)
-      -> components (iterative min-label propagation)     [ref: idf cluster]
+      -> components (driver pass, else star contraction) [ref: idf cluster]
       -> clusters (>=2 members; ckpt)
       -> plan (min_by keeper, mega-cluster safe; ckpt)    [ref: idf plan]
 """
@@ -139,14 +139,43 @@ class DedupPipeline:
                 )
 
         idc_pool = ThreadPoolExecutor(max_workers=1)
+        # with pinned-thread mode off the wrapper factory hands back the
+        # session itself, and the plain target is the right one
+        wrap = inheritable_thread_target(self.spark)
         idc_future = idc_pool.submit(
-            inheritable_thread_target(self.spark)(_check_id_collisions)
+            _check_id_collisions if wrap is self.spark
+            else wrap(_check_id_collisions)
         )
+        try:
+            result = self._run_stages(documents, langs, docs_tbl)
+        except BaseException as exc:
+            # a downstream failure must not hide a tripped id guard:
+            # the collision is often its root cause
+            collision = idc_future.exception()
+            if collision is not None:
+                exc.add_note(f"concurrent doc_id check also failed: "
+                             f"{collision!r}")
+            raise
+        finally:
+            idc_pool.shutdown()
+        # join the concurrent id-collision check: raises here (before
+        # any result is handed to the caller) if the guard tripped
+        idc_future.result()
+        return result
 
+    def _run_stages(
+        self,
+        documents: DataFrame,
+        langs: list[str] | None,
+        docs_tbl: DataFrame,
+    ) -> PipelineResult:
+        """Every stage after ``documents_hashed``, run while the
+        id-collision check is in flight."""
+        cfg = self.cfg
         # exact-dup classes (distance-0, ref: index/BKTreeIndex.java:27)
         # collapse to min-doc_id reps; members rejoin the clustering
         # AFTER connected components via exact_groups (build_components)
-        # instead of riding the propagation rounds as star edges
+        # instead of riding the CC rounds as star edges
         reps_tbl = rep_ids(docs_tbl)
 
         # fingerprint ONLY distinct-content representatives
@@ -213,21 +242,14 @@ class DedupPipeline:
         def build_components() -> DataFrame:
             # iterate ONLY over the verified rep-rep graph (guide §8:
             # decide with small rows): exact-dup members don't need to
-            # ride every propagation round — each sha class's rep IS
+            # ride every CC round — each sha class's rep IS
             # the class minimum (operators/exact.py rep_ids), so the
             # component minimum over reps equals the minimum over all
             # member docs, and one post-CC join relabels members.
             # Measured at sf1.0 x8: the old rep+member-star edge set
             # shuffled 352k edges per round for a 2.4k-edge problem.
             rep_edges = verified.select("src", "dst")
-            if cfg.cc_algorithm == "star":
-                from imageduplicatefinder_spark.operators.components import (
-                    connected_components_star,
-                )
-
-                comps = connected_components_star(rep_edges)
-            else:
-                comps = connected_components(rep_edges)
+            comps = connected_components(rep_edges)
             rep_labels = comps.select(
                 F.col("doc_id").alias("rep_id"),
                 F.col("cluster_id").alias("_lab"),
@@ -256,9 +278,5 @@ class DedupPipeline:
         )
         plan = self.ckpt.materialize("plan", lambda: keeper_plan(clusters))
         self.ckpt.flush_metrics()
-        # join the concurrent id-collision check: raises here (before
-        # any result is handed to the caller) if the guard tripped
-        idc_future.result()
-        idc_pool.shutdown()
         return PipelineResult(docs_tbl, signatures, verified, comps_full,
                               clusters, plan, self.ckpt)

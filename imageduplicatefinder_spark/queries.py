@@ -4323,19 +4323,6 @@ FROM labels l JOIN csz USING (cluster_id)
 """
 
 
-def _exact_edge_clusters(spark: SparkSession, sf_dir: str, cc_fn) -> DataFrame:
-    """Shared body of the two cluster-oracle queries: exact n-gram
-    Jaccard edges -> the given CC implementation -> sized members."""
-    edges = q_ngram_jaccard_pairs(spark, sf_dir).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    comps = cc_fn(edges)
-    sizes = comps.groupBy("cluster_id").agg(F.count("*").alias("n_members"))
-    return comps.join(sizes, on="cluster_id").select(
-        "cluster_id", "doc_id", "n_members"
-    )
-
-
 def q_near_dup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the EXACT n-gram Jaccard edge set
     (>= 0.8): the SQL-oracle-checkable form of the clustering operator
@@ -4349,22 +4336,20 @@ def q_near_dup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    return _exact_edge_clusters(spark, sf_dir, connected_components)
+    edges = q_ngram_jaccard_pairs(spark, sf_dir).select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    )
+    comps = connected_components(edges)
+    sizes = comps.groupBy("cluster_id").agg(F.count("*").alias("n_members"))
+    return comps.join(sizes, on="cluster_id").select(
+        "cluster_id", "doc_id", "n_members"
+    )
 
 
 def q_near_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clustering semantics computed by the alternating
-    large-star/small-star algorithm (O(log^2 n) proven rounds
-    regardless of diameter — the scale path for graphs with deep
-    chains, e.g. transitive containment; operators/components.py
-    connected_components_star) over the same exact edge set, pinned
-    against the same DuckDB recursive-CTE fixpoint oracle — a
-    cross-algorithm equivalence check, not just a cross-engine one."""
-    from imageduplicatefinder_spark.operators.components import (
-        connected_components_star,
-    )
-
-    return _exact_edge_clusters(spark, sf_dir, connected_components_star)
+    """Same operator as ``near_dup_clusters_exact`` (one CC algorithm:
+    star contraction behind the driver pass), kept as a catalog name."""
+    return q_near_dup_clusters_exact(spark, sf_dir)
 
 
 SQL_NEAR_DUP_CLUSTERS_EXACT = f"""

@@ -163,51 +163,55 @@ def test_cc_long_chain_converges(spark):
 
 
 def test_cc_raises_on_nonconvergence(spark, monkeypatch):
-    # a 12-node chain cannot converge in 2 rounds of min propagation
+    # a 41-node chain cannot contract to a star in 1 alternation
     # (CC_DRIVER_MAX_EDGES=0 forces the distributed rounds whose
     # iteration guard is under test — the driver kernel always reaches
     # fixpoint)
     monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
-    chain = [(i, i + 1) for i in range(12)]
+    chain = [(i, i + 1) for i in range(40)]
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(_edges(spark, chain), max_iterations=2)
+        connected_components(_edges(spark, chain), max_iterations=1)
 
 
 def test_cc_warn_mode_returns_partial(spark, monkeypatch):
     monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
-    chain = [(i, i + 1) for i in range(12)]
+    chain = [(i, i + 1) for i in range(40)]
     with pytest.warns(RuntimeWarning, match="did not converge"):
         rows = connected_components(
-            _edges(spark, chain), max_iterations=2, on_nonconverged="warn",
+            _edges(spark, chain), max_iterations=1, on_nonconverged="warn",
         ).collect()
-    assert len(rows) == 13
+    assert len(rows) == 41
 
 
 def test_cc_driver_dispatch_matches_distributed(spark, monkeypatch):
     """The bounded driver kernel (default below CC_DRIVER_MAX_EDGES)
-    must be row-identical to the distributed rounds for BOTH
-    algorithms on chain / cycle / self-loop / random shapes."""
+    must be row-identical to the forced star-contraction rounds on
+    chain / cycle / disjoint / self-loop / random shapes."""
     import random
 
-    from imageduplicatefinder_spark.operators.components import (
-        connected_components_star,
-    )
-
     rng = random.Random(29)
+    rng13 = random.Random(13)
     shapes = [
         [(i, i + 1) for i in range(15)],
+        [(i, i + 1) for i in range(12)],
         [(i, (i + 1) % 8) for i in range(8)],
+        [(i, (i + 1) % 9) for i in range(9)],
+        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)],
         [(5, 5), (7, 8), (9, 9)],          # self-loops incl. loop-only
         [(rng.randrange(50), rng.randrange(50)) for _ in range(80)],
+        [(rng13.randrange(40), rng13.randrange(40)) for _ in range(60)],
     ]
-    fns = (connected_components, connected_components_star)
 
     def labels():
         return [sorted((r.doc_id, r.cluster_id)
-                       for r in fn(_edges(spark, es)).collect())
-                for es in shapes for fn in fns]
+                       for r in connected_components(
+                           _edges(spark, es)).collect())
+                for es in shapes]
 
     fast = labels()
+    # spot-check the driver pass against the known answer
+    assert fast[4] == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10),
+                       (20, 20), (21, 20), (22, 20)]
     monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
     assert labels() == fast
 
@@ -275,18 +279,28 @@ def test_verify_pairs_mixed_null_shingles_falls_back_to_estimate(spark):
     assert strict.jaccard is None and strict.verified is None
 
 
+def _label_propagation(es):
+    """Reference components: min-label propagation to fixpoint, in
+    plain Python (self-loop-only nodes stay singletons)."""
+    label = {n: n for e in es for n in e}
+    changed = True
+    while changed:
+        changed = False
+        for a, b in es:
+            m = min(label[a], label[b])
+            for n in (a, b):
+                if label[n] != m:
+                    label[n], changed = m, True
+    return set(label.items())
+
+
 def test_star_cc_matches_label_propagation(spark, monkeypatch):
     """Alternating large/small-star must produce identical memberships
     and cluster ids to min-label propagation on chain / cycle /
     disjoint / random shapes."""
-    monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
     import random
 
-    from imageduplicatefinder_spark.operators.components import (
-        connected_components,
-        connected_components_star,
-    )
-
+    monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
     shapes = {
         "chain": [(i, i + 1) for i in range(12)],
         "cycle": [(i, (i + 1) % 9) for i in range(9)],
@@ -297,78 +311,47 @@ def test_star_cc_matches_label_propagation(spark, monkeypatch):
         (rng.randrange(40), rng.randrange(40)) for _ in range(60)
     ]
     for name, es in shapes.items():
-        edges = spark.createDataFrame(
-            [(a, b) for a, b in es if a != b], "src long, dst long"
-        )
-        want = {(r.doc_id, r.cluster_id)
-                for r in connected_components(
-                    edges, max_iterations=60
-                ).collect()}
+        es = [(a, b) for a, b in es if a != b]
         got = {(r.doc_id, r.cluster_id)
-               for r in connected_components_star(edges).collect()}
-        assert got == want, name
+               for r in connected_components(_edges(spark, es)).collect()}
+        assert got == _label_propagation(es), name
 
 
 def test_star_cc_deep_chain_logarithmic_rounds(spark, monkeypatch):
-    """A 200-node chain has diameter 199 — label propagation at
-    max_iterations=20 must fail, star contraction must converge well
-    within 20 alternation rounds (O(log n))."""
+    """A 200-node chain has diameter 199 — star contraction must
+    converge well within 20 alternation rounds (O(log n))."""
     monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
-    import pytest
-
-    from imageduplicatefinder_spark.operators.components import (
-        connected_components,
-        connected_components_star,
-    )
-
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(199)], "src long, dst long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iterations=20)
-    got = connected_components_star(edges, max_iterations=20).collect()
+    got = connected_components(edges, max_iterations=20).collect()
     assert len(got) == 200
     assert {r.cluster_id for r in got} == {0}
 
 
 def test_star_cc_empty_and_self_loops(spark):
-    from imageduplicatefinder_spark.operators.components import (
-        connected_components_star,
-    )
-
     empty = spark.createDataFrame([], "src long, dst long")
-    assert connected_components_star(empty).count() == 0
+    assert connected_components(empty).count() == 0
     loops = spark.createDataFrame([(5, 5), (7, 8)], "src long, dst long")
     got = {(r.doc_id, r.cluster_id)
-           for r in connected_components_star(loops).collect()}
-    # self-loop-only node stays as a singleton — contract parity with
-    # connected_components (verified identical below)
+           for r in connected_components(loops).collect()}
+    # self-loop-only node stays as a singleton
     assert got == {(5, 5), (7, 7), (8, 7)}
-    from imageduplicatefinder_spark.operators.components import (
-        connected_components,
-    )
-
-    cc = {(r.doc_id, r.cluster_id)
-          for r in connected_components(loops).collect()}
-    assert got == cc
 
 
 def test_star_cc_warn_mode_returns_partial(spark, monkeypatch):
+    """Mid-contraction partial labels are one per node and never point
+    above the node: over-split, never wrongly merged."""
     monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
-    import pytest
-
-    from imageduplicatefinder_spark.operators.components import (
-        connected_components_star,
-    )
-
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "src long, dst long"
     )
     with pytest.warns(RuntimeWarning, match="did not converge"):
-        rows = connected_components_star(
+        rows = connected_components(
             chain, max_iterations=1, on_nonconverged="warn",
         ).collect()
-    assert len(rows) == 41  # partial labels still cover every node
+    assert sorted(r.doc_id for r in rows) == list(range(41))
+    assert all(0 <= r.cluster_id <= r.doc_id for r in rows)
 
 
 def test_refresh_clusters_merges_and_extends(spark):
@@ -401,11 +384,6 @@ def test_refresh_clusters_merges_and_extends(spark):
     assert (9, 9) in got                        # singleton preserved
     assert {(1, 1), (2, 1), (5, 1), (6, 1)} <= got   # merged to min 1
     assert {(10, 10), (11, 10)} <= got          # new docs admitted
-
-    lp = {(r.doc_id, r.cluster_id)
-          for r in refresh_clusters(old, new_edges,
-                                    algorithm="labelprop").collect()}
-    assert lp == got
 
 
 def test_use_simhash_verify_flag_activates_hamming_clause(spark):

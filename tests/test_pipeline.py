@@ -133,12 +133,10 @@ def test_resume_different_corpus_recomputes(spark, corpus):
     assert res2.documents_hashed.count() == df2.count()
 
 
-def test_doc_id_collision_still_raises(spark, monkeypatch):
-    """The collision guard runs concurrently with the downstream stages
-    (guide §2.6 job overlap) but ``run`` must still raise before
-    returning. A real xxhash64 collision can't be synthesized from
-    data, so inject a degenerate hash (constant doc_id) and assert the
-    deferred check surfaces as RuntimeError."""
+@pytest.fixture
+def colliding_docs(spark, monkeypatch):
+    """Two distinct docs under a degenerate hash (constant doc_id): a
+    real xxhash64 collision can't be synthesized from data."""
     import imageduplicatefinder_spark.plans.pipeline as pl
     from imageduplicatefinder_spark.operators.signatures import (
         hash_documents,
@@ -150,14 +148,97 @@ def test_doc_id_collision_still_raises(spark, monkeypatch):
         )
 
     monkeypatch.setattr(pl, "hash_documents", colliding_hash)
-    docs = spark.createDataFrame(
+    return spark.createDataFrame(
         [("r", "a.py", "c1", "py", "alpha beta gamma delta " * 5),
          ("r", "b.py", "c1", "py", "totally different words here " * 5)],
         "repo string, path string, commit string, lang string, content string",
     )
+
+
+def test_doc_id_collision_still_raises(spark, colliding_docs):
+    """The collision guard runs concurrently with the downstream stages
+    (guide §2.6 job overlap) but ``run`` must still raise before
+    returning: the deferred check surfaces as RuntimeError."""
     with pytest.raises(RuntimeError, match="doc_id collision"):
         DedupPipeline(spark, DedupConfig(),
-                      checkpoint_dir=tempfile.mkdtemp()).run(docs)
+                      checkpoint_dir=tempfile.mkdtemp()).run(colliding_docs)
+
+
+def test_doc_id_collision_check_without_pinned_threads(
+    spark, colliding_docs, monkeypatch
+):
+    """With PYSPARK_PIN_THREAD=false, ``inheritable_thread_target(session)``
+    returns the session itself; the check must still run and raise."""
+    import imageduplicatefinder_spark.plans.pipeline as pl
+
+    monkeypatch.setattr(pl, "inheritable_thread_target", lambda f: f)
+    with pytest.raises(RuntimeError, match="doc_id collision"):
+        DedupPipeline(spark, DedupConfig(),
+                      checkpoint_dir=tempfile.mkdtemp()).run(colliding_docs)
+
+
+def test_doc_id_collision_surfaces_with_downstream_failure(
+    spark, colliding_docs, monkeypatch
+):
+    """A stage failing after the concurrent check was submitted must
+    carry the collision along, and the check's pool must shut down."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import imageduplicatefinder_spark.plans.pipeline as pl
+
+    pools = []
+
+    class RecordingPool(ThreadPoolExecutor):
+        def __init__(self, *a, **k):
+            super().__init__(*a, **k)
+            pools.append(self)
+
+    def broken_plan(clusters):
+        raise ValueError("plan stage failed")
+
+    monkeypatch.setattr(pl, "ThreadPoolExecutor", RecordingPool)
+    monkeypatch.setattr(pl, "keeper_plan", broken_plan)
+    with pytest.raises(ValueError, match="plan stage failed") as ei:
+        DedupPipeline(spark, DedupConfig(),
+                      checkpoint_dir=tempfile.mkdtemp()).run(colliding_docs)
+    assert any("doc_id collision" in n
+               for n in getattr(ei.value, "__notes__", []))
+    assert len(pools) == 1 and pools[0]._shutdown
+    assert not any(t.is_alive() for t in pools[0]._threads)
+
+
+def test_flush_metrics_torn_write_keeps_table_readable(spark, tmp_path,
+                                                       monkeypatch):
+    """A crash inside the parquet write must not leave a torn part file
+    that breaks every later ``metrics_table()`` read."""
+    import pyarrow.parquet as pq
+
+    from imageduplicatefinder_spark.plans.checkpoint import CheckpointManager
+
+    ckpt = CheckpointManager(spark, str(tmp_path), "h")
+
+    def add_row(stage):
+        ckpt._append_metrics_table(
+            {"stage": stage, "config_hash": "h", "wall_s": 0.1,
+             "partitions": {0: 3}},
+            reused=False,
+        )
+
+    add_row("first")
+    ckpt.flush_metrics()
+
+    def torn_write(table, where, **kwargs):
+        with open(where, "wb") as f:
+            f.write(b"PAR1 torn")
+        raise OSError("disk full")
+
+    add_row("second")
+    with monkeypatch.context() as m:
+        m.setattr(pq, "write_table", torn_write)
+        with pytest.raises(OSError, match="disk full"):
+            ckpt.flush_metrics()
+    got = sorted(r.stage for r in ckpt.metrics_table().collect())
+    assert got == ["first", "second"]
 
 
 def test_null_key_column_does_not_false_alarm_collision_guard(spark):
@@ -206,32 +287,6 @@ def test_metrics_table_records_reused_rows(spark, corpus):
     m = p2.ckpt.metrics_table()
     assert m.filter("reused").count() > 0
     assert m.filter("NOT reused").count() > 0
-
-
-def test_pipeline_star_cc_produces_identical_plan(spark, tmp_path):
-    """cc_algorithm='star' must yield the same clusters and keeper plan
-    as the default label propagation (H4-style dispatch for the
-    clustering stage)."""
-    from imageduplicatefinder_spark.config import DedupConfig
-    from imageduplicatefinder_spark.plans.pipeline import DedupPipeline
-    from imageduplicatefinder_spark.sources.generator import (
-        corpus_to_dataframe,
-        generate_corpus,
-    )
-
-    docs = corpus_to_dataframe(
-        spark, generate_corpus(n_families=4, n_background=30, seed=17)
-    )
-    res_lp = DedupPipeline(
-        spark, DedupConfig(), checkpoint_dir=str(tmp_path / "lp")
-    ).run(docs)
-    res_star = DedupPipeline(
-        spark, DedupConfig(cc_algorithm="star"),
-        checkpoint_dir=str(tmp_path / "star"),
-    ).run(docs)
-    lp = {(r.cluster_id, r.path, r.action) for r in res_lp.plan.collect()}
-    star = {(r.cluster_id, r.path, r.action) for r in res_star.plan.collect()}
-    assert lp == star and len(lp) > 0
 
 
 def test_radius_from_threshold_matches_reference_formula():

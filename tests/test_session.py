@@ -21,13 +21,12 @@ def test_local_cores_none_for_cluster_masters():
     assert _local_cores("localhost") is None   # not a local[] shape
 
 
-def test_cc_algorithm_does_not_invalidate_checkpoints():
-    """Both CC algorithms produce identical labels, so flipping the knob
-    must reuse existing checkpoints (same config hash) — the recovery
-    path for a run label propagation could not converge."""
+def test_default_config_hash_is_pinned():
+    """Existing checkpoints are keyed by the config hash: removing a
+    knob that was already popped from the hashed blob must not move the
+    default hash, and an output-changing knob must."""
     from imageduplicatefinder_spark.config import DedupConfig
 
-    assert (DedupConfig().config_hash()
-            == DedupConfig(cc_algorithm="star").config_hash())
+    assert DedupConfig().config_hash() == "cc835b4fbc47abba"
     assert (DedupConfig().config_hash()
             != DedupConfig(shingle_k=5).config_hash())

@@ -165,11 +165,11 @@ def main() -> None:
     run("lsh_uncapped", lambda: lsh(False))
     if do_verify and len(verified_edges) == 2:
         from imageduplicatefinder_spark.operators.components import (
-            connected_components_star,
+            connected_components,
         )
 
         lab = {
-            k: connected_components_star(v).withColumnsRenamed(
+            k: connected_components(v).withColumnsRenamed(
                 {"cluster_id": f"c_{k}"}
             )
             for k, v in verified_edges.items()
