@@ -40,6 +40,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from imageduplicatefinder_spark.session import codegen_compiles
+
 
 def input_signature(df: DataFrame) -> str:
     """Identity of a pipeline input: the sorted source-file set plus the
@@ -103,6 +105,7 @@ class StageMetric:
     n_partitions: int
     wall_s: float
     reused: bool
+    codegen_compiles: int
 
 
 @dataclass
@@ -160,9 +163,18 @@ class CheckpointManager:
     def materialize(self, stage: str, df_fn, num_partitions: int | None = None) -> DataFrame:
         """Run ``df_fn()`` and checkpoint, or read back an existing
         checkpoint for this (config, input). Records a metrics row
-        either way."""
+        either way.
+
+        ``codegen_compiles`` (on the StageMetric, and in ``_meta.json``
+        for a computed disk stage) is the number of classes the JVM
+        compiled while the stage ran; 0 means its generated code was
+        already cached. The counter is session-wide, so work running
+        concurrently — the pipeline's doc_id check overlaps the stages
+        after ``documents_hashed`` — lands in whichever stage was
+        running at the time."""
         d = self._dir(stage)
         t0 = time.monotonic()
+        c0 = codegen_compiles(self.spark)
         if self.durability == "memory":
             df = df_fn()
             if num_partitions:
@@ -176,7 +188,7 @@ class CheckpointManager:
             wall = time.monotonic() - t0
             self.metrics.append(
                 StageMetric(stage, self.config_hash, rows, n_parts, wall,
-                            False)
+                            False, codegen_compiles(self.spark) - c0)
             )
             self._pending_metric_rows.append(
                 (stage, self.config_hash, -1, rows, wall, False)
@@ -187,7 +199,8 @@ class CheckpointManager:
             meta = json.load(open(os.path.join(d, "_meta.json")))
             self.metrics.append(
                 StageMetric(stage, self.config_hash, meta["rows"],
-                            meta["n_partitions"], time.monotonic() - t0, True)
+                            meta["n_partitions"], time.monotonic() - t0, True,
+                            codegen_compiles(self.spark) - c0)
             )
             # durable proof of WHAT a resumed run reused: the same
             # per-partition rows, flagged reused=true in _metrics
@@ -207,6 +220,7 @@ class CheckpointManager:
         part_rows = _footer_partition_rows(d)
         rows = sum(part_rows.values())
         wall = time.monotonic() - t0
+        compiles = codegen_compiles(self.spark) - c0
         meta = {
             "stage": stage,
             "config_hash": self.config_hash,
@@ -214,12 +228,14 @@ class CheckpointManager:
             "rows": rows,
             "n_partitions": len(part_rows),
             "wall_s": wall,
+            "codegen_compiles": compiles,
             "partitions": {str(pid): cnt for pid, cnt in part_rows.items()},
         }
         with open(os.path.join(d, "_meta.json"), "w") as f:
             json.dump(meta, f, indent=1)
         self.metrics.append(
-            StageMetric(stage, self.config_hash, rows, len(part_rows), wall, False)
+            StageMetric(stage, self.config_hash, rows, len(part_rows), wall,
+                        False, compiles)
         )
         self._append_metrics_table(meta, reused=False)
         return out

@@ -115,7 +115,11 @@ class DedupPipeline:
         # sha256 pre-pass absorbs, not a hash collision.
         # distinct keys counted over a STRUCT (never null even when a
         # key column is null — count_distinct over bare columns skips
-        # null-containing rows and would false-alarm)
+        # null-containing rows and would false-alarm). Per doc_id, so
+        # the plan has ONE distinct aggregate: two count_distincts in one
+        # agg get an Expand whose group order follows expression-id
+        # hashes, so a repeated run could generate (and compile) a
+        # differently ordered copy of the same code.
         #
         # The agg is submitted CONCURRENTLY with the downstream stages
         # (guide §2.6, overlap independent jobs): no stage reads its
@@ -125,15 +129,16 @@ class DedupPipeline:
         # callers never see results built on a collided id space, and a
         # resumed run re-checks the same way it always did.
         def _check_id_collisions() -> None:
-            idc = docs_tbl.agg(
-                F.count_distinct(
-                    F.struct("repo", "path", "commit")
-                ).alias("n_keys"),
-                F.count_distinct("doc_id").alias("n_ids"),
-            ).collect()[0]
-            if idc["n_ids"] < idc["n_keys"]:
+            extra = (
+                docs_tbl.groupBy("doc_id")
+                .agg(F.count_distinct(
+                    F.struct("repo", "path", "commit")).alias("n_keys"))
+                .agg(F.sum(F.col("n_keys") - 1))
+                .collect()[0][0]
+            )
+            if extra:  # None on an empty table
                 raise RuntimeError(
-                    f"doc_id collision: {idc['n_keys'] - idc['n_ids']} "
+                    f"doc_id collision: {extra} "
                     "duplicate 64-bit ids for distinct (repo, path, "
                     "commit) keys — rerun with a salted/widened id scheme"
                 )

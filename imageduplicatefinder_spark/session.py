@@ -31,14 +31,45 @@ def _local_cores(master: str) -> int | None:
     return int(spec)
 
 
+def _default_cpus(env_cpus: str | None, affinity: int) -> str:
+    """Local width when no master is given: ``SPARK_GRAFT_CPUS`` if
+    set, else the CPUs this process may run on (its affinity mask, not
+    the machine's core count, so a pinned container is not oversold)."""
+    return env_cpus or str(affinity)
+
+
+def _default_driver_mem(env_mem: str | None, mem_total_kb: int) -> str:
+    """Driver heap when none is given: ``SPARK_DRIVER_MEM`` if set,
+    else half of MemTotal, at least 2 GB — a heap cap above physical
+    RAM lets the JVM grow until the host starts swapping or killing."""
+    if env_mem:
+        return env_mem
+    return f"{max(2048, mem_total_kb // 2048)}m"
+
+
+def _mem_total_kb() -> int:
+    """MemTotal from /proc/meminfo; 0 where it is unreadable (the
+    2 GB floor of ``_default_driver_mem`` then applies)."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return 0
+
+
 def get_spark(
     app_name: str = "imageduplicatefinder_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    if master is None:
+        cpus = _default_cpus(os.environ.get("SPARK_GRAFT_CPUS"),
+                             len(os.sched_getaffinity(0)))
+        master = f"local[{cpus}]"
     if shuffle_partitions is None:
         # match parallelism in local mode instead of the 200 default
         shuffle_partitions = _local_cores(master) or 200
@@ -100,12 +131,45 @@ def get_spark(
         # pins that property explicitly).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.execution.arrow.maxBytesPerBatch", "16m")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                _default_driver_mem(os.environ.get("SPARK_DRIVER_MEM"),
+                                    _mem_total_kb()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # generated classes are cached JVM-wide, keyed by their source,
+        # in a Guava cache of 100 entries by default. One long-lived
+        # session runs the pipeline legs, the stream drain and the
+        # 84-query catalog again and again: ~1,100 distinct compiles
+        # (993 for one catalog round, ~100 more for the pipeline legs),
+        # so at 100 every op evicted and re-compiled its classes
+        # (Janino, then a fresh JIT). Measured on a 4-vCPU host
+        # (BENCH.md, codegen cache): a warm catalog op compiles 196-210
+        # classes at 100 and 0 here, a second 84-query round at sf0.01
+        # 1,358 vs 6. 2048 is ~2x the plan set because Guava splits
+        # the cap across its segments. A static SQL conf: it only takes
+        # effect on the builder, before getOrCreate.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
+        # the cache key is the generated source, and by default that
+        # source names its class after the whole-stage codegen id. AQE
+        # numbers stages in the order their inputs finish, so a repeat of
+        # one plan can renumber identical stages and miss the cache
+        # (measured: 4-11 compiles in clusters/plan on a repeated lsh
+        # run). Without the id, identical stage bodies share one class
+        # across runs and across queries; explain output keeps the id.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes compiled so far by this session's JVM: the count of
+    Spark's codegen compilation-time histogram. A cache hit compiles
+    nothing, so the delta across a repeated job shows whether its
+    generated code stayed resident. JVM-wide: work running concurrently
+    on other threads lands in the same count."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

@@ -443,6 +443,69 @@ def test_incremental_dedup_records_band_cap_stats(spark, tmp_path):
     assert "batch" in {r.side for r in rows}
 
 
+def test_incremental_dedup_continued_stream_compiles_nothing(spark, tmp_path):
+    """A stream continued from its checkpoint runs its new batch ids on
+    generated code that is already compiled (the batch id lives in the
+    output path, never in the plan), keeps the discovered ``batch_id``
+    column, and a replayed batch replaces its edges, not duplicates them."""
+    import os
+
+    from imageduplicatefinder_spark.config import DedupConfig
+    from imageduplicatefinder_spark.operators.signatures import compute_signatures
+    from imageduplicatefinder_spark.session import codegen_compiles
+    from imageduplicatefinder_spark.streaming.dedup_stream import incremental_dedup
+
+    cfg = DedupConfig()
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
+    hist_docs = spark.createDataFrame(
+        [("r", "old/base.py", "c0", "py", base)],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    hist_sigs = compute_signatures(hist_docs, cfg)
+    srcdir = str(tmp_path / "cont_src")
+    edges_out = str(tmp_path / "cont_edges")
+    ckpt = str(tmp_path / "cont_ckpt")
+    t0 = datetime.datetime(2024, 1, 1)
+
+    def add_shard(i):
+        rows = [(t0, "r", f"new/dup{i}.py", f"c{i}", "py", base + f"tail {i}"),
+                (t0, "r", f"new/solo{i}.py", f"s{i}", "py",
+                 f"fresh words of shard {i} share nothing " * 5)]
+        (spark.createDataFrame(rows, STREAM_SCHEMA).coalesce(1)
+         .write.mode("append").parquet(srcdir))
+
+    def drain():
+        """Continue the stream from its checkpoint; return the classes
+        compiled while it ran."""
+        c0 = codegen_compiles(spark)
+        stream = spark.readStream.schema(STREAM_SCHEMA).parquet(srcdir)
+        q = incremental_dedup(stream, hist_sigs, cfg, edges_out, ckpt)
+        assert q.awaitTermination(120)
+        return codegen_compiles(spark) - c0
+
+    add_shard(0)
+    drain()  # batch 0 compiles the stream's code
+    add_shard(1)
+    assert drain() == 0  # batch 1: a new id, no new classes
+
+    edges = spark.read.parquet(edges_out)
+    assert "batch_id" in edges.columns
+    before = sorted(edges.select("batch_id", "src", "dst").collect())
+    assert {r.batch_id for r in before} == {0, 1}
+    assert len(before) == 2  # one history near-dup per shard
+
+    # forget batch 1's commit: the restarted query replays it
+    for name in ("1", ".1.crc"):
+        path = os.path.join(ckpt, "commits", name)
+        if os.path.exists(path):
+            os.remove(path)
+    assert drain() == 0
+    assert os.path.exists(os.path.join(ckpt, "commits", "1"))  # it re-ran
+    after = sorted(spark.read.parquet(edges_out)
+                   .select("batch_id", "src", "dst").collect())
+    assert after == before
+
+
 def test_incremental_edges_refresh_clusters_equals_full_recompute(spark, tmp_path):
     """Lambda-architecture loop closed: batch clusters over corpus v1,
     stream new docs through incremental_dedup, fold the emitted edges

@@ -289,6 +289,30 @@ def test_metrics_table_records_reused_rows(spark, corpus):
     assert m.filter("NOT reused").count() > 0
 
 
+def test_repeated_run_compiles_nothing(spark):
+    """Generated code is a per-session cost: a second identical run in
+    one session (fresh checkpoint dir, so every stage recomputes) finds
+    all of its classes in the codegen cache."""
+    import json
+    import os
+
+    from imageduplicatefinder_spark.session import codegen_compiles
+
+    corpus = generate_corpus(n_families=4, n_background=30, seed=11)
+    for _ in range(2):
+        c0 = codegen_compiles(spark)
+        pipe = DedupPipeline(spark, DedupConfig(),
+                             checkpoint_dir=tempfile.mkdtemp())
+        pipe.run(corpus_to_dataframe(spark, corpus))
+        total = codegen_compiles(spark) - c0
+    assert not any(m.reused for m in pipe.ckpt.metrics)
+    assert sum(m.codegen_compiles for m in pipe.ckpt.metrics) == 0
+    assert total == 0  # nothing outside the stages either
+    meta = os.path.join(pipe.checkpoint_dir, "plan", pipe.cfg.config_hash(),
+                        "_meta.json")
+    assert json.load(open(meta))["codegen_compiles"] == 0
+
+
 def test_radius_from_threshold_matches_reference_formula():
     """Web-path conversion (ref: app/Commands.java:406-410):
     radius = round((1 - t) * 64)."""

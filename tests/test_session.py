@@ -1,8 +1,13 @@
-"""Session factory: shuffle-partition inference from the master string."""
+"""Session factory: shuffle-partition inference from the master string,
+host-derived defaults and the codegen cache size."""
 
 import os
 
-from imageduplicatefinder_spark.session import _local_cores
+from imageduplicatefinder_spark.session import (
+    _default_cpus,
+    _default_driver_mem,
+    _local_cores,
+)
 
 
 def test_local_cores_parses_every_local_master_shape():
@@ -30,3 +35,25 @@ def test_default_config_hash_is_pinned():
     assert DedupConfig().config_hash() == "cc835b4fbc47abba"
     assert (DedupConfig().config_hash()
             != DedupConfig(shingle_k=5).config_hash())
+
+
+def test_default_cpus_from_env_else_affinity():
+    assert _default_cpus("6", 4) == "6"       # the env var wins
+    assert _default_cpus(None, 4) == "4"
+    assert _default_cpus("", 3) == "3"        # empty counts as unset
+
+
+def test_default_driver_mem_is_half_of_ram_floored_at_2g():
+    gib_kb = 1024 * 1024
+    assert _default_driver_mem("3g", 16 * gib_kb) == "3g"   # env wins
+    assert _default_driver_mem(None, 16 * gib_kb) == "8192m"
+    assert _default_driver_mem(None, 15 * gib_kb) == "7680m"
+    assert _default_driver_mem(None, 2 * gib_kb) == "2048m"  # the floor
+    assert _default_driver_mem(None, 0) == "2048m"           # unreadable
+
+
+def test_codegen_cache_sized_to_the_plan_set(spark):
+    """A static SQL conf: it must reach the session through the builder."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2048"
+    # stage ids out of class names: renumbered stages share classes
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
