@@ -96,8 +96,11 @@ def _verify_pairs_vectorized(
 
     ``n_sigs`` is the caller's ``signatures.count()``. Returns None when
     the kernel does not apply (table over the cap, NULL/duplicate-id
-    rows, no shingles) — the caller falls back to the join path, which
-    is also the only scalable shape at real corpus sizes.
+    rows, no shingles, a shingle array that repeats a value) — the
+    caller falls back to the join path, which is also the only scalable
+    shape at real corpus sizes. Repeats matter because this kernel
+    counts intersections by membership: ``[1,1,2]`` vs ``[1,2]`` would
+    score jaccard 3/2 here and 2/3 under the join's ``array_intersect``.
     """
     import numpy as np
     import pandas as pd
@@ -125,6 +128,11 @@ def _verify_pairs_vectorized(
     offs = np.concatenate([[0], np.cumsum(lens)])
     flat = (np.concatenate(sh_lists) if len(sh_lists)
             else np.empty(0, dtype=np.int64))
+    # rows are sorted, so a repeated shingle is an equal neighbour
+    # inside one row
+    row = np.repeat(np.arange(len(lens)), lens)
+    if ((flat[1:] == flat[:-1]) & (row[1:] == row[:-1])).any():
+        return None
     # dense ranks keep the per-batch composite keys inside int64, and
     # int32 storage halves the broadcast + the per-batch gather bytes
     # (rank < vocab size; int64 kept in the no-real-corpus case of a

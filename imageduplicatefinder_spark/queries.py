@@ -494,14 +494,15 @@ def _char_pairs_bitset(spark: SparkSession, g: DataFrame) -> DataFrame | None:
     the caller falls back to the prefix-filter join."""
     import numpy as np
 
+    # one distinct aggregate per plan: two count_distincts in one agg
+    # get an Expand whose group order follows expression-id hashes, so
+    # each call could compile a differently ordered copy of the same
+    # code (grams are never NULL: NULL text explodes to no rows)
     vocab_rows = g.select("gram").distinct()
-    n_docs_row = g.agg(
-        F.count_distinct("doc_id").alias("nd"),
-        F.count_distinct("gram").alias("nv"),
-    ).collect()[0]
-    n_docs, n_vocab = int(n_docs_row["nd"]), int(n_docs_row["nv"])
+    n_docs = g.agg(F.count_distinct("doc_id")).collect()[0][0]
     if n_docs == 0:
         return None  # empty corpus: the join path returns empty anyway
+    n_vocab = vocab_rows.count()
     if n_docs * n_vocab > _CHAR_BITSET_MAX_BITS:
         return None
     vocab = np.sort(

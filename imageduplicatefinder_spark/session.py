@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 import re
+import site
 
 from pyspark.sql import SparkSession
 
@@ -29,6 +30,36 @@ def _local_cores(master: str) -> int | None:
     if spec == "*":
         return os.cpu_count() or 1
     return int(spec)
+
+
+#: the directory this package is imported from
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _python_daemon_module(master: str, worker_path: list[str]) -> str | None:
+    """The Python worker daemon to start for ``master``: this package's
+    lazy-zip-cache daemon (``daemon.py``) for a local master, else None
+    (keep ``pyspark.daemon``). On a cluster, ``--py-files`` reach the
+    workers only per task, after the daemon has started.
+
+    ``worker_path`` is where a local worker looks for modules (the
+    JVM's cwd, ``PYTHONPATH``, site-packages). If this package is not
+    on it — a driver script that made the package importable only
+    through ``sys.path`` — the daemon could not start, so None."""
+    if _local_cores(master) is None:
+        return None
+    if _PACKAGE_ROOT not in {os.path.abspath(p) for p in worker_path}:
+        return None
+    return "imageduplicatefinder_spark.daemon"
+
+
+def _worker_path() -> list[str]:
+    """Import roots of a local Python worker: Spark starts it with
+    ``python -m`` in the JVM's cwd (the driver's, at launch) and the
+    driver's ``PYTHONPATH``."""
+    env = os.environ.get("PYTHONPATH", "")
+    return [os.getcwd(), *(p for p in env.split(os.pathsep) if p),
+            *site.getsitepackages(), site.getusersitepackages()]
 
 
 def _default_cpus(env_cpus: str | None, affinity: int) -> str:
@@ -158,6 +189,12 @@ def get_spark(
         # across runs and across queries; explain output keeps the id.
         .config("spark.sql.codegen.useIdInClassName", "false")
     )
+    daemon = _python_daemon_module(master, _worker_path())
+    if daemon is not None:
+        # workers fork from the daemon, so its lazy zip cache reaches
+        # every Python task: 0.16-0.20 s -> 0.03-0.04 s of CPU per task
+        # (daemon.py)
+        builder = builder.config("spark.python.daemon.module", daemon)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

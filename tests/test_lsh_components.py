@@ -448,3 +448,32 @@ def test_verify_kernel_pad_csr_and_join_paths_agree(spark, monkeypatch):
     join = rows(V.verify_pairs(pairs, sigs, cfg))
     assert pad == csr == join
     assert len(pad) == len(pair_rows) - 1
+
+
+def test_verify_kernel_refuses_repeated_shingles(spark, monkeypatch):
+    """The vectorized kernel counts intersections by membership, so a
+    shingle array that repeats a value ([1,1,2] vs [1,2]) would score
+    jaccard 3/2 there and 2/3 under the join's array_intersect; such a
+    table must take the join path, giving the same rows either way."""
+    import imageduplicatefinder_spark.operators.verify as V
+    from imageduplicatefinder_spark.config import DedupConfig
+
+    sigs = spark.createDataFrame(
+        [(1, 5, [1, 1, 2]), (2, 7, [1, 2]), (3, 5, [2, 3, 4])],
+        "doc_id long, simhash long, shingles array<long>",
+    )
+    pairs = spark.createDataFrame([(1, 2), (1, 3), (2, 3)],
+                                  "src long, dst long")
+    cfg = DedupConfig()
+
+    def rows(df):
+        return sorted(
+            (r.src, r.dst, r.hamming, r.jaccard, r.containment, r.verified)
+            for r in df.collect()
+        )
+
+    default = rows(V.verify_pairs(pairs, sigs, cfg))
+    monkeypatch.setattr(V, "BROADCAST_VERIFY_MAX_SIGS", 0)
+    join = rows(V.verify_pairs(pairs, sigs, cfg))
+    assert default == join
+    assert default[0][3] == pytest.approx(2 / 3)

@@ -118,6 +118,63 @@ def test_resume_reuses_checkpoints(spark, corpus):
     assert all(m.reused for m in pipe2.ckpt.metrics)
 
 
+#: the checkpointed stages of a default-config run, in order
+DEFAULT_STAGES = ("documents_hashed", "signatures", "band_stats", "bands",
+                  "candidates", "edges", "components", "clusters", "plan")
+
+
+class _StageCrash(RuntimeError):
+    pass
+
+
+def _sorted_plan(res):
+    return sorted(map(str, res.plan.collect()))
+
+
+@pytest.fixture(scope="module")
+def small_corpus():
+    return generate_corpus(n_families=3, n_background=12, seed=5)
+
+
+@pytest.fixture(scope="module")
+def small_plan(spark, small_corpus):
+    df = corpus_to_dataframe(spark, small_corpus)
+    return _sorted_plan(DedupPipeline(
+        spark, DedupConfig(), checkpoint_dir=tempfile.mkdtemp()).run(df))
+
+
+@pytest.mark.parametrize("crash_stage", DEFAULT_STAGES)
+def test_resume_after_crash_in_every_stage(spark, small_corpus, small_plan,
+                                           crash_stage):
+    """A run that dies while building any stage, resumed on the same
+    checkpoint_dir, reuses every stage before it and plans exactly what
+    an uninterrupted run plans."""
+    df = corpus_to_dataframe(spark, small_corpus)
+    d = tempfile.mkdtemp()
+    crashed = DedupPipeline(spark, DedupConfig(), checkpoint_dir=d)
+    materialize = crashed.ckpt.materialize
+
+    def crash_at(stage, df_fn, *args, **kwargs):
+        if stage == crash_stage:
+            def df_fn():
+                raise _StageCrash(stage)
+        return materialize(stage, df_fn, *args, **kwargs)
+
+    crashed.ckpt.materialize = crash_at
+    with pytest.raises(_StageCrash):
+        crashed.run(df)
+    assert [m.stage for m in crashed.ckpt.metrics] == list(
+        DEFAULT_STAGES[:DEFAULT_STAGES.index(crash_stage)])
+
+    resumed = DedupPipeline(spark, DedupConfig(), checkpoint_dir=d)
+    assert small_plan  # the corpus plants duplicate families
+    assert _sorted_plan(resumed.run(df)) == small_plan
+    reused = {m.stage: m.reused for m in resumed.ckpt.metrics}
+    assert list(reused) == list(DEFAULT_STAGES)
+    assert [s for s in DEFAULT_STAGES if reused[s]] == list(
+        DEFAULT_STAGES[:DEFAULT_STAGES.index(crash_stage)])
+
+
 def test_resume_different_corpus_recomputes(spark, corpus):
     """Same config + same checkpoint_dir but a DIFFERENT input must
     recompute every stage, not replay the previous corpus's results

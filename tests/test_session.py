@@ -1,12 +1,14 @@
 """Session factory: shuffle-partition inference from the master string,
-host-derived defaults and the codegen cache size."""
+host-derived defaults, the codegen cache size and the worker daemon."""
 
 import os
 
 from imageduplicatefinder_spark.session import (
+    _PACKAGE_ROOT,
     _default_cpus,
     _default_driver_mem,
     _local_cores,
+    _python_daemon_module,
 )
 
 
@@ -57,3 +59,24 @@ def test_codegen_cache_sized_to_the_plan_set(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2048"
     # stage ids out of class names: renumbered stages share classes
     assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
+
+
+def test_worker_daemon_only_for_local_masters():
+    daemon = "imageduplicatefinder_spark.daemon"
+    path = [_PACKAGE_ROOT]
+    assert _python_daemon_module("local", path) == daemon
+    assert _python_daemon_module("local[4]", path) == daemon
+    assert _python_daemon_module("local[*,2]", path) == daemon
+    # cluster workers get --py-files per task, after the daemon started
+    assert _python_daemon_module("yarn", path) is None
+    assert _python_daemon_module("spark://h:7077", path) is None
+    # a worker that could not import the package keeps pyspark.daemon
+    assert _python_daemon_module("local[4]", ["/nonexistent"]) is None
+
+
+def test_session_names_the_worker_daemon(spark):
+    """A core conf: like the codegen cap, it only reaches the session
+    through the builder."""
+    conf = spark.sparkContext.getConf()
+    assert (conf.get("spark.python.daemon.module")
+            == "imageduplicatefinder_spark.daemon")
