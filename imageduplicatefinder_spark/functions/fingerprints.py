@@ -1,11 +1,13 @@
-"""Content fingerprinting: k-shingles -> MinHash signature + 64-bit SimHash.
+"""Content fingerprinting: k-shingles -> LSH band hashes + 64-bit SimHash.
 
 Spark-native generalization of the reference's perceptual hashers
 (ref: src/main/java/hash/AHash.java:7-30, DHash.java:7-34,
 PHashDct.java:13-57 — all ``BufferedImage -> 64-bit long``): here the
 payload is text/source-code, the 64-bit sketch is a SimHash over token
-hashes (mean-threshold bit test, the aHash analog), and the MinHash
-signature adds a Jaccard-estimating family the reference lacks.
+hashes (mean-threshold bit test, the aHash analog), and a MinHash
+signature the reference lacks is banded into LSH keys inside the UDF.
+The UDF emits the distinct shingle set (verification is exact over it)
+and the band hashes, never the signature itself.
 
 All kernels are numpy-vectorized and run inside Arrow-batched pandas
 UDFs — no per-row Python UDFs (BASELINE.json input_hint mandate).
@@ -283,7 +285,6 @@ def _fingerprint_batch(
     band_mat = band_hashes_numpy(minhash_mat, cfg.lsh_bands, cfg.lsh_rows)
     return pd.DataFrame(
         {
-            "minhash": [row.tolist() for row in minhash_mat],
             "simhash": simhashes,
             "shingles": shingle_lists,
             "n_tokens": counts,
@@ -294,7 +295,6 @@ def _fingerprint_batch(
 
 FINGERPRINT_SCHEMA = T.StructType(
     [
-        T.StructField("minhash", T.ArrayType(T.LongType(), False)),
         T.StructField("simhash", T.LongType()),
         T.StructField("shingles", T.ArrayType(T.LongType(), False)),
         T.StructField("n_tokens", T.IntegerType()),
@@ -319,9 +319,11 @@ def band_hashes_numpy(minhash_mat: np.ndarray, bands: int, rows: int) -> np.ndar
 
 
 def make_fingerprint_udf(cfg: DedupConfig):
-    """Scalar-iterator pandas UDF ``content -> struct<minhash, simhash,
-    shingles, n_tokens>`` (ref UDF surface: hash/Hasher.java:4-7 —
-    the reference's one extension point, reformulated Arrow-batched)."""
+    """Scalar-iterator pandas UDF ``content -> struct<simhash, shingles,
+    n_tokens, bands>`` (ref UDF surface: hash/Hasher.java:4-7 — the
+    reference's one extension point, reformulated Arrow-batched). The
+    MinHash signature never leaves the UDF: it only feeds the band
+    hashes, and verification is exact over the shingle sets."""
     keys = _perm_params(cfg.num_perm, cfg.seed)
 
     @pandas_udf(FINGERPRINT_SCHEMA)

@@ -301,8 +301,8 @@ def containment_candidates(
     every shingle occurrence, with hot boilerplate shingles (document
     frequency > ``df_cap``) DOWN-SAMPLED to ~df_cap surviving
     occurrences via the same deterministic salted threshold as the LSH
-    band cap (operators/lsh.py capped_bands) — bounded per-key join
-    fan-out without dropping a hot shingle entirely; pass
+    band cap (operators/lsh.py kept_bands_given_hot) — bounded per-key
+    join fan-out without dropping a hot shingle entirely; pass
     ``return_stats=True`` to also get the (shingle, df) table of capped
     shingles so the recall loss is visible, not silent. The equi-join
     on the shingle hash replaces the old all-pairs size crossJoin.

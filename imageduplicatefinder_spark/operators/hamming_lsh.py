@@ -33,7 +33,8 @@ fan-out:
 
 Residual hot keys (e.g. an all-zero block pair across many sketches)
 are bounded by an optional salted per-key cap with drop accounting
-(``capped_sketch_keys``, mirroring operators/lsh.py ``capped_bands``);
+(``capped_sketch_keys``, mirroring operators/lsh.py
+``kept_bands_given_hot``);
 without the cap the operator is exact.
 
 Scale shape:
@@ -238,7 +239,8 @@ def capped_sketch_keys(
     keys: DataFrame, max_key_group: int
 ) -> tuple[DataFrame, DataFrame]:
     """Salted deterministic per-key cap with drop accounting, mirroring
-    operators/lsh.py ``capped_bands``. Returns (kept_keys, key_stats).
+    operators/lsh.py ``hot_band_stats`` + ``kept_bands_given_hot``.
+    Returns (kept_keys, key_stats).
 
     Sketches in a (key_id, key_val) group larger than ``max_key_group``
     are down-sampled by a deterministic hash threshold — map-side after

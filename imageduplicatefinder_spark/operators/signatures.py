@@ -12,7 +12,9 @@ Output schema (FIXTURES.md §2 `signatures`):
     repo, path, commit, lang,
     sha256:string (hex — per-row invariant vs reference input),
     size:long, n_tokens:int,
-    simhash:long, minhash:array<long>, shingles:array<long>
+    simhash:long, bands:array<long> (one LSH key per band),
+    shingles:array<long> (distinct, sorted — verification is exact
+    over these sets)
 """
 
 from __future__ import annotations
@@ -99,16 +101,13 @@ def compute_signatures(
     documents: DataFrame,
     cfg: DedupConfig,
     langs: list[str] | None = None,
-    keep_shingles: bool = True,
     widen: bool = True,
 ) -> DataFrame:
-    """documents(repo,path,commit,lang,content) -> signatures.
+    """documents(repo,path,commit,lang,content) -> signatures, in the
+    module schema above (every row carries ``bands`` and ``shingles``).
 
     ``langs`` is the pushed-down extension-filter analog
     (ref: app/Commands.java:74 `(?i).*\\.(jpg|jpeg|png|bmp)`).
-    ``keep_shingles=False`` drops the shingle-set column for
-    footprint-sensitive runs (verification then uses the MinHash
-    Jaccard estimate instead of exact set intersection).
     ``widen=False`` skips the narrow-scan repartition — pass it when
     the input already crossed a shuffle (e.g. the pipeline's
     rep-filter join), where the extra content exchange is pure cost.
@@ -141,8 +140,7 @@ def compute_signatures(
         "size",
         F.col("fp.n_tokens").alias("n_tokens"),
         F.col("fp.simhash").alias("simhash"),
-        F.col("fp.minhash").alias("minhash"),
         F.col("fp.bands").alias("bands"),
-        *(["fp.shingles"] if keep_shingles else []),
+        F.col("fp.shingles").alias("shingles"),
     )
     return df

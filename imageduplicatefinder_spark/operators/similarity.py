@@ -294,8 +294,8 @@ def hyperplane_lsh_pairs(
 
     ``max_bucket_size``: buckets larger than this are down-sampled by
     the same deterministic salted-threshold scheme as the MinHash band
-    cap (operators/lsh.py capped_bands) — a degenerate bucket (e.g.
-    all-zero embeddings landing at bucket 0 of every table) would
+    cap (operators/lsh.py kept_bands_given_hot) — a degenerate bucket
+    (e.g. all-zero embeddings landing at bucket 0 of every table) would
     otherwise blow up one join key quadratically. None disables the
     cap (exact candidate semantics, e.g. for oracle-checked queries).
     """

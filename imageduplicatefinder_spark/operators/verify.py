@@ -2,13 +2,11 @@
 
 The reference verifies candidates with ``hamming(a, b) <= radius``
 inside the BK-tree walk (ref: src/main/java/index/BKTreeIndex.java:42-43,
-hash/Hamming.java:4-6). Here verification is a post-join filter, fully
-JVM-side:
+hash/Hamming.java:4-6). Here verification is a post-join filter over
+the signatures' ``simhash`` and ``shingles`` columns:
 
 - ``hamming``  = bit_count(simhash_a XOR simhash_b)            (64-bit)
-- ``jaccard``  = exact shingle-set Jaccard via array_intersect, or the
-                 MinHash estimate (fraction of equal signature slots)
-                 when shingle sets weren't materialized
+- ``jaccard``  = exact shingle-set Jaccard |A ∩ B| / |A ∪ B|
 - ``containment`` = |A ∩ B| / min(|A|,|B|) — catches the watermark
                  analog (base content embedded in a larger host file,
                  FIXTURES.md §3 `containment`), which plain Jaccard
@@ -18,6 +16,11 @@ A pair is verified if jaccard >= threshold OR containment >=
 containment_threshold, optionally OR hamming <= radius when
 ``cfg.use_simhash_verify`` (the reference's exact predicate — loose for
 text payloads, see DedupConfig).
+
+Two physical forms compute the same rows: a broadcast vectorized
+kernel in the Python workers for signature tables up to
+``BROADCAST_VERIFY_MAX_SIGS`` rows, and a JVM ``array_intersect`` join
+past it.
 """
 
 from __future__ import annotations
@@ -38,8 +41,7 @@ from imageduplicatefinder_spark.operators.hamming_lsh import _popcount64
 #: one map-side stage over the materialized candidates. 200k rows of
 #: (doc_id, simhash, shingles) is ~100-200 MB broadcast — fine for the
 #: executors a cluster this size runs; beyond it the shuffle join is
-#: the only scalable shape and remains the fallback. Halved when the
-#: ~1 KB/row minhash column must ride along (estimate/fallback modes).
+#: the only scalable shape and remains the fallback.
 BROADCAST_VERIFY_MAX_SIGS = 200_000
 
 #: padded-rank-matrix budget for the vectorized verify kernel: below
@@ -59,18 +61,6 @@ def _attach(pairs: DataFrame, signatures: DataFrame, side: str,
     if broadcast:
         sel = F.broadcast(sel)
     return pairs.join(sel, on=side)
-
-
-def _minhash_estimate() -> F.Column:
-    """Unbiased Jaccard estimate: fraction of equal signature slots
-    (expects minhash_src/minhash_dst attached). NULL signatures -> 0.0."""
-    eq = F.size(
-        F.filter(
-            F.zip_with("minhash_src", "minhash_dst", lambda x, y: x == y),
-            lambda v: v,
-        )
-    )
-    return F.coalesce(eq / F.size("minhash_src"), F.lit(0.0))
 
 
 def _verify_pairs_vectorized(
@@ -95,8 +85,8 @@ def _verify_pairs_vectorized(
     divisions).
 
     ``n_sigs`` is the caller's ``signatures.count()``. Returns None when
-    the kernel does not apply (table over the cap, NULL/duplicate-id
-    rows, no shingles, a shingle array that repeats a value) — the
+    the kernel does not apply (table over the cap, duplicate ids, a
+    NULL shingle array, a shingle array that repeats a value) — the
     caller falls back to the join path, which is also the only scalable
     shape at real corpus sizes. Repeats matter because this kernel
     counts intersections by membership: ``[1,1,2]`` vs ``[1,2]`` would
@@ -288,7 +278,6 @@ def verify_pairs(
     pairs: DataFrame,
     signatures: DataFrame,
     cfg: DedupConfig,
-    allow_null_shingles: bool = False,
     only_verified: bool = False,
 ) -> DataFrame:
     """(src,dst) candidates -> verified edges with evidence columns.
@@ -297,16 +286,11 @@ def verify_pairs(
     verified:boolean. Keep only verified rows for clustering; the full
     frame (pre-filter) is useful for threshold tuning.
 
-    ``allow_null_shingles``: set when ``signatures`` is a union of a
-    shingled table with a minhash-only one (incremental_dedup joining a
-    fresh batch against a footprint-trimmed history) — mixed pairs then
-    fall back to the MinHash jaccard estimate per row, at the cost of
-    also shuffling the minhash arrays onto every pair. Off by default:
-    the batch pipeline's signatures are fully shingled and must not pay
-    that (~2 KB/pair) join payload for a fallback that can never fire.
-    When off, a pair with a NULL shingle side gets NULL
-    jaccard/containment/verified (unknown — dropped by a
-    filter(verified) — never a silent 0.0).
+    ``signatures`` needs ``doc_id, simhash, shingles`` (a signatures
+    table, or a projection of one). Verification is always exact over
+    the shingle sets. A pair with a NULL shingle side (a hand-built
+    table) gets NULL jaccard/containment/verified: unknown, dropped by
+    a filter(verified), never a silent 0.0.
 
     ``only_verified``: return only rows passing the rule (identical to
     ``.filter("verified")`` on the full frame) — lets the vectorized
@@ -314,93 +298,56 @@ def verify_pairs(
     majority back from the Python workers.
 
     Physical dispatch (output-identical): when the signature table fits
-    the ``BROADCAST_VERIFY_MAX_SIGS`` guard and carries non-NULL
-    shingle sets, verification runs as a broadcast CSR + vectorized
-    sorted-merge intersection kernel (``_verify_pairs_vectorized``);
-    otherwise (web-scale tables, NULL-shingle unions, estimate mode)
-    as the shuffle/broadcast join below.
+    the ``BROADCAST_VERIFY_MAX_SIGS`` guard and carries non-NULL,
+    repeat-free shingle sets, verification runs as a broadcast +
+    vectorized sorted-merge intersection kernel
+    (``_verify_pairs_vectorized``); otherwise as the broadcast or
+    shuffle ``array_intersect`` join below.
     """
     # one count serves both dispatches below — metadata-only when
     # signatures is the pipeline's parquet checkpoint read-back
     n_sigs = signatures.count()
-    has_shingles = "shingles" in signatures.columns
-    if has_shingles:
-        fast = _verify_pairs_vectorized(pairs, signatures, cfg,
-                                        only_verified, n_sigs)
-        if fast is not None:
-            return fast
-    has_minhash = "minhash" in signatures.columns
-    use_fallback = allow_null_shingles and has_shingles and has_minhash
-    cols = ["simhash"]
-    if has_shingles:
-        cols.append("shingles")
-    if not has_shingles or use_fallback:
-        cols.append("minhash")  # estimate path / per-row NULL fallback
+    fast = _verify_pairs_vectorized(pairs, signatures, cfg,
+                                    only_verified, n_sigs)
+    if fast is not None:
+        return fast
     # attach-side dispatch (see BROADCAST_VERIFY_MAX_SIGS): broadcast vs
     # shuffle join
-    cap = BROADCAST_VERIFY_MAX_SIGS // (4 if "minhash" in cols else 1)
-    bc = n_sigs <= cap
+    cols = ["simhash", "shingles"]
+    bc = n_sigs <= BROADCAST_VERIFY_MAX_SIGS
     df = _attach(_attach(pairs, signatures, "src", cols, broadcast=bc),
                  signatures, "dst", cols, broadcast=bc)
 
-    df = df.withColumn(
-        "hamming", hamming_distance_col(F.col("simhash_src"), F.col("simhash_dst"))
+    inter = F.size(F.array_intersect("shingles_src", "shingles_dst"))
+    sa = F.size("shingles_src")
+    sb = F.size("shingles_dst")
+    union = sa + sb - inter
+    both = F.col("shingles_src").isNotNull() & F.col("shingles_dst").isNotNull()
+    # F.when without otherwise: NULL when a shingle side is NULL
+    df = (
+        df.withColumn(
+            "hamming",
+            hamming_distance_col(F.col("simhash_src"), F.col("simhash_dst")),
+        )
+        .withColumn("_inter", inter)
+        .withColumn(
+            "jaccard",
+            F.when(
+                both,
+                F.when(union > 0, F.col("_inter") / union).otherwise(F.lit(0.0)),
+            ),
+        )
+        .withColumn(
+            "containment",
+            F.when(
+                both,
+                F.when(
+                    F.least(sa, sb) > 0, F.col("_inter") / F.least(sa, sb)
+                ).otherwise(F.lit(0.0)),
+            ),
+        )
+        .drop("_inter")
     )
-    if has_shingles:
-        inter = F.size(F.array_intersect("shingles_src", "shingles_dst"))
-        sa = F.size("shingles_src")
-        sb = F.size("shingles_dst")
-        union = sa + sb - inter
-        both = F.col("shingles_src").isNotNull() & F.col("shingles_dst").isNotNull()
-        if use_fallback:
-            # containment has no symmetric-MinHash estimator, so mixed
-            # pairs get containment 0.0 (embedded-snippet dups need
-            # shingles on both sides); jaccard falls back to the estimate
-            mixed_jaccard = _minhash_estimate()
-            mixed_containment = F.lit(0.0)
-        else:
-            mixed_jaccard = F.lit(None).cast("double")
-            mixed_containment = F.lit(None).cast("double")
-        df = (
-            df.withColumn("_inter", inter)
-            .withColumn(
-                "jaccard",
-                F.when(
-                    both,
-                    F.when(union > 0, F.col("_inter") / union).otherwise(F.lit(0.0)),
-                ).otherwise(mixed_jaccard),
-            )
-            .withColumn(
-                "containment",
-                F.when(
-                    both,
-                    F.when(
-                        F.least(sa, sb) > 0, F.col("_inter") / F.least(sa, sb)
-                    ).otherwise(F.lit(0.0)),
-                ).otherwise(mixed_containment),
-            )
-            .drop("_inter")
-        )
-    else:
-        # MinHash estimate: fraction of equal signature slots is an
-        # unbiased estimator of Jaccard similarity. Containment has NO
-        # symmetric-MinHash estimator, so the containment >= threshold
-        # clause of the verify rule is INACTIVE in this mode — warn
-        # loudly: embedded/watermark-style duplicates (low Jaccard, high
-        # containment) will not verify without shingle sets.
-        import warnings
-
-        warnings.warn(
-            "verify_pairs: signatures carry no shingle sets — containment "
-            "verification is disabled (containment=0.0 for every pair); "
-            "embedded-snippet duplicates will NOT be detected. Compute "
-            "signatures with keep_shingles=True for full recall.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        df = df.withColumn("jaccard", _minhash_estimate()).withColumn(
-            "containment", F.lit(0.0)
-        )
 
     rule = (F.col("jaccard") >= F.lit(cfg.jaccard_threshold)) | (
         F.col("containment") >= F.lit(cfg.containment_threshold)

@@ -35,7 +35,7 @@ from imageduplicatefinder_spark.operators.lsh import (
     band_table,
     hot_band_stats,
     kept_bands_given_hot,
-    pairs_from_capped_bands,
+    pairs_from_kept_bands,
 )
 from imageduplicatefinder_spark.operators.plan import clusters_table, keeper_plan
 from imageduplicatefinder_spark.operators.prefix_join import (
@@ -190,17 +190,12 @@ class DedupPipeline:
                 documents if not langs
                 else documents.filter(F.col("lang").isin(langs))
             ).join(reps, on="doc_id")
-            # minhash is dropped from the checkpoint: band hashes are
-            # precomputed in the UDF and verification is exact over the
-            # shingle sets, so the 1 KB/row signature array would be
-            # written and read for nothing (measured ~30% of the stage's
-            # IO at scale)
             # widen=False: rep_docs just crossed the rep-filter join's
             # exchange, so the fingerprint stage is already distributed
             return compute_signatures(
                 rep_docs.select("repo", "path", "commit", "lang", "content"),
                 cfg, widen=False,
-            ).drop("minhash")
+            )
 
         signatures = self.ckpt.materialize("signatures", build_signatures)
 
@@ -221,7 +216,7 @@ class DedupPipeline:
                 "bands", lambda: kept_bands_given_hot(banded, hot, cfg)
             )
             cands = self.ckpt.materialize(
-                "candidates", lambda: pairs_from_capped_bands(bands)
+                "candidates", lambda: pairs_from_kept_bands(bands)
             )
         elif cfg.candidates == "prefix":
             # AllPairs/PPJoin prefix filtering: EXACT for the verify

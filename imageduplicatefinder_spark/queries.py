@@ -89,7 +89,7 @@ def _shingles_expr(w: Column) -> Column:
 # O(df^2); dup families are small, so family-linking shingles have low
 # df and survive. The cap is part of the operator's SEMANTICS (applied
 # identically in Spark and the DuckDB oracle), mirroring the salted
-# band cap of the LSH path (operators/lsh.py capped_bands).
+# band cap of the LSH path (operators/lsh.py kept_bands_given_hot).
 _SHINGLE_DF_CAP = 32
 
 _SHINGLE_CTE = f"""
@@ -4552,9 +4552,9 @@ def q_gradsign_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from imageduplicatefinder_spark.operators.signatures import compute_signatures
 
     cfg = DedupConfig(sketch="gradsign")
-    sig = compute_signatures(
-        _docs_as_input_hint(spark, sf_dir), cfg, keep_shingles=False
-    ).select("doc_id", "simhash")
+    sig = compute_signatures(_docs_as_input_hint(spark, sf_dir), cfg).select(
+        "doc_id", "simhash"
+    )
     return hamming_pairs(sig, radius=cfg.hamming_radius, id_col="doc_id",
                          sketch_col="simhash")
 

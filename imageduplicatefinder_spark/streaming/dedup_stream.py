@@ -95,10 +95,16 @@ def incremental_dedup(
     path), banded, and its bands equi-joined against the UNION of the
     historical band table and the batch's own bands — so a new doc
     pairs both with history and with other docs in the same batch.
-    Candidates are verified with the standard Jaccard/containment rule
-    and verified edges land under ``edges_out``, ready for a periodic
-    connected-components pass. Hot-band cap drops are recorded per batch
-    at ``<edges_out>_band_stats`` (capped_bands' visibility contract).
+    Candidates are verified exactly over the shingle sets with the
+    standard Jaccard/containment rule and verified edges land under
+    ``edges_out``, ready for a periodic connected-components pass.
+    Hot-band cap drops (``hot_band_stats``, history and batch) are
+    recorded per batch at ``<edges_out>_band_stats`` with a ``side``
+    column.
+
+    ``history_signatures`` must be a signatures table — a pipeline
+    ``signatures`` checkpoint or ``compute_signatures`` output — so it
+    carries ``bands`` and ``shingles``.
 
     Both outputs are parquet tables partitioned by batch: each batch
     overwrites its own ``<out>/batch_id=<id>`` directory, so a replayed
@@ -114,17 +120,23 @@ def incremental_dedup(
     """
     from pyspark.sql import functions as SF
 
-    from imageduplicatefinder_spark.operators.lsh import band_table, capped_bands
+    from imageduplicatefinder_spark.operators.lsh import (
+        band_table,
+        hot_band_stats,
+        kept_bands_given_hot,
+    )
     from imageduplicatefinder_spark.operators.signatures import compute_signatures
     from imageduplicatefinder_spark.operators.verify import verify_pairs
 
     # hot-band cap on the HISTORY side, same as the batch pipeline: a
     # mega-band in the corpus (license boilerplate) would otherwise fan
     # every colliding new doc out O(band_size) per micro-batch
-    hist_bands, hist_stats = capped_bands(band_table(history_signatures, cfg), cfg)
-    hist_bands = hist_bands.localCheckpoint(eager=False)
-    hist_stats = hist_stats.filter(SF.col("capped")).localCheckpoint(eager=False)
-    hist_sigs = history_signatures
+    hist_banded = band_table(history_signatures, cfg).localCheckpoint(eager=False)
+    hist_hot = hot_band_stats(hist_banded, cfg).localCheckpoint(eager=False)
+    hist_bands = kept_bands_given_hot(hist_banded, hist_hot, cfg).localCheckpoint(
+        eager=False
+    )
+    hist_sigs = history_signatures.select("doc_id", "simhash", "shingles")
     stats_out = edges_out.rstrip("/") + "_band_stats"
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -136,18 +148,16 @@ def incremental_dedup(
         # cap the batch's own bands too: with trigger(availableNow) a
         # whole backlog can land in one batch, and an uncapped mega-band
         # (license boilerplate) self-pairs quadratically on one
-        # (band_id, band_hash) key — the exact skew capped_bands exists for
-        new_bands, new_stats = capped_bands(band_table(sigs, cfg), cfg)
-        # capped_bands' contract: drops must be visible, not silent —
-        # persist the capped-band stats (history + this batch) next to
-        # the edges, replayed idempotently per batch_id like the edges
+        # (band_id, band_hash) key — the exact skew the cap exists for
+        new_banded = band_table(sigs, cfg).localCheckpoint(eager=False)
+        new_hot = hot_band_stats(new_banded, cfg)
+        new_bands = kept_bands_given_hot(new_banded, new_hot, cfg)
+        # drops must be visible, not silent — persist the capped-band
+        # stats (history + this batch) next to the edges, replayed
+        # idempotently per batch_id like the edges
         (
-            hist_stats.withColumn("side", SF.lit("history"))
-            .unionByName(
-                new_stats.filter(SF.col("capped")).withColumn(
-                    "side", SF.lit("batch")
-                )
-            )
+            hist_hot.withColumn("side", SF.lit("history"))
+            .unionByName(new_hot.withColumn("side", SF.lit("batch")))
             .write.mode("overwrite")
             .parquet(f"{stats_out}/batch_id={batch_id}")
         )
@@ -162,13 +172,10 @@ def incremental_dedup(
             )
             .distinct()
         )
-        # allowMissingColumns: a minhash-only history table unions with
-        # NULL shingles; verify_pairs falls back to the MinHash jaccard
-        # estimate per mixed row (see operators/verify.py)
-        combined = hist_sigs.unionByName(sigs, allowMissingColumns=True)
-        edges = verify_pairs(
-            cands, combined, cfg, allow_null_shingles=True
-        ).filter(SF.col("verified"))
+        combined = hist_sigs.unionByName(
+            sigs.select("doc_id", "simhash", "shingles")
+        )
+        edges = verify_pairs(cands, combined, cfg, only_verified=True)
         # foreachBatch is at-least-once: overwriting the batch's own
         # partition directory makes a replayed batch replace its output
         # instead of appending duplicate edges. The id goes in the PATH,
@@ -211,8 +218,9 @@ def stateful_dup_tracker(documents_stream: DataFrame) -> DataFrame:
         first_path, first_ts, dup_count = (
             state.get if state.exists else (None, None, 0)
         )
-        # a hot key's rows can span several Arrow chunks (4096-row
-        # batches); first-seen must be the global (ts, path) minimum
+        # a hot key's rows can span several Arrow chunks (at most
+        # spark.sql.execution.arrow.maxRecordsPerBatch rows each);
+        # first-seen must be the global (ts, path) minimum
         # across ALL chunks, not the head of whichever chunk arrived
         # first — so accumulate a candidate minimum and a total count,
         # then settle first/dup_count once at the end

@@ -1,6 +1,7 @@
 """Contract: the batched fingerprint kernel must agree exactly with the
-single-row reference kernels (shingle_hashes_numpy / minhash_numpy /
-simhash_numpy) on every row, including degenerate ones."""
+single-row reference kernels (shingle_hashes_numpy / minhash_numpy +
+band_hashes_numpy / simhash_numpy) on every row, including degenerate
+ones."""
 
 import numpy as np
 import pandas as pd
@@ -12,6 +13,7 @@ from imageduplicatefinder_spark.functions.fingerprints import (
     _fingerprint_batch,
     _perm_params,
     _token_hashes,
+    band_hashes_numpy,
     minhash_numpy,
     shingle_hashes_numpy,
     simhash_numpy,
@@ -28,7 +30,9 @@ def _check(contents: list[str]) -> None:
     for i, tokens in enumerate(toks):
         sh = shingle_hashes_numpy(tokens, CFG.shingle_k)
         assert batch["shingles"][i] == sh.astype(np.int64).tolist(), f"row {i} shingles"
-        assert batch["minhash"][i] == minhash_numpy(sh, KEYS).tolist(), f"row {i} minhash"
+        bands = band_hashes_numpy(minhash_numpy(sh, KEYS)[None, :],
+                                  CFG.lsh_bands, CFG.lsh_rows)[0]
+        assert batch["bands"][i] == bands.tolist(), f"row {i} bands"
         assert batch["simhash"][i] == int(simhash_numpy(_token_hashes(tokens))), (
             f"row {i} simhash"
         )

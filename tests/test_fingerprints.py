@@ -116,6 +116,23 @@ def test_simhash_hamming_properties():
     assert ham(12345, 67890) == ham(67890, 12345)
 
 
+def test_signatures_schema_is_pinned(spark):
+    """Every signature row has one schema: the MinHash signature stays
+    inside the fingerprint UDF (it only feeds ``bands``), and the
+    shingle sets are always there for exact verification."""
+    from imageduplicatefinder_spark.config import DedupConfig
+    from imageduplicatefinder_spark.operators.signatures import compute_signatures
+
+    docs = spark.createDataFrame(
+        [("r", "a.py", "c", "py", "alpha beta gamma delta")],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    assert compute_signatures(docs, DedupConfig()).columns == [
+        "doc_id", "repo", "path", "commit", "lang", "sha256", "size",
+        "n_tokens", "simhash", "bands", "shingles",
+    ]
+
+
 def test_hamming_distance_col_jvm(spark):
     from pyspark.sql import functions as F
     from imageduplicatefinder_spark.functions.fingerprints import hamming_distance_col

@@ -2,24 +2,38 @@
 hand-built inputs (ref style: src/test/java/index/BKTreeIndexTest.java:19-107,
 cluster/ClustererTest.java:27-153)."""
 
+from collections import Counter
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from imageduplicatefinder_spark.config import DedupConfig
+from imageduplicatefinder_spark.functions.fingerprints import band_hashes_numpy
 from imageduplicatefinder_spark.operators import components
 from imageduplicatefinder_spark.operators.components import connected_components
 from imageduplicatefinder_spark.operators.lsh import (
     band_table,
     candidate_pairs,
-    capped_bands,
+    hot_band_stats,
+    kept_bands_given_hot,
 )
 
 CFG = DedupConfig()
 
 
 def _sig_df(spark, rows):
+    """(doc_id, n_tokens, minhash) rows -> a band-ready signature table
+    whose ``bands`` are the fingerprint UDF's band hashes of each
+    MinHash signature."""
     return spark.createDataFrame(
-        rows, "doc_id long, n_tokens int, minhash array<long>"
+        [
+            (doc_id, n_tokens, band_hashes_numpy(
+                np.array([minhash], dtype=np.int64),
+                CFG.lsh_bands, CFG.lsh_rows)[0].tolist())
+            for doc_id, n_tokens, minhash in rows
+        ],
+        "doc_id long, n_tokens int, bands array<long>",
     )
 
 
@@ -51,19 +65,38 @@ def test_min_tokens_excludes_empty_docs(spark):
 
 
 def test_band_cap_limits_group_and_reports(spark):
+    """hot_band_stats reports exactly the over-cap bands and
+    kept_bands_given_hot thins only those: a 40-member mega-band family
+    is down-sampled (deterministically) while a 2-member family beside
+    it is kept whole."""
     cfg = DedupConfig(max_band_size=3)
-    sig = [7] * cfg.num_perm
-    df = _sig_df(spark, [(i, 10, sig) for i in range(40)])
-    bands = band_table(df, cfg)
-    kept, stats = capped_bands(bands, cfg)
-    per_band = [r["count"] for r in
-                kept.groupBy("band_id", "band_hash").count().collect()]
+    hot_sig = [7] * cfg.num_perm
+    cold_sig = [11] * cfg.num_perm
+    df = _sig_df(
+        spark,
+        [(i, 10, hot_sig) for i in range(40)]
+        + [(100 + i, 10, cold_sig) for i in range(2)],
+    )
+    bands = band_table(df, cfg).localCheckpoint(eager=True)
+    hot = hot_band_stats(bands, cfg)
+    kept = kept_bands_given_hot(bands, hot, cfg).collect()
+
+    band_rows = bands.collect()
+    sizes = Counter((r.band_id, r.band_hash) for r in band_rows)
+    over = {k for k, n in sizes.items() if n > cfg.max_band_size}
+    assert len(over) == cfg.lsh_bands  # every band of the hot family
+    hot_rows = hot.collect()
+    assert {(r.band_id, r.band_hash) for r in hot_rows} == over
+    assert all(r.capped and r.band_size == 40 for r in hot_rows)
     # hash-sampled cap: expected ~3 kept per 40-member band; must be
     # well below the uncapped size and deterministic
-    assert max(per_band) < 15 and min(per_band) >= 0
-    assert stats.filter("capped").count() == cfg.lsh_bands
-    kept2, _ = capped_bands(bands, cfg)
-    assert sorted(map(tuple, kept.collect())) == sorted(map(tuple, kept2.collect()))
+    per_band = Counter((r.band_id, r.band_hash) for r in kept)
+    assert max(per_band[k] for k in over) < 15
+    assert sorted(tuple(r) for r in kept if r.doc_id >= 100) == sorted(
+        tuple(r) for r in band_rows if r.doc_id >= 100
+    )
+    kept2 = kept_bands_given_hot(bands, hot_band_stats(bands, cfg), cfg)
+    assert sorted(map(tuple, kept)) == sorted(map(tuple, kept2.collect()))
     # distinct pair union across 64 independently-sampled bands stays
     # well below the uncapped 40*39/2 = 780 (the hard guarantee is the
     # per-band/per-reducer bound asserted above, which is what skew
@@ -73,13 +106,14 @@ def test_band_cap_limits_group_and_reports(spark):
 
 def test_hot_band_stats_path_equals_capped_bands(spark):
     """The pipeline's one-aggregation flow (hot_band_stats ->
-    kept_bands_given_hot) must produce exactly capped_bands' outputs:
-    same kept rows and the hot set == stats' capped subset. Mixed
-    corpus: one 40-member mega-band family plus small families."""
-    from imageduplicatefinder_spark.operators.lsh import (
-        hot_band_stats,
-        kept_bands_given_hot,
-    )
+    kept_bands_given_hot) must produce exactly the capped band table of
+    the cap rule written out directly: per-band sizes by window count,
+    every member of an at-or-below-cap band kept, a member of an
+    over-cap band kept iff pmod(xxhash64(doc_id, band_id, band_hash),
+    band_size) < cap. Same kept rows, and the hot set == the capped
+    subset of the per-band stats. Mixed corpus: one 40-member mega-band
+    family plus small families."""
+    from pyspark.sql import Window
 
     cfg = DedupConfig(max_band_size=3)
     hot_sig = [7] * cfg.num_perm
@@ -90,7 +124,20 @@ def test_hot_band_stats_path_equals_capped_bands(spark):
         + [(100 + i, 10, cold_sig) for i in range(2)],
     )
     bands = band_table(df, cfg).localCheckpoint(eager=True)
-    kept_ref, stats_ref = capped_bands(bands, cfg)
+
+    sized = bands.withColumn(
+        "band_size",
+        F.count("*").over(Window.partitionBy("band_id", "band_hash")),
+    ).withColumn("capped", F.col("band_size") > cfg.max_band_size)
+    kept_ref = sized.filter(
+        ~F.col("capped")
+        | (F.pmod(F.xxhash64("doc_id", "band_id", "band_hash"),
+                  F.col("band_size")) < cfg.max_band_size)
+    ).select("doc_id", "band_id", "band_hash")
+    stats_ref = sized.select(
+        "band_id", "band_hash", "band_size", "capped"
+    ).distinct()
+
     hot = hot_band_stats(bands, cfg)
     kept_new = kept_bands_given_hot(bands, hot, cfg)
     assert sorted(map(tuple, kept_new.collect())) == sorted(
@@ -105,9 +152,11 @@ def test_small_bands_not_sampled(spark):
     cfg = DedupConfig(max_band_size=3)
     sig = [9] * cfg.num_perm
     df = _sig_df(spark, [(i, 10, sig) for i in range(3)])
-    kept, stats = capped_bands(band_table(df, cfg), cfg)
-    assert kept.count() == 3 * cfg.lsh_bands  # at-cap bands keep everyone
-    assert stats.filter("capped").count() == 0
+    bands = band_table(df, cfg)
+    hot = hot_band_stats(bands, cfg)
+    assert hot.count() == 0
+    # at-cap bands keep everyone
+    assert kept_bands_given_hot(bands, hot, cfg).count() == 3 * cfg.lsh_bands
 
 
 def test_candidate_pairs_are_deduped_and_ordered(spark):
@@ -225,58 +274,30 @@ def test_cc_rounds_restore_session_confs(spark, monkeypatch):
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts
 
 
-def test_band_table_fallback_matches_udf_family(spark):
-    """The minhash-derived fallback bands MUST equal the UDF-precomputed
-    bands: tables from the two paths are equi-joined against each other
-    (incremental dedup vs an external signature table), so two hash
-    families would silently match nothing."""
-    from imageduplicatefinder_spark.operators.signatures import compute_signatures
-
-    docs = spark.createDataFrame(
-        [("r", f"f{i}.py", "c", "py", f"alpha beta gamma doc{i} " * 10)
-         for i in range(6)],
-        "repo string, path string, commit string, lang string, content string",
-    )
-    cfg = DedupConfig()
-    sig = compute_signatures(docs, cfg)
-    with_udf = {(r.doc_id, r.band_id, r.band_hash)
-                for r in band_table(sig, cfg).collect()}
-    fallback = {(r.doc_id, r.band_id, r.band_hash)
-                for r in band_table(sig.drop("bands"), cfg).collect()}
-    assert with_udf == fallback and len(with_udf) == 6 * cfg.lsh_bands
-
-
-def test_verify_pairs_mixed_null_shingles_falls_back_to_estimate(spark):
-    """Union of a shingled table with a minhash-only one (NULL shingles):
-    mixed pairs must verify via the MinHash jaccard estimate instead of
-    silently scoring 0.0 (the incremental_dedup history scenario)."""
-    from imageduplicatefinder_spark.config import DedupConfig
-    from imageduplicatefinder_spark.operators.signatures import compute_signatures
-    from imageduplicatefinder_spark.operators.verify import verify_pairs
+def test_verify_pairs_null_shingles_are_unknown(spark, monkeypatch):
+    """A pair with a NULL shingle side (a hand-built table) is UNKNOWN —
+    NULL jaccard/containment/verified, dropped by filter(verified),
+    never a silent 0.0 — on the broadcast and the shuffle join alike,
+    while pairs with both sets still score."""
+    import imageduplicatefinder_spark.operators.verify as V
 
     cfg = DedupConfig()
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
-    schema = "repo string, path string, commit string, lang string, content string"
-    hist = compute_signatures(
-        spark.createDataFrame([("r", "old.py", "c0", "py", base)], schema),
-        cfg, keep_shingles=False,
+    sigs = spark.createDataFrame(
+        [(1, 5, [1, 2, 3]), (2, 5, None), (3, 5, [1, 2, 3])],
+        "doc_id long, simhash long, shingles array<long>",
     )
-    new = compute_signatures(
-        spark.createDataFrame(
-            [("r", "new.py", "c1", "py", base + " tiny tail")], schema
-        ),
-        cfg, keep_shingles=True,
-    )
-    combined = hist.unionByName(new, allowMissingColumns=True)
-    ids = sorted(r.doc_id for r in combined.select("doc_id").collect())
-    pairs = spark.createDataFrame([tuple(ids)], "src long, dst long")
-    row = verify_pairs(pairs, combined, cfg, allow_null_shingles=True).collect()[0]
-    assert row.jaccard > 0.8        # estimate, not the silent 0.0
-    assert row.verified
-    # without the flag, a mixed pair is honestly UNKNOWN (NULL), never
-    # a silent 0.0 — filter(verified) drops it
-    strict = verify_pairs(pairs, combined, cfg).collect()[0]
-    assert strict.jaccard is None and strict.verified is None
+    pairs = spark.createDataFrame([(1, 2), (1, 3)], "src long, dst long")
+    for cap in (V.BROADCAST_VERIFY_MAX_SIGS, 0):
+        monkeypatch.setattr(V, "BROADCAST_VERIFY_MAX_SIGS", cap)
+        got = {(r.src, r.dst): r
+               for r in V.verify_pairs(pairs, sigs, cfg).collect()}
+        unknown = got[(1, 2)]
+        assert unknown.hamming == 0
+        assert unknown.jaccard is None and unknown.containment is None
+        assert unknown.verified is None
+        assert got[(1, 3)].jaccard == 1.0 and got[(1, 3)].verified
+        kept = V.verify_pairs(pairs, sigs, cfg, only_verified=True).collect()
+        assert [(r.src, r.dst) for r in kept] == [(1, 3)]
 
 
 def _label_propagation(es):

@@ -313,46 +313,13 @@ def test_fetch_urls_fake_and_error_isolation(spark):
     real = fetch_urls(urls, fetcher="urllib").collect()
     assert all(r.status == -1 and r.data is None for r in real)
 
-def test_incremental_dedup_minhash_only_history(spark, tmp_path):
-    """The advertised 'minhash-only historical table' scenario: history
-    signatures built with keep_shingles=False must still verify
-    new-vs-history near-dups (per-row MinHash-estimate fallback in
-    verify_pairs), not silently emit zero edges."""
-    from imageduplicatefinder_spark.config import DedupConfig
-    from imageduplicatefinder_spark.operators.signatures import compute_signatures
-    from imageduplicatefinder_spark.streaming.dedup_stream import incremental_dedup
-
-    cfg = DedupConfig()
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
-    hist_docs = spark.createDataFrame(
-        [("r", "old/base.py", "c0", "py", base)],
-        "repo string, path string, commit string, lang string, content string",
-    )
-    hist_sigs = compute_signatures(hist_docs, cfg, keep_shingles=False)
-
-    t0 = datetime.datetime(2024, 1, 1)
-    src = spark.createDataFrame(
-        [(t0, "r", "new/neardup.py", "c2", "py", base + "one tiny extra tail")],
-        STREAM_SCHEMA,
-    )
-    srcdir = str(tmp_path / "mh_src")
-    src.coalesce(1).write.parquet(srcdir)
-    stream = spark.readStream.schema(src.schema).parquet(srcdir)
-
-    edges_out = str(tmp_path / "mh_edges")
-    q = incremental_dedup(
-        stream, hist_sigs, cfg, edges_out, str(tmp_path / "mh_ckpt")
-    )
-    q.awaitTermination(120)
-    edges = spark.read.parquet(edges_out).collect()
-    assert len(edges) == 1  # the new-vs-history pair verified via estimate
-
 
 def test_stateful_dup_tracker_first_seen_across_chunks(spark, tmp_path):
     """First-seen must be the global (ts, path) minimum even when one
-    key's rows span several Arrow chunks (arrow.maxRecordsPerBatch=4096):
-    place the earliest row LAST in a >4096-row single-partition batch so
-    it lands in a later chunk."""
+    key's rows span several Arrow chunks: with
+    arrow.maxRecordsPerBatch=1024 the 5,000 rows of one key arrive as 5
+    chunks, and the earliest row is placed LAST in the single-partition
+    batch so it lands in a later chunk."""
     from imageduplicatefinder_spark.streaming.dedup_stream import stateful_dup_tracker
 
     t0 = datetime.datetime(2024, 1, 1)
@@ -366,15 +333,21 @@ def test_stateful_dup_tracker_first_seen_across_chunks(spark, tmp_path):
     srcdir = str(tmp_path / "chunk_src")
     src.coalesce(1).write.parquet(srcdir)
     stream = spark.readStream.schema(src.schema).parquet(srcdir)
-    q = (
-        stateful_dup_tracker(stream)
-        .writeStream.format("memory")
-        .queryName("dup_state_chunks")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "1024")
+    try:
+        q = (
+            stateful_dup_tracker(stream)
+            .writeStream.format("memory")
+            .queryName("dup_state_chunks")
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+    finally:
+        spark.conf.set(conf, saved)
     out = spark.sql("select * from dup_state_chunks").collect()
     assert len(out) == 1
     assert out[0].first_path == "true_first.py"
@@ -405,7 +378,7 @@ def test_ingest_window_stats_counts_bytes_not_chars(spark, tmp_path):
 
 
 def test_incremental_dedup_records_band_cap_stats(spark, tmp_path):
-    """capped_bands' visibility contract: a mega-band thinned in a
+    """The hot-band cap's visibility contract: a mega-band thinned in a
     micro-batch must leave a record at <edges_out>_band_stats."""
     from imageduplicatefinder_spark.config import DedupConfig
     from imageduplicatefinder_spark.operators.signatures import compute_signatures

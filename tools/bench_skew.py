@@ -67,8 +67,9 @@ def main() -> None:
     from imageduplicatefinder_spark.config import DedupConfig
     from imageduplicatefinder_spark.operators.lsh import (
         band_table,
-        capped_bands,
-        pairs_from_capped_bands,
+        hot_band_stats,
+        kept_bands_given_hot,
+        pairs_from_kept_bands,
     )
     from imageduplicatefinder_spark.operators.prefix_join import (
         exact_candidates,
@@ -130,14 +131,14 @@ def main() -> None:
 
     def lsh(capped: bool):
         c = cfg if capped else DedupConfig(max_band_size=10**9)
-        bands = band_table(sigs, c)
-        kept, stats = capped_bands(bands, c)
-        n_capped = stats.filter(F.col("capped")).count()
+        bands = band_table(sigs, c).localCheckpoint(eager=False)
+        hot = hot_band_stats(bands, c)
+        kept = kept_bands_given_hot(bands, hot, c)
         raw = raw_join_rows(kept)
-        pairs = pairs_from_capped_bands(kept)
+        pairs = pairs_from_kept_bands(kept)
         out = {"raw_join_rows": raw,
                "distinct_candidates": pairs.count(),
-               "capped_bands": n_capped}
+               "capped_bands": hot.count()}
         if do_verify:
             # what the cap actually costs: boilerplate-dominated SHORT
             # docs can pass the containment>=0.8 verify rule through the
