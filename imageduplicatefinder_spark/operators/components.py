@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 #: contraction graphs every consumer now feeds CC (component stars,
 #: verified rep-rep edges) — while 2M edges collect as ~32 MB of two
 #: int64 columns: the same guarded bounded-collect dispatch as
-#: TILE_MAX_SKETCHES and BROADCAST_VERIFY_MAX_SIGS, with star
+#: KEY_JOIN_MIN_SKETCHES and BROADCAST_VERIFY_MAX_SIGS, with star
 #: contraction remaining the only scalable shape beyond the bound. 0
 #: forces the distributed rounds (the convergence/iteration contract
 #: tests monkeypatch it).

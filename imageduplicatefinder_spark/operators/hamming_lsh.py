@@ -1,70 +1,55 @@
-"""Hamming-radius search via pigeonhole multi-block bit-chunk LSH.
+"""Hamming-radius search over 64-bit sketches.
 
-Distributed replacement for the reference's BK-tree radius query over
-64-bit sketches (ref: src/main/java/index/BKTreeIndex.java:34-50
-``withinHamming`` — pointer-chasing DFS with triangle-inequality
-pruning). The distributed formulation generalizes the pigeonhole
-principle to combination keys (the shape of Manku/Jain/Das Sarma,
-"Detecting Near-Duplicates for Web Crawling", WWW'07 §3):
+Distributed replacement for the reference's BK-tree radius query
+(ref: src/main/java/index/BKTreeIndex.java:34-50 ``withinHamming`` —
+pointer-chasing DFS with triangle-inequality pruning). One rule picks
+the physical form, from the distinct-sketch count S (one count job)
+and the radius (``_key_scheme``):
 
-  split the 64-bit sketch into B = radius + m disjoint bit blocks.
-  A pair within Hamming distance ``radius`` has at most ``radius``
-  differing bits, which can touch at most ``radius`` blocks, so AT
-  LEAST m blocks are bit-identical in BOTH sketches. Enumerating all
-  C(B, m) block combinations and equi-joining on
-  (combo_id, packed combo value) therefore finds EVERY pair within
-  the radius — exhaustive, no recall loss — and
-  ``bit_count(a XOR b) <= radius`` verifies JVM-side
+- S < ``KEY_JOIN_MIN_SKETCHES`` (50,000): an exact tiled all-pairs
+  XOR/popcount kernel (``_close_pairs_tiles``: ``block_pair_tiles``
+  over the distinct-sketch table, SWAR popcount, no join). A
+  connected-components consumer gets a per-tile spanning forest
+  instead (``_forest_edges_tiles``), so the edge volume stays ~linear
+  in sketches.
+- S >= 50,000: a pigeonhole key join, generalized to combination keys
+  (the shape of Manku/Jain/Das Sarma, "Detecting Near-Duplicates for
+  Web Crawling", WWW'07 §3). Split the sketch into B = radius + m
+  disjoint bit blocks. A pair within Hamming distance ``radius`` has
+  at most ``radius`` differing bits, which touch at most ``radius``
+  blocks, so AT LEAST m blocks are bit-identical in BOTH sketches.
+  Equi-joining on (combo_id, packed combo value) over all C(B, m)
+  block combinations therefore finds EVERY pair within the radius,
+  and ``bit_count(a XOR b) <= radius`` verifies JVM-side
   (ref: hash/Hamming.java:4-6).
 
-``m`` (``n_agree``) trades join-key selectivity against explode
-fan-out:
-
-- m=1 is classic single-chunk pigeonhole: radius+1 rows per sketch,
-  but at radius 10 the chunks are 5-6 bits (<=64 distinct values per
-  chunk), so with S distinct sketches each key holds ~S/64 rows and
-  candidate generation degenerates toward O(S^2/64).
-- m=2 at radius 10 gives 12 blocks, C(12,2)=66 combo rows per sketch
-  with 10-12-bit packed keys: ~32x more key values per combo, so the
-  expected candidate count drops ~5x on uniform sketches and far more
-  on clustered real-world sketch distributions, for a 6x explode cost.
-  The default picks m=2 whenever single chunks would be narrower than
-  10 bits (radius >= 6).
-
-Residual hot keys (e.g. an all-zero block pair across many sketches)
-are bounded by an optional salted per-key cap with drop accounting
-(``capped_sketch_keys``, mirroring operators/lsh.py
-``kept_bands_given_hot``);
-without the cap the operator is exact.
+The radius fixes m: m=1 (radius+1 single chunks) while chunks are at
+least 10 bits wide (radius <= 5); m=2 below that, since at radius 10
+single chunks are 5-6 bits and ~20% of ALL sketch pairs would collide
+in one — m=2 gives 12 blocks, C(12,2)=66 combo keys of 10-12 bits.
+Even m=2 goes near-quadratic on dispersed corpora, so at m=2 a salted
+per-key cap of ``AUTO_MAX_KEY_GROUP`` (``capped_sketch_keys``,
+mirroring operators/lsh.py ``kept_bands_given_hot``) bounds the
+candidates linearly in S; the driver gets a ``HammingAutoCapWarning``
+and ``hamming_key_stats`` lists the capped keys. Everywhere else the
+search is exact.
 
 Scale shape:
-- the combo join runs over DISTINCT sketch values, not documents — the
+- both forms run over DISTINCT sketch values, not documents — the
   dominant skew source (many docs sharing one sketch, e.g. boilerplate
-  families) collapses to one row before the explode; same-sketch doc
-  pairs are emitted by a separate cheap equi-join on the sketch;
-- candidate dedup is a distinct() on sketch pairs (bounded by the
-  verified output size x combo count, not by doc pairs);
+  families) collapses to one row; same-sketch doc pairs are emitted by
+  a separate cheap equi-join on the sketch;
+- the key join dedups candidates with a distinct() on sketch pairs
+  (bounded by the verified output size x combo count, not by doc
+  pairs);
 - for a connected-components consumer, ``hamming_edges`` emits
   rep->member star edges per sketch group plus ONE rep-rep edge per
-  close sketch pair — linear in (docs + close sketch pairs), never
-  quadratic in group size, with identical components.
+  close sketch pair (or spanning-forest edge) — linear in (docs +
+  close sketch pairs), never quadratic in group size, with identical
+  components.
 
 Works for ANY 64-bit sketch family (SimHash, the gradient-sign family
 in functions/fingerprints.py, or an externally-computed pHash).
-
-Round-6 kernel dispatch: the key join's raw output is Sum_key |group|^2
-rows, which on CLUSTERED sketch corpora (near-dup families -> similar
-sketches -> shared chunk values) explodes far past the uniform estimate
-— measured 1.62e9 joined rows for 49.7k distinct sketches at sf1.0,
-versus 18.5M true close pairs. In EXACT mode (no explicit ``n_agree``,
-no engaged cap) at or below ``TILE_MAX_SKETCHES`` distinct sketches,
-the operator therefore runs a tiled all-pairs XOR/popcount kernel
-instead (``_close_pairs_tiles``: ``block_pair_tiles`` over the
-distinct-sketch table, SWAR popcount, no join at all);
-connected-components consumers additionally get a per-tile spanning
-forest (``_forest_edges_tiles``) so the edge volume stays ~linear in
-sketches. The pigeonhole key join remains the
-dispersed/web-scale path, where the auto cap bounds it linearly.
 """
 
 from __future__ import annotations
@@ -87,12 +72,11 @@ _LOG = logging.getLogger(__name__)
 
 
 class HammingAutoCapWarning(UserWarning):
-    """Raised (as a warning) when ``max_key_group="auto"`` resolves to a
-    real per-key cap, i.e. the result became approximate: per-key
-    groups deeper than ``AUTO_MAX_KEY_GROUP`` were down-sampled and
-    true pairs whose ONLY agreeing block combination was a capped key
-    are dropped. Audit with ``hamming_key_stats``; pass
-    ``max_key_group=None`` for exact mode at any scale."""
+    """Raised (as a warning) when the m=2 key join caps its per-key
+    groups, i.e. the result became approximate: groups deeper than
+    ``AUTO_MAX_KEY_GROUP`` were down-sampled and true pairs whose ONLY
+    agreeing block combination was a capped key are dropped. Audit with
+    ``hamming_key_stats``."""
 
 
 def _chunk_widths(bits: int, n_chunks: int) -> list[int]:
@@ -100,81 +84,61 @@ def _chunk_widths(bits: int, n_chunks: int) -> list[int]:
     return [base + 1] * rem + [base] * (n_chunks - rem)
 
 
-#: distinct-sketch count above which the auto policy switches to m=2
-#: block-pair keys. The two schemes trade OPPOSITE failure modes: with
-#: S dispersed sketches, random chunk collisions cost ~0.203*S^2/2
-#: candidates at m=1 vs ~0.04*S^2/2 at m=2 (5x less); but each TRUE
-#: close pair (hamming<=10) duplicates into ~C(12-k,2)~45-66 combo
-#: keys at m=2 vs ~11-k~9 chunks at m=1 (~5x more pre-distinct join
-#: output). m=2 wins when S^2 collisions dominate true pairs —
-#: measured: 4 971 clustered sketches (sf0.1) m=1 3.1 s vs m=2 8.1 s;
-#: 64 k dispersed sketches m=1 416M candidates vs m=2 91M (BENCH.md
-#: round 3). 50 000 puts the switch where the S^2 term dominates any
-#: plausible true-pair density.
-AUTO_M2_MIN_SKETCHES = 50_000
+#: distinct-sketch count S from which the search leaves the exact
+#: tiles for the pigeonhole key join. Tiles cost S^2/2 popcounts
+#: (measured 3.0e7 pair-checks/s per core); the key join's raw output
+#: is Sum_key |group|^2 rows, which on CLUSTERED sketches with narrow
+#: keys runs far past the true pairs (1.62e9 joined rows for 49.7k
+#: clustered sketches at sf1.0 on radius-10 single chunks). Measured
+#: on local[4], clustered sketches (20% in 5-member families), equal
+#: pair sets, the key join run first (so it also paid the session
+#: warm-up):
+#:
+#:   S         radius  key join  tiles
+#:   20,000    5       10.4 s    11.1 s
+#:   49,000    5       11.5 s    21.7 s
+#:   100,000   5       13.6 s    75.6 s
+#:   100,000   2       11.9 s    66.0 s
+#:
+#: At radius >= 6 this is also where the per-key cap engages — below
+#: it the cap would never trigger anyway (every key group is tiny) —
+#: so one threshold serves every radius.
+KEY_JOIN_MIN_SKETCHES = 50_000
 
-#: auto per-key cap policy (round-3 verdict: make the safe thing the
-#: default). At radius >= _AUTO_CAP_MIN_RADIUS the packed combo keys
-#: are narrow enough that DISPERSED sketch corpora go near-quadratic
-#: even at m=2 (uniform 64-bit sketches: ~91M candidates at 64k, x~19
-#: at 256k — BENCH.md round 3); with a per-key cap candidates are
+#: per-key cap of the m=2 key join (radius >= 6). There the packed
+#: combo keys are narrow enough that DISPERSED sketch corpora go
+#: near-quadratic even at m=2 (uniform 64-bit sketches: ~91M candidates
+#: at 64k, x~19 at 256k — BENCH.md round 3); with a per-key cap
+#: candidates are
 #:   <= S * C(radius+m, m) * cap   — LINEAR in S
 #: (measured: cap 32 gives growth exponent 0.211 at 64k->256k, 45.0M ->
 #: 60.3M candidates, while cap 128 barely engages — uniform m=2 key
 #: groups at 256k run 62-250 deep, so 128 leaves the quadratic mostly
 #: intact at exponent 1.53; BENCH.md rounds 3-4, "Bounded radius-10
-#: Hamming plan"). The cap engages only past AUTO_CAP_MIN_SKETCHES
-#: distinct sketches, so small and clustered corpora — where every key
-#: group is tiny and the cap would never trigger anyway — skip the
-#: group-size pass entirely and keep byte-identical exact results (the
-#: driver-scale hash-matches are unaffected; pinned by
-#: test_hamming_auto_cap_*). Exact mode at any scale stays one explicit
-#: ``max_key_group=None`` away, and ``hamming_key_stats`` surfaces
-#: exactly which keys a cap truncated.
-AUTO_CAP_MIN_SKETCHES = 50_000
+#: Hamming plan"). ``hamming_key_stats`` surfaces exactly which keys
+#: the cap truncated.
 AUTO_MAX_KEY_GROUP = 32
-_AUTO_CAP_MIN_RADIUS = 6
-
-#: distinct-sketch count at or below which the EXACT tiled all-pairs
-#: XOR/popcount kernel replaces the pigeonhole key join (auto policy
-#: only — explicit ``n_agree`` pins the key scheme, an engaged cap pins
-#: the capped key scheme). Rationale (guide §1.1 first-principles +
-#: measured): the key join's raw output is Sum_key |group|^2 JVM rows —
-#: 1.62e9 rows for the 49.7k CLUSTERED sketches at sf1.0 (m=1), ~20 s
-#: just to enumerate — while S^2/2 vectorized popcounts for the same S
-#: are ~1.2e9 SIMD lane-ops spread over B(B+1)/2 numpy tiles, ~2 s at
-#: local[32]. The join only wins once S^2 popcounts dwarf the true-pair
-#: candidate volume (dispersed corpora with S in the millions — where
-#: the auto CAP engages anyway and keeps the key join bounded). At the
-#: threshold, S^2/2 = 3.4e10 popcounts ~ a few seconds of cluster time;
-#: beyond it the capped key join's LINEAR candidate bound takes over.
-TILE_MAX_SKETCHES = 262_144
 #: target rows per tile block (tile = ~2 blocks -> xor temp stripes
 #: stay tens of MB; B(B+1)/2 tasks comfortably oversubscribe any core
 #: count reached at this S)
 _TILE_BLOCK_ROWS = 3072
 
 
-def _auto_max_key_group(radius: int, n_sketches: int | None) -> int | None:
-    """Resolve the ``max_key_group="auto"`` sentinel: the measured cap
-    for wide radii on large dispersed corpora, exact everywhere else."""
-    if radius < _AUTO_CAP_MIN_RADIUS or n_sketches is None:
-        return None
-    if n_sketches < AUTO_CAP_MIN_SKETCHES:
-        return None
-    return AUTO_MAX_KEY_GROUP
+def _auto_n_agree(radius: int) -> int:
+    """m, the number of blocks a close pair must agree on: single chunks
+    of >= 10 bits (radius <= 5) are selective enough on their own;
+    narrower chunks get pair-combination keys."""
+    return 1 if 64 // (radius + 1) >= 10 else 2
 
 
-def _auto_n_agree(radius: int, n_sketches: int | None = None) -> int:
-    # single chunks of >=10 bits (radius <= 5) are selective enough on
-    # their own; narrower chunks get pair-combination keys — but only
-    # once the corpus is large enough that dispersed-pair collisions
-    # (the S^2 term) dominate close-pair key duplication (see above)
-    if 64 // (radius + 1) >= 10:
-        return 1
-    if n_sketches is not None and n_sketches < AUTO_M2_MIN_SKETCHES:
-        return 1
-    return 2
+def _key_scheme(radius: int, n_sketches: int) -> tuple[int, int | None] | None:
+    """The one dispatch rule: None (exact tiles) below
+    ``KEY_JOIN_MIN_SKETCHES`` distinct sketches, else the key join's
+    (m, per-key cap) — the cap only at m=2."""
+    if n_sketches < KEY_JOIN_MIN_SKETCHES:
+        return None
+    m = _auto_n_agree(radius)
+    return m, AUTO_MAX_KEY_GROUP if m == 2 else None
 
 
 def _block_exprs(sketch_col: str, widths: list[int]) -> list[Column]:
@@ -195,28 +159,19 @@ def _block_exprs(sketch_col: str, widths: list[int]) -> list[Column]:
 def sketch_keys(
     sketches: DataFrame,
     radius: int,
-    n_agree: int | None = None,
     sketch_col: str = "simhash",
-    n_sketches: int | None = None,
 ) -> DataFrame:
     """(sketch, key_id, key_val) for the C(radius+m, m) pigeonhole
-    block-combination keys of each DISTINCT sketch value.
+    block-combination keys of each DISTINCT sketch value, m from
+    ``_auto_n_agree``.
 
     ``key_val`` packs the m block values of the combination into one
     long (total packed width <= 64 bits since the blocks partition the
-    sketch, so packing is collision-free). ``n_sketches`` (the distinct
-    sketch count, if the caller knows it) steers the auto m policy —
-    see ``AUTO_M2_MIN_SKETCHES``.
+    sketch, so packing is collision-free).
     """
-    m = _auto_n_agree(radius, n_sketches) if n_agree is None else n_agree
-    if m < 1:
-        raise ValueError(f"n_agree must be >= 1, got {m}")
+    _validate_radius(radius)
+    m = _auto_n_agree(radius)
     n_blocks = radius + m
-    if n_blocks > 64:
-        raise ValueError(
-            f"radius + n_agree = {n_blocks} exceeds 64: blocks would be "
-            "empty and the join would silently lose recall"
-        )
     widths = _chunk_widths(64, n_blocks)
     blocks = _block_exprs("sketch", widths)
     combo_vals: list[Column] = []
@@ -322,8 +277,8 @@ def _close_positions(A, B, diag: bool, radius: int):
 
 def _close_pairs_tiles(src: DataFrame, radius: int, n_sk: int) -> DataFrame:
     """EXACT (sk_a, sk_b, hamming) pairs over distinct sketches via
-    tiled vectorized XOR/popcount — the clustered/moderate-S regime of
-    the dispatch (see ``TILE_MAX_SKETCHES``). Identical output contract
+    tiled vectorized XOR/popcount — the S < ``KEY_JOIN_MIN_SKETCHES``
+    side of the dispatch. Identical output contract
     to the key-join form: sk_a < sk_b (signed), 0 < hamming <= radius."""
     import numpy as np
     import pandas as pd
@@ -393,9 +348,9 @@ def _contract_forest(forest: DataFrame) -> DataFrame:
 
     Boundedness: the input is the tile forests — at most
     ``sum_tiles (nodes_in_tile - 1) <= 2 * n_blocks * S`` edges of two
-    longs, and the tile dispatch caps S at ``TILE_MAX_SKETCHES``, so
-    the single task tops out at a few hundred MB even at the dispatch
-    boundary (12 MB at the sf1.0 bench). This is the same
+    longs, and the tile dispatch keeps S below
+    ``KEY_JOIN_MIN_SKETCHES``, so the single task tops out at tens of
+    MB even at the dispatch boundary. This is the same
     bounded-single-pass reasoning as the guarded driver collects, run
     executor-side; beyond the cap the pigeonhole path never reaches
     this operator."""
@@ -427,69 +382,42 @@ def _contract_forest(forest: DataFrame) -> DataFrame:
 
 
 def _close_sketch_pairs(
-    sig: DataFrame,
-    radius: int,
-    n_agree: int | None,
-    max_key_group: int | str | None,
-    forest: bool = False,
+    sig: DataFrame, radius: int, forest: bool = False
 ) -> DataFrame:
     """(sk_a, sk_b, hamming) over DISTINCT sketches, sk_a < sk_b,
     0 < hamming <= radius. ``sig`` must expose a ``sketch`` column and
-    be materialized by the caller. ``max_key_group`` accepts the
-    ``"auto"`` sentinel (see ``_auto_max_key_group``).
+    be materialized by the caller.
 
     ``forest=True`` (connected-components consumers only) lets the tile
     kernel emit a connectivity-preserving spanning subset instead of
     every close pair — same components, orders of magnitude fewer edge
     rows on clustered corpora; the returned frame then has no
     ``hamming`` column on the tile path."""
-    n_sk = None
-    src = sig
-    # the tile dispatch, the auto m policy and the auto-cap policy all
-    # need the distinct-sketch count (one cheap fixed-width count job,
-    # AQE-style runtime stats); the distinct frame is materialized and
-    # reused by whichever kernel wins the dispatch
-    need_count = n_agree is None or (
-        max_key_group == "auto" and radius >= _AUTO_CAP_MIN_RADIUS
-    )
-    if need_count:
-        src = sig.select("sketch").distinct().localCheckpoint(eager=False)
-        n_sk = src.count()
-    if max_key_group == "auto":
-        max_key_group = _auto_max_key_group(radius, n_sk)
-        if max_key_group is not None:
-            # the result just became approximate — make that loud on the
-            # driver (ADVICE r4: the silent exact->approximate flip past
-            # AUTO_CAP_MIN_SKETCHES had no runtime signal)
-            msg = (
-                f"hamming auto cap engaged: {n_sk} distinct sketches >= "
-                f"{AUTO_CAP_MIN_SKETCHES} at radius {radius} — per-key "
-                f"groups capped at {max_key_group}; pairs whose only "
-                "agreeing block combination was a capped key are dropped. "
-                "Pass max_key_group=None for exact mode; audit drops with "
-                "hamming_key_stats()."
-            )
-            warnings.warn(msg, HammingAutoCapWarning, stacklevel=4)
-            _LOG.warning(msg)
-    # kernel dispatch: EXACT mode at moderate distinct-sketch counts
-    # runs the tiled all-pairs popcount kernel (clustered sketches make
-    # the key join's Sum|group|^2 row enumeration the bottleneck —
-    # see TILE_MAX_SKETCHES); an explicit n_agree pins the key scheme,
-    # and an engaged cap keeps the capped key scheme (its approximate
-    # semantics are part of that regime's contract)
-    if (
-        n_agree is None
-        and max_key_group is None
-        and n_sk is not None
-        and n_sk <= TILE_MAX_SKETCHES
-    ):
+    # the dispatch reads the distinct-sketch count (one cheap
+    # fixed-width count job, AQE-style runtime stats); the distinct
+    # frame is materialized and reused by whichever kernel runs
+    src = sig.select("sketch").distinct().localCheckpoint(eager=False)
+    n_sk = src.count()
+    scheme = _key_scheme(radius, n_sk)
+    if scheme is None:
         if forest:
             return _contract_forest(_forest_edges_tiles(src, radius, n_sk))
         return _close_pairs_tiles(src, radius, n_sk)
-    keys = sketch_keys(src, radius, n_agree=n_agree, sketch_col="sketch",
-                       n_sketches=n_sk)
-    if max_key_group is not None:
-        keys, _ = capped_sketch_keys(keys, max_key_group)
+    _, cap = scheme
+    keys = sketch_keys(src, radius, sketch_col="sketch")
+    if cap is not None:
+        # the result just became approximate — make that loud on the
+        # driver, not only in hamming_key_stats
+        msg = (
+            f"hamming key join capped: {n_sk} distinct sketches >= "
+            f"{KEY_JOIN_MIN_SKETCHES} at radius {radius} — per-key "
+            f"groups capped at {cap}; pairs whose only agreeing block "
+            "combination was a capped key are dropped. Audit drops with "
+            "hamming_key_stats()."
+        )
+        warnings.warn(msg, HammingAutoCapWarning, stacklevel=4)
+        _LOG.warning(msg)
+        keys, _ = capped_sketch_keys(keys, cap)
     # a self-join scans its input twice; materialize the tiny distinct
     # sketch->key table instead of recomputing the upstream lineage
     keys = keys.localCheckpoint(eager=False)
@@ -527,25 +455,17 @@ def hamming_pairs(
     radius: int = 10,
     id_col: str = "doc_id",
     sketch_col: str = "simhash",
-    n_agree: int | None = None,
-    max_key_group: int | str | None = "auto",
 ) -> DataFrame:
     """Pairs of rows within ``radius`` Hamming distance on a 64-bit
-    sketch column (pigeonhole multi-block LSH, see module docstring).
-    EXACT below ``AUTO_CAP_MIN_SKETCHES`` (50k) distinct sketches or
-    radius < 6; APPROXIMATE beyond under the default
-    ``max_key_group="auto"`` — a per-key cap of ``AUTO_MAX_KEY_GROUP``
-    engages (with a ``HammingAutoCapWarning`` on the driver) and true
-    pairs whose only agreeing block combination was a capped key are
-    dropped. No cartesian product in the plan at any setting.
-
-    In exact mode at <= ``TILE_MAX_SKETCHES`` distinct sketches the
-    candidate kernel is the tiled all-pairs popcount (module
-    docstring) — same output, no key join. The auto cap bounds the
-    dispersed-corpus near-quadratic at wide radii without the caller
-    needing to know the failure mode. Pass ``None`` for exact mode at
-    any scale, an int for an explicit cap; audit what a cap truncated
-    with ``hamming_key_stats``.
+    sketch column (see module docstring for the dispatch). EXACT below
+    ``KEY_JOIN_MIN_SKETCHES`` (50,000) distinct sketches, where the
+    tiled popcount kernel runs, and at radius <= 5 at any size. From
+    50,000 distinct sketches at radius >= 6 the m=2 key join caps
+    per-key groups at ``AUTO_MAX_KEY_GROUP`` (with a
+    ``HammingAutoCapWarning`` on the driver): true pairs whose only
+    agreeing block combination was a capped key are dropped, and
+    ``hamming_key_stats`` lists the capped keys. No cartesian product
+    in the plan on either path.
 
     Output: (doc_a, doc_b, hamming) with doc_a < doc_b,
     hamming = bit_count(sketch_a XOR sketch_b) <= radius.
@@ -563,7 +483,7 @@ def hamming_pairs(
     # materialization each consumer re-runs the upstream sketch
     # computation (measured 3x wall on the portable-simhash caller)
     sig = sig.localCheckpoint(eager=False)
-    close = _close_sketch_pairs(sig, radius, n_agree, max_key_group)
+    close = _close_sketch_pairs(sig, radius)
 
     # map sketch pairs back to document pairs (sk_a != sk_b, so each
     # unordered doc pair appears exactly once; normalize by id)
@@ -578,7 +498,7 @@ def hamming_pairs(
             "hamming",
         )
     )
-    # same-sketch doc pairs: hamming 0, never seen by the key join
+    # same-sketch doc pairs: hamming 0, never seen by either kernel
     same = (
         sig.alias("p")
         .join(sig.alias("q"), on="sketch")
@@ -597,25 +517,20 @@ def hamming_edges(
     radius: int = 10,
     id_col: str = "doc_id",
     sketch_col: str = "simhash",
-    n_agree: int | None = None,
-    max_key_group: int | str | None = "auto",
 ) -> DataFrame:
     """Bounded edge set for a connected-components consumer: yields the
     SAME components as ``hamming_pairs`` (cluster parity is pytest-
-    pinned) without any same-key quadratic emission. Like
-    ``hamming_pairs``, EXACT below ``AUTO_CAP_MIN_SKETCHES`` distinct
-    sketches or radius < 6, APPROXIMATE beyond under the default
-    ``max_key_group="auto"`` (driver ``HammingAutoCapWarning`` when the
-    cap engages; ``None`` for exact mode at any scale).
+    pinned) without any same-key quadratic emission, under the same
+    dispatch — exact below ``KEY_JOIN_MIN_SKETCHES`` distinct sketches
+    or at radius <= 5, capped key join (``HammingAutoCapWarning``)
+    beyond.
 
     Per distinct sketch, docs sharing it form a star rep->member
-    (rep = min doc id); each close sketch pair contributes exactly ONE
-    rep_a->rep_b edge. |edges| = (docs in >=2-doc sketch groups) +
+    (rep = min doc id); each close sketch pair — on the tile path, each
+    edge of the per-tile spanning forest — contributes exactly ONE
+    rep_a->rep_b edge. |edges| <= (docs in >=2-doc sketch groups) +
     (close sketch pairs) — linear per family, vs O(family^2) for the
     all-pairs form.
-
-    ``max_key_group`` follows the same ``"auto"`` policy as
-    ``hamming_pairs``.
 
     Output: (src, dst) with src < dst.
     """
@@ -628,8 +543,7 @@ def hamming_edges(
     # a CC consumer needs connectivity, not every pair: the tile path
     # emits a per-tile spanning forest (same components, ~B x sketches
     # edges instead of the full close-pair set)
-    close = _close_sketch_pairs(sig, radius, n_agree, max_key_group,
-                                forest=True)
+    close = _close_sketch_pairs(sig, radius, forest=True)
     rep_edges = (
         close.join(reps.select(F.col("sketch").alias("sk_a"),
                                F.col("rep_id").alias("rep_a")), on="sk_a")
@@ -650,34 +564,23 @@ def hamming_key_stats(
     sketches: DataFrame,
     radius: int = 10,
     sketch_col: str = "simhash",
-    n_agree: int | None = None,
-    max_key_group: int | str | None = "auto",
 ) -> DataFrame:
-    """Drop-accounting companion for ``hamming_pairs``/``hamming_edges``
-    under a (possibly auto-resolved) per-key cap: one row per pigeonhole
-    key, ``(key_id, key_val, group_size, capped)``, under the SAME
-    m/cap policy the pair operators would resolve for this input — so a
-    caller can audit exactly which keys a cap truncated (``capped``
-    true) and how hot they were before deciding whether exact mode
-    (``max_key_group=None``) is worth the quadratic.
+    """Drop-accounting companion for ``hamming_pairs``/``hamming_edges``:
+    one row per pigeonhole key of the scheme the pair operators use
+    from ``KEY_JOIN_MIN_SKETCHES`` distinct sketches on,
+    ``(key_id, key_val, group_size, capped)``. ``capped`` is true for
+    the keys the m=2 per-key cap truncates, so a caller can audit
+    exactly which keys lost pairs and how hot they were.
 
-    When the resolved policy is "no cap" every ``capped`` is false and
-    the frame is still useful as a key-skew profile.
+    Below the threshold the pair operators run the exact tiles and drop
+    nothing; at radius <= 5 (m=1) nothing is capped. The frame is then
+    a key-skew profile with every ``capped`` false.
     """
-    _validate_radius(radius)
-    src = (
-        sketches.select(F.col(sketch_col).alias("sketch"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n_sk = src.count()
-    if max_key_group == "auto":
-        max_key_group = _auto_max_key_group(radius, n_sk)
-    keys = sketch_keys(src, radius, n_agree=n_agree, sketch_col="sketch",
-                       n_sketches=n_sk)
-    if max_key_group is None:
+    keys = sketch_keys(sketches, radius, sketch_col=sketch_col)
+    _, cap = _key_scheme(radius, KEY_JOIN_MIN_SKETCHES)
+    if cap is None:
         return keys.groupBy("key_id", "key_val").agg(
             F.count("*").alias("group_size")
         ).withColumn("capped", F.lit(False))
-    _, stats = capped_sketch_keys(keys, max_key_group)
+    _, stats = capped_sketch_keys(keys, cap)
     return stats

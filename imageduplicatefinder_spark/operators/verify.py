@@ -33,15 +33,16 @@ from imageduplicatefinder_spark.functions.fingerprints import hamming_distance_c
 from imageduplicatefinder_spark.operators.hamming_lsh import _popcount64
 
 #: signature-table row count at or below which verify_pairs BROADCASTS
-#: the attach side instead of shuffle-joining the pair table against it
-#: twice. The two shuffle joins move the pair table twice AND carry the
-#: first side's shingle array through the second exchange — at sf1.0
-#: the 46.4M-candidate prefix leg shuffled ~19 GB of arrays for a
-#: 43.8 s verify stage; with the broadcast attach the whole verify is
-#: one map-side stage over the materialized candidates. 200k rows of
-#: (doc_id, simhash, shingles) is ~100-200 MB broadcast — fine for the
-#: executors a cluster this size runs; beyond it the shuffle join is
-#: the only scalable shape and remains the fallback.
+#: the signatures to the vectorized kernel instead of shuffle-joining
+#: the pair table against them twice. The two shuffle joins move the
+#: pair table twice AND carry the first side's shingle array through
+#: the second exchange — at sf1.0 the 46.4M-candidate prefix leg
+#: shuffled ~19 GB of arrays for a 43.8 s verify stage; broadcast, the
+#: whole verify is one map-side stage over the materialized
+#: candidates. 200k rows of (doc_id, simhash, shingles) is ~100-200 MB
+#: broadcast — fine for the executors a cluster this size runs; beyond
+#: it the shuffle join is the only scalable shape and remains the
+#: fallback.
 BROADCAST_VERIFY_MAX_SIGS = 200_000
 
 #: padded-rank-matrix budget for the vectorized verify kernel: below
@@ -54,12 +55,10 @@ _PAD_MATRIX_MAX_BYTES = 256 * 1024 * 1024
 
 
 def _attach(pairs: DataFrame, signatures: DataFrame, side: str,
-            cols: list[str], broadcast: bool = False) -> DataFrame:
+            cols: list[str]) -> DataFrame:
     sel = signatures.select(
         F.col("doc_id").alias(side), *[F.col(c).alias(f"{c}_{side}") for c in cols]
     )
-    if broadcast:
-        sel = F.broadcast(sel)
     return pairs.join(sel, on=side)
 
 
@@ -301,22 +300,22 @@ def verify_pairs(
     the ``BROADCAST_VERIFY_MAX_SIGS`` guard and carries non-NULL,
     repeat-free shingle sets, verification runs as a broadcast +
     vectorized sorted-merge intersection kernel
-    (``_verify_pairs_vectorized``); otherwise as the broadcast or
-    shuffle ``array_intersect`` join below.
+    (``_verify_pairs_vectorized``); otherwise as the ``array_intersect``
+    join below (AQE still broadcasts a side under the session's
+    broadcast threshold).
     """
-    # one count serves both dispatches below — metadata-only when
-    # signatures is the pipeline's parquet checkpoint read-back
+    # the kernel's guard — metadata-only when signatures is the
+    # pipeline's parquet checkpoint read-back
     n_sigs = signatures.count()
     fast = _verify_pairs_vectorized(pairs, signatures, cfg,
                                     only_verified, n_sigs)
     if fast is not None:
         return fast
-    # attach-side dispatch (see BROADCAST_VERIFY_MAX_SIGS): broadcast vs
-    # shuffle join
+    # the kernel refused the table: too large, or ids, NULL or repeated
+    # shingles it cannot count — AQE still broadcasts a small side
     cols = ["simhash", "shingles"]
-    bc = n_sigs <= BROADCAST_VERIFY_MAX_SIGS
-    df = _attach(_attach(pairs, signatures, "src", cols, broadcast=bc),
-                 signatures, "dst", cols, broadcast=bc)
+    df = _attach(_attach(pairs, signatures, "src", cols),
+                 signatures, "dst", cols)
 
     inter = F.size(F.array_intersect("shingles_src", "shingles_dst"))
     sa = F.size("shingles_src")

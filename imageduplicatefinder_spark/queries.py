@@ -610,7 +610,7 @@ def q_char_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Sum df^2 row enumeration is quadratic in df. This oracle has NO
     # df cap, so hot keys cannot be dropped; two output-identical
     # physical forms replace the join (same dispatch idiom as
-    # TILE_MAX_SKETCHES):
+    # KEY_JOIN_MIN_SKETCHES in operators/hamming_lsh.py):
     #
     # 1. BITSET KERNEL (primary, `_char_pairs_bitset`): the tiny gram
     #    vocabulary is exactly what makes the join blow up AND what
@@ -4248,10 +4248,11 @@ def q_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference-parity predicate, ref: hash/Hamming.java:4-6,
     BKTreeIndex.java:42-43).
 
-    Scale path: pigeonhole bit-chunk LSH (operators/hamming_lsh.py) —
-    an equi-join on (chunk_id, chunk_value) over radius+1 disjoint bit
-    chunks is EXHAUSTIVE for hamming <= radius, so the result equals
-    the O(n^2) oracle below with no cartesian product in the plan.
+    Scale path: ``hamming_pairs`` (operators/hamming_lsh.py) — exact
+    tiled XOR/popcount below 50,000 distinct sketches, a pigeonhole
+    block-pair key join with a per-key cap above — so at this scale the
+    result equals the O(n^2) oracle below, with no cartesian product in
+    the plan.
     """
     docs = load_table(spark, sf_dir, "documents")
     from imageduplicatefinder_spark.operators.hamming_lsh import hamming_pairs
@@ -4280,9 +4281,10 @@ def q_simhash_radius_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ref: app/Commands.java:104-160, index/BKTreeIndex.java:34-50,
     cluster/Clusterer.java:6-30) — in its SQL-checkable form: portable
     SimHash sketches, radius-10 edges from the BOUNDED
-    ``hamming_edges`` emitter (multi-block pigeonhole combination keys;
-    rep->member star edges per same-sketch family + one rep-rep edge
-    per close sketch pair — never quadratic in family size), min-label
+    ``hamming_edges`` emitter (exact tile spanning forest below 50,000
+    distinct sketches, capped pigeonhole key join above; rep->member
+    star edges per same-sketch family + one rep-rep edge per close
+    sketch pair — never quadratic in family size), min-label
     connected components, member counts. Every emitted node has >= 1
     edge, so clusters have >= 2 members by construction (the
     reference's singleton drop, Commands.java:149-151).
@@ -4544,7 +4546,7 @@ def q_gradsign_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     gradient sign between positional resamples of the token-hash
     sequence, ref: hash/DHash.java:21-29) dispatched via
     ``DedupConfig(sketch="gradsign")`` (H4 --algo analog) through the
-    SAME bit-chunk Hamming LSH radius search as the SimHash family.
+    SAME ``hamming_pairs`` radius search as the SimHash family.
     Spark-only: the sketch uses the engine's vectorized token hash,
     which has no SQL analog (rows-only driver check; the family kernel
     is golden-tested in tests/test_fingerprints.py)."""

@@ -150,7 +150,8 @@ def incremental_dedup(
         # (license boilerplate) self-pairs quadratically on one
         # (band_id, band_hash) key — the exact skew the cap exists for
         new_banded = band_table(sigs, cfg).localCheckpoint(eager=False)
-        new_hot = hot_band_stats(new_banded, cfg)
+        # read twice (stats write, kept-bands join): aggregate once
+        new_hot = hot_band_stats(new_banded, cfg).localCheckpoint(eager=False)
         new_bands = kept_bands_given_hot(new_banded, new_hot, cfg)
         # drops must be visible, not silent — persist the capped-band
         # stats (history + this batch) next to the edges, replayed

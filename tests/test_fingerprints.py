@@ -263,3 +263,29 @@ def test_pipeline_char_tokenizer_end_to_end(spark, tmp_path):
     plan = {r.path: r.action for r in res.plan.collect()}
     assert set(plan) == {"a.py", "b.py"}      # ws-variant pair clusters
     assert sorted(plan.values()) == ["DELETE", "KEEP"]
+
+
+def test_widen_if_narrow_forces_each_path(spark, tmp_path):
+    """A scan of fewer files than defaultParallelism is hash-spread over
+    2x defaultParallelism partitions; a scan of at least that many
+    files comes back untouched. The rows are the same either way."""
+    from imageduplicatefinder_spark.operators.signatures import widen_if_narrow
+
+    par = spark.sparkContext.defaultParallelism
+    rows = spark.range(4 * par).withColumnRenamed("id", "doc_id")
+    narrow_dir, wide_dir = str(tmp_path / "narrow"), str(tmp_path / "wide")
+    rows.coalesce(1).write.parquet(narrow_dir)
+    rows.repartition(par).write.parquet(wide_dir)
+
+    narrow = spark.read.parquet(narrow_dir)
+    assert len(narrow.inputFiles()) == 1
+    widened = widen_if_narrow(narrow)
+    assert widened.rdd.getNumPartitions() == 2 * par
+
+    wide = spark.read.parquet(wide_dir)
+    assert len(wide.inputFiles()) >= par
+    assert widen_if_narrow(wide) is wide
+
+    expected = sorted(r.doc_id for r in rows.collect())
+    for df in (widened, wide):
+        assert sorted(r.doc_id for r in df.collect()) == expected

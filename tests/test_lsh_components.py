@@ -277,8 +277,9 @@ def test_cc_rounds_restore_session_confs(spark, monkeypatch):
 def test_verify_pairs_null_shingles_are_unknown(spark, monkeypatch):
     """A pair with a NULL shingle side (a hand-built table) is UNKNOWN —
     NULL jaccard/containment/verified, dropped by filter(verified),
-    never a silent 0.0 — on the broadcast and the shuffle join alike,
-    while pairs with both sets still score."""
+    never a silent 0.0 — at either kernel guard setting (the kernel
+    refuses the NULL row, so both take the join), while pairs with both
+    sets still score."""
     import imageduplicatefinder_spark.operators.verify as V
 
     cfg = DedupConfig()

@@ -416,6 +416,60 @@ def test_incremental_dedup_records_band_cap_stats(spark, tmp_path):
     assert "batch" in {r.side for r in rows}
 
 
+
+def test_incremental_dedup_aggregates_batch_hot_bands_once(
+    spark, tmp_path, monkeypatch
+):
+    """Each micro-batch computes its hot-band set once: the stats write
+    and the kept-bands join read the same materialized rows. Every
+    computed hot row bumps an accumulator, so the total must equal the
+    rows recorded at <edges_out>_band_stats (history + batch); a
+    recomputed batch hot set counts its rows again."""
+    from imageduplicatefinder_spark.config import DedupConfig
+    from imageduplicatefinder_spark.operators import lsh
+    from imageduplicatefinder_spark.operators.signatures import compute_signatures
+    from imageduplicatefinder_spark.streaming.dedup_stream import incremental_dedup
+
+    computed = spark.sparkContext.accumulator(0)
+    real_hot_band_stats = lsh.hot_band_stats
+
+    def counted_hot_band_stats(bands, cfg):
+        def seen(_):
+            computed.add(1)
+            return True
+
+        return real_hot_band_stats(bands, cfg).filter(
+            F.udf(seen, "boolean")("band_size"))
+
+    monkeypatch.setattr(lsh, "hot_band_stats", counted_hot_band_stats)
+
+    cfg = DedupConfig(max_band_size=4)
+    hist_docs = spark.createDataFrame(
+        [("r", "old/base.py", "c0", "py",
+          "unrelated historical content here " * 5)],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    hist_sigs = compute_signatures(hist_docs, cfg)
+    t0 = datetime.datetime(2024, 1, 1)
+    boiler = "identical license boilerplate tokens " * 10
+    src = spark.createDataFrame(
+        [(t0, "r", f"new/f{i}.py", f"c{i}", "py", boiler + f"tail{i} unique")
+         for i in range(12)],
+        STREAM_SCHEMA,
+    )
+    srcdir = str(tmp_path / "once_src")
+    src.coalesce(1).write.parquet(srcdir)
+    stream = spark.readStream.schema(src.schema).parquet(srcdir)
+    edges_out = str(tmp_path / "once_edges")
+    q = incremental_dedup(
+        stream, hist_sigs, cfg, edges_out, str(tmp_path / "once_ckpt")
+    )
+    q.awaitTermination(120)
+    sides = [r.side for r in
+             spark.read.parquet(edges_out + "_band_stats").collect()]
+    assert sides.count("batch") > 0  # the batch has hot bands
+    assert computed.value == len(sides)
+
 def test_incremental_dedup_continued_stream_compiles_nothing(spark, tmp_path):
     """A stream continued from its checkpoint runs its new batch ids on
     generated code that is already compiled (the batch id lives in the

@@ -115,10 +115,11 @@ ANNOTATED = {
         "asserted in tests/test_plan_quality.py); no cartesian"
     ),
     "simhash_hamming_pairs": (
-        "portable simhash (64 JVM aggregates, no Python) -> pigeonhole "
-        "multi-block combination-key equi-join (m=2 at radius 10: 66 "
-        "combos of 10-12-bit packed keys) -> bit_count verify; "
-        "exhaustive for hamming<=10 with no cartesian"
+        "portable simhash (64 JVM aggregates, no Python) -> distinct "
+        "sketches -> exact tiled XOR/popcount (block_pair_tiles, one "
+        "applyInPandas) below 50k distinct sketches, pigeonhole m=2 "
+        "block-pair key equi-join with a per-key cap of 32 above; "
+        "no cartesian"
     ),
     "simhash_radius_clusters": (
         "sketch -> radius -> cluster, the reference's full `idf cluster` "
