@@ -49,7 +49,7 @@ def main() -> None:
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--sink", choices=("count", "noop"), default="count")
     ap.add_argument("--candidates", default="lsh",
-                    help="pipeline candidate scheme (lsh|prefix|exact)")
+                    help="pipeline candidate scheme (lsh|prefix)")
     ap.add_argument("queries", nargs="*", default=None)
     args = ap.parse_args()
     names = args.queries or HEAVY

@@ -74,8 +74,7 @@ class DedupConfig:
     #   sweet spot). "prefix": AllPairs/PPJoin prefix filtering
     #   (operators/prefix_join.py) — EXACT for the verify rule, no
     #   recall knob, deterministic; the right choice for high-threshold
-    #   configs. "exact": full inverted-index self-join (exhaustive,
-    #   quadratic on hot shingles; correctness baseline).
+    #   configs.
     candidates: str = "lsh"
 
     # --- skew / scale handling -------------------------------------
@@ -102,15 +101,15 @@ class DedupConfig:
             raise ValueError(f"unknown tokenizer {self.tokenizer!r}")
         if self.sketch not in ("simhash", "gradsign"):
             raise ValueError(f"unknown sketch family {self.sketch!r}")
-        if self.candidates not in ("lsh", "prefix", "exact"):
+        if self.candidates not in ("lsh", "prefix"):
             raise ValueError(f"unknown candidate scheme {self.candidates!r}")
 
     # identical config => identical hash => checkpoint reuse is safe
     def config_hash(self) -> str:
         knobs = asdict(self)
         # candidates DOES change which pairs are found (lsh is
-        # probabilistic, prefix/exact are not), so non-default schemes
-        # get distinct hashes; the default is popped so the hashed blob
+        # probabilistic, prefix is not), so the non-default scheme
+        # gets a distinct hash; the default is popped so the hashed blob
         # stays byte-identical to the pre-knob format and existing
         # "lsh" checkpoints remain valid.
         if knobs.get("candidates") == "lsh":

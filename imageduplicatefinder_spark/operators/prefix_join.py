@@ -1,23 +1,31 @@
 """Prefix-filtering candidate generation (AllPairs/PPJoin family,
-Bayardo/Ma/Srikant WWW'07) over the pipeline's shingle sets.
+Bayardo/Ma/Srikant WWW'07) — the one home of the prefix rule.
 
-The third candidate scheme next to MinHash/LSH banding (probabilistic)
-and the exact inverted-index self-join (heavy): order shingles globally
-by (document frequency asc, shingle) and keep only each doc's RAREST
-``n - ceil(t*n) + 1`` shingles — any pair with Jaccard >= t provably
-shares a prefix shingle (if none of A's prefix shingles were in B,
-the intersection is at most ceil(t*n)-1 < t*n <= t*union). Exact: no
-recall knob, unlike LSH banding — which makes it the right default for
-high-threshold configs, while LSH remains the choice below the prefix
-scheme's selectivity sweet spot.
+Order tokens globally by (document frequency asc, token) and keep only
+each doc's RAREST ``n - ceil(t*n) + 1`` tokens — any pair with
+Jaccard >= t provably shares a prefix token (if none of A's prefix
+tokens were in B, the intersection is at most ceil(t*n)-1 < t*n <=
+t*union). Exact: no recall knob, unlike LSH banding — which makes it
+the right default for high-threshold configs, while LSH remains the
+choice below the prefix scheme's selectivity sweet spot. The prefix
+length is only a pruning bound: a longer prefix adds candidates but
+never changes what exact verification keeps.
+
+Callers:
+
+- the pipeline's ``candidates="prefix"`` scheme (``prefix_candidates``
+  over the signature table's shingle sets);
+- the catalog queries ``q_ngram_jaccard_prefix_pairs`` (J >= 0.8 over
+  word-3-gram shingles) and the fallback of
+  ``q_char_ngram_jaccard_pairs`` (J >= 0.7 over char 5-grams), which
+  build ``doc_tokens`` -> ``jaccard_prefix_pairs`` and then verify
+  each candidate with exact integer intersection counts.
 
 The pipeline's verify rule is ``jaccard >= t_j OR containment >= t_c``
 (operators/verify.py), so exact recall needs TWO legs:
 
-- Jaccard leg: prefix-vs-prefix self-join at t_j (both members of a
-  J >= t_j pair carry a shared shingle in their prefixes — Bayardo
-  Lemma 1 applied symmetrically), then the PPJoin length filter
-  min(|A|,|B|) >= t_j * max(|A|,|B|) before verification;
+- Jaccard leg: ``jaccard_prefix_pairs`` at t_j (prefix-vs-prefix
+  self-join with the PPJoin length filter inside the join);
 - containment leg: each doc's containment prefix (rarest
   ``n - ceil(t_c*n) + 1`` shingles) probed against the FULL inverted
   index — for a pair with |A∩B| >= t_c*min, the smaller side's
@@ -67,43 +75,62 @@ def _prefix_len(n: Column, threshold: float) -> Column:
     ).cast("int")
 
 
-def shingle_index(signatures: DataFrame) -> DataFrame:
-    """(doc_id, shingle, df) inverted index from the signatures table's
-    ``shingles`` column, with global document frequency attached."""
-    sh = signatures.filter(F.col("shingles").isNotNull()).select(
-        "doc_id", F.explode("shingles").alias("shingle")
-    )
-    df_tab = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    return sh.join(df_tab, on="shingle")
-
-
-def _doc_toks(indexed: DataFrame) -> DataFrame:
-    """(doc_id, toks) — each doc's shingles sorted by global (df,
-    shingle). Built ONCE per prefix-join: both threshold legs slice the
-    same sorted array, so the heavy groupBy + array_sort over the full
-    exploded index never runs twice (same one-pass rule as the LSH
-    band-stats fold, SCALE.md guard #6)."""
-    return indexed.groupBy("doc_id").agg(
-        F.array_sort(F.collect_list(F.struct("df", "shingle"))).alias("toks")
+def doc_tokens(tokens: DataFrame) -> DataFrame:
+    """(doc_id, toks) from (doc_id, tok) rows that are distinct per doc:
+    each doc's tokens as ``struct(df, tok)``, sorted by global (document
+    frequency asc, tok) — rarest first, so any threshold's prefix is a
+    head slice of the same array."""
+    df_tab = tokens.groupBy("tok").agg(F.count("*").alias("df"))
+    return tokens.join(df_tab, on="tok").groupBy("doc_id").agg(
+        F.array_sort(F.collect_list(F.struct("df", "tok"))).alias("toks")
     )
 
 
-def _slice_prefixes(per_doc: DataFrame, threshold: float,
-                    with_size: bool = False) -> DataFrame:
-    """(doc_id, shingle[, n]) keeping each doc's rarest
-    ``n - ceil(threshold*n) + 1`` shingles from a ``_doc_toks`` table.
-    threshold=0.0 keeps everything (the exact scheme). ``with_size``
-    rides the doc's set size on every prefix row so join-time filters
-    (length ratio, probe-side asymmetry) run map-side on the join
-    output instead of as two extra post-distinct joins."""
+def _slice_prefixes(per_doc: DataFrame, threshold: float) -> DataFrame:
+    """(doc_id, tok, n) keeping each doc's rarest
+    ``n - ceil(threshold*n) + 1`` tokens from a ``doc_tokens`` table.
+    threshold=0.0 keeps everything. The doc's set size ``n`` rides on
+    every prefix row so join-time filters (length ratio, probe-side
+    asymmetry) run map-side on the join output instead of as two extra
+    post-distinct joins."""
     p = _prefix_len(F.size("toks"), threshold)
-    size_cols = [F.size("toks").alias("n")] if with_size else []
     return per_doc.select(
         "doc_id",
         F.explode(
-            F.transform(F.slice("toks", F.lit(1), p), lambda s: s["shingle"])
-        ).alias("shingle"),
-        *size_cols,
+            F.transform(F.slice("toks", F.lit(1), p), lambda s: s["tok"])
+        ).alias("tok"),
+        F.size("toks").alias("n"),
+    )
+
+
+def jaccard_prefix_pairs(toks: DataFrame, threshold: float) -> DataFrame:
+    """(src, dst, n_src, n_dst), src < dst, from a ``doc_tokens`` table:
+    a superset of every pair with Jaccard >= ``threshold``, with both
+    set sizes. Prefix vs prefix self-join (both members of a J >= t pair
+    carry a shared token in their prefixes — Bayardo Lemma 1 applied
+    symmetrically) with the PPJoin length filter
+    min(|A|,|B|) >= t * max(|A|,|B|) applied inside the join: a J >= t
+    pair satisfies it, so filtering the raw join rows can only drop
+    non-qualifying pairs. Not distinct: a pair sharing several prefix
+    tokens appears once per shared token."""
+    jp = _slice_prefixes(toks, threshold).localCheckpoint(eager=False)
+    return (
+        jp.alias("a")
+        .join(jp.alias("b"), on="tok")
+        .filter(
+            (F.col("a.doc_id") < F.col("b.doc_id"))
+            & (
+                F.least("a.n", "b.n")
+                >= F.lit(float(threshold)) * F.greatest("a.n", "b.n")
+                - F.lit(1e-9)
+            )
+        )
+        .select(
+            F.col("a.doc_id").alias("src"),
+            F.col("b.doc_id").alias("dst"),
+            F.col("a.n").alias("n_src"),
+            F.col("b.n").alias("n_dst"),
+        )
     )
 
 
@@ -115,36 +142,17 @@ def prefix_candidates(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     guarantee). Exact duplicates are assumed collapsed upstream (the
     pipeline's sha256 pre-pass), mirroring the LSH path.
     """
-    indexed = shingle_index(signatures)
+    tokens = signatures.filter(F.col("shingles").isNotNull()).select(
+        "doc_id", F.explode("shingles").alias("tok")
+    )
     # every downstream consumer (both legs' prefixes AND the full sized
     # index) derives from the sorted per-doc token table, so that is
     # the one materialization; set sizes ride the prefix/index rows
-    # themselves (one extra int per row), so both legs' pruning filters
-    # run map-side on the join output BEFORE the distinct — the old
-    # shape distinct'ed the raw join fan-out first and then re-joined
-    # sizes twice
-    toks = _doc_toks(indexed).localCheckpoint(eager=False)
+    # themselves, so both legs' pruning filters run map-side on the
+    # join output BEFORE the distinct
+    toks = doc_tokens(tokens).localCheckpoint(eager=False)
 
-    # --- Jaccard leg: prefix vs prefix with the PPJoin length filter
-    # applied inside the join (a J >= t pair satisfies
-    # min(|A|,|B|) >= t * max(|A|,|B|), so filtering the raw join rows
-    # can only drop non-qualifying pairs) ----------------------------
-    jp = _slice_prefixes(toks, cfg.jaccard_threshold, with_size=True)
-    jp = jp.localCheckpoint(eager=False)
-    jac = (
-        jp.alias("a")
-        .join(jp.alias("b"), on="shingle")
-        .filter(
-            (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (
-                F.least("a.n", "b.n")
-                >= F.lit(float(cfg.jaccard_threshold))
-                * F.greatest("a.n", "b.n")
-                - F.lit(1e-9)
-            )
-        )
-        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-    )
+    jac = jaccard_prefix_pairs(toks, cfg.jaccard_threshold).select("src", "dst")
 
     # --- containment leg: containment prefix vs FULL inverted index,
     # SMALL side probing only — for a pair with |A∩B| >= t_c*min the
@@ -152,15 +160,13 @@ def prefix_candidates(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     # docstring: "the large side's probe only adds candidates"), so
     # probe rows with a strictly larger prefix side are dropped
     # map-side (halves the leg's fan-out; ties keep both orders) ------
-    cp = _slice_prefixes(toks, cfg.containment_threshold, with_size=True)
+    cp = _slice_prefixes(toks, cfg.containment_threshold)
     # the full index WITH sizes is just the per-doc token table
-    # re-exploded (threshold 0 keeps every shingle) — no sizes join
-    idx_sized = _slice_prefixes(toks, 0.0, with_size=True).withColumnRenamed(
-        "n", "n_x"
-    )
+    # re-exploded (threshold 0 keeps every token) — no sizes join
+    idx_sized = _slice_prefixes(toks, 0.0).withColumnRenamed("n", "n_x")
     cont = (
         cp.alias("p")
-        .join(idx_sized.alias("x"), on="shingle")
+        .join(idx_sized.alias("x"), on="tok")
         .filter(
             (F.col("p.doc_id") != F.col("x.doc_id"))
             & (F.col("p.n") <= F.col("x.n_x"))

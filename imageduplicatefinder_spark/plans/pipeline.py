@@ -38,10 +38,7 @@ from imageduplicatefinder_spark.operators.lsh import (
     pairs_from_kept_bands,
 )
 from imageduplicatefinder_spark.operators.plan import clusters_table, keeper_plan
-from imageduplicatefinder_spark.operators.prefix_join import (
-    exact_candidates,
-    prefix_candidates,
-)
+from imageduplicatefinder_spark.operators.prefix_join import prefix_candidates
 from imageduplicatefinder_spark.operators.signatures import (
     add_doc_id,
     compute_signatures,
@@ -218,16 +215,13 @@ class DedupPipeline:
             cands = self.ckpt.materialize(
                 "candidates", lambda: pairs_from_kept_bands(bands)
             )
-        elif cfg.candidates == "prefix":
-            # AllPairs/PPJoin prefix filtering: EXACT for the verify
-            # rule (no recall knob), deterministic — the high-threshold
-            # default; no band stage, no drop accounting to record
+        else:
+            # "prefix" — AllPairs/PPJoin prefix filtering: EXACT for the
+            # verify rule (no recall knob), deterministic — the
+            # high-threshold default; no band stage, no drop accounting
+            # to record
             cands = self.ckpt.materialize(
                 "candidates", lambda: prefix_candidates(signatures, cfg)
-            )
-        else:  # "exact": exhaustive inverted-index self-join
-            cands = self.ckpt.materialize(
-                "candidates", lambda: exact_candidates(signatures)
             )
         verified = self.ckpt.materialize(
             "edges",

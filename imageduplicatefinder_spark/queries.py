@@ -17,7 +17,6 @@ value-hash matches):
 
 from __future__ import annotations
 
-import logging
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -25,6 +24,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from imageduplicatefinder_spark.config import DedupConfig
+from imageduplicatefinder_spark.operators.prefix_join import (
+    doc_tokens,
+    jaccard_prefix_pairs,
+)
 from imageduplicatefinder_spark.operators.signatures import widen_if_narrow
 from imageduplicatefinder_spark.sources.tables import load_table
 
@@ -387,70 +390,42 @@ def q_ngram_jaccard_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH banding (probabilistic) and the full equi-join (exact, heavy):
     order shingles globally by (document frequency asc, shingle), keep
     only each doc's first |X| - ceil(0.8|X|) + 1 shingles (its ~20%
-    RAREST), and join prefix against prefix — any pair with J >= 0.8
-    provably shares a prefix shingle, so after exact verification the
+    RAREST), and join prefix against prefix under the PPJoin length
+    filter (operators/prefix_join.py ``jaccard_prefix_pairs``) — any
+    pair with J >= 0.8 provably shares a prefix shingle and passes the
+    length filter, so after exact verification the
     result is IDENTICAL to the brute-force form (shares its oracle; a
     pytest pins Spark-vs-Spark equality too). The join both shrinks
     ~5x in rows and moves to the rarest (smallest-fanout) keys."""
-    sh = _capped_shingle_table(load_table(spark, sf_dir, "documents"))
-    df_tab = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    per_doc = (
-        sh.join(df_tab, on="shingle")
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "shingle"))).alias("toks"))
-    )
-    n = F.size("toks")
-    # prefix length |X| - ceil(t|X|) + 1 with t = 4/5 in EXACT integer
-    # arithmetic (ceil(4n/5) = floor((4n+4)/5)) — ceil(n * 0.8) in
-    # doubles happens to round correctly here but only by a 2x ulp
-    # margin; an integral t deserves integral math
-    p = (n - F.floor((n * 4 + F.lit(4)) / F.lit(5)) + F.lit(1)).cast("int")
-    prefix = per_doc.select(
-        "doc_id",
-        F.explode(
-            F.transform(F.slice("toks", F.lit(1), p), lambda s: s["shingle"])
-        ).alias("shingle"),
-    ).localCheckpoint(eager=False)  # both self-join sides reuse one build
-    cand = (
-        prefix.alias("a")
-        .join(prefix.alias("b"), on="shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    # PPJoin length filter BEFORE the expensive verification join:
-    # J >= 4/5 forces |A∩B| >= (4/5)|A∪B| >= (4/5)max(|A|,|B|), and
-    # |A∩B| <= min(|A|,|B|), so any surviving pair has
-    # 5*min >= 4*max (integer math — provably no true pair pruned)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    cand = (
-        cand.join(sizes.select(F.col("doc_id").alias("doc_a"),
-                               F.col("n").alias("n_a")), on="doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"),
-                           F.col("n").alias("n_b")), on="doc_b")
-        .filter(
-            F.least("n_a", "n_b") * 5 >= F.greatest("n_a", "n_b") * 4
-        )
-    )
-    # exact verification: full intersection count for candidates only
-    inter = (
-        cand.join(sh.select(F.col("doc_id").alias("doc_a"), "shingle"),
-                  on="doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), "shingle"),
-              on=["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    withs = inter
-    union = F.col("n_a") + F.col("n_b") - F.col("inter")
+    sh = _capped_shingle_table(
+        load_table(spark, sf_dir, "documents")
+    ).withColumnRenamed("shingle", "tok")
+    cand = jaccard_prefix_pairs(doc_tokens(sh), 0.8).distinct()
     return (
-        withs.withColumn("union_n", union)
+        _exact_intersections(cand, sh)
+        .select(
+            F.col("src").alias("doc_a"),
+            F.col("dst").alias("doc_b"),
+            "inter",
+            (F.col("n_src") + F.col("n_dst") - F.col("inter")).alias("union_n"),
+        )
         .withColumn("jaccard_milli",
                     F.floor(F.col("inter") * 1000.0 / F.col("union_n")))
         .filter(F.col("jaccard_milli") >= 800)
-        .select("doc_a", "doc_b", "inter", "union_n", "jaccard_milli")
+    )
+
+
+def _exact_intersections(cand: DataFrame, tokens: DataFrame) -> DataFrame:
+    """(src, dst, n_src, n_dst, inter): the exact |A∩B| of each
+    ``jaccard_prefix_pairs`` candidate, counted on the full (doc_id,
+    tok) table — the verify step of both prefix-filtered Jaccard
+    queries (each applies its own floor(inter*1000/union) cut)."""
+    return (
+        cand.join(tokens.select(F.col("doc_id").alias("src"), "tok"), on="src")
+        .join(tokens.select(F.col("doc_id").alias("dst"), "tok"),
+              on=["dst", "tok"])
+        .groupBy("src", "dst", "n_src", "n_dst")
+        .agg(F.count("*").alias("inter"))
     )
 
 
@@ -498,7 +473,7 @@ def _char_pairs_bitset(spark: SparkSession, g: DataFrame) -> DataFrame | None:
     # get an Expand whose group order follows expression-id hashes, so
     # each call could compile a differently ordered copy of the same
     # code (grams are never NULL: NULL text explodes to no rows)
-    vocab_rows = g.select("gram").distinct()
+    vocab_rows = g.select("tok").distinct()
     n_docs = g.agg(F.count_distinct("doc_id")).collect()[0][0]
     if n_docs == 0:
         return None  # empty corpus: the join path returns empty anyway
@@ -531,7 +506,7 @@ def _char_pairs_bitset(spark: SparkSession, g: DataFrame) -> DataFrame | None:
                 out_bits.append(w.view(np.int64))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "bits": out_bits})
 
-    per_doc = g.groupBy("doc_id").agg(F.collect_list("gram").alias("gs"))
+    per_doc = g.groupBy("doc_id").agg(F.collect_list("tok").alias("gs"))
     bdf = per_doc.mapInPandas(
         to_bits, "doc_id long, bits array<long>"
     ).toPandas()
@@ -625,7 +600,8 @@ def q_char_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    sf0.1, output equal at sf0.001/0.01/0.1 by direct comparison
     #    + the unchanged DuckDB oracle.
     # 2. PREFIX FILTERING fallback (AllPairs, Bayardo et al. 2007 —
-    #    the q_ngram_jaccard_prefix_pairs shape) for corpora past the
+    #    operators/prefix_join.py, the join q_ngram_jaccard_prefix_pairs
+    #    and the pipeline's prefix scheme also use) for corpora past the
     #    bitset guard (large vocab x many docs): candidates from each
     #    doc's rarest ~30% of grams (any pair with J >= 0.7 provably
     #    shares a prefix gram under a fixed global (df, gram) order) +
@@ -642,66 +618,22 @@ def q_char_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: F.col("text").substr(i, F.lit(k)),
         )
     )
-    g = widen_if_narrow(docs).select("doc_id", F.explode(grams).alias("gram"))
-    # reused by the df table, sizes, the prefix build and BOTH
+    g = widen_if_narrow(docs).select("doc_id", F.explode(grams).alias("tok"))
+    # reused by the bitset probe, the prefix build and BOTH
     # verification joins — one materialization
     g = g.localCheckpoint(eager=False)
     fast = _char_pairs_bitset(spark, g)
     if fast is not None:
         return fast
-    sizes = g.groupBy("doc_id").agg(F.count("*").alias("n"))
-    df_tab = g.groupBy("gram").agg(F.count("*").alias("df"))
-    per_doc = (
-        g.join(df_tab, on="gram")
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "gram"))).alias("toks"))
-    )
-    nt = F.size("toks")
-    # prefix length |X| - ceil(0.7|X|) + 1 in EXACT integer arithmetic:
-    # ceil(7n/10) = floor((7n+9)/10)
-    p = (nt - F.floor((nt * 7 + F.lit(9)) / F.lit(10)) + F.lit(1)).cast("int")
-    prefix = per_doc.select(
-        "doc_id",
-        F.explode(
-            F.transform(F.slice("toks", F.lit(1), p), lambda s: s["gram"])
-        ).alias("gram"),
-    ).localCheckpoint(eager=False)  # both self-join sides reuse one build
-    cand = (
-        prefix.alias("a")
-        .join(prefix.alias("b"), on="gram")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    # PPJoin length filter: J >= 7/10 forces |A∩B| >= (7/10)|A∪B| >=
-    # (7/10)max(|A|,|B|) and |A∩B| <= min(|A|,|B|), so any true pair
-    # has 10*min >= 7*max (integer math — provably no true pair lost)
-    cand = (
-        cand.join(sizes.select(F.col("doc_id").alias("doc_a"),
-                               F.col("n").alias("na")), on="doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"),
-                           F.col("n").alias("nb")), on="doc_b")
-        .filter(F.least("na", "nb") * 10 >= F.greatest("na", "nb") * 7)
-    )
-    # exact verification over candidates only — intersection counted on
-    # the full gram table, same count the brute-force join produced
-    withs = (
-        cand.join(g.select(F.col("doc_id").alias("doc_a"), "gram"),
-                  on="doc_a")
-        .join(g.select(F.col("doc_id").alias("doc_b"), "gram"),
-              on=["doc_b", "gram"])
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(F.count("*").alias("inter"))
-    )
+    cand = jaccard_prefix_pairs(doc_tokens(g), 0.7).distinct()
     jac = F.floor(
-        F.col("inter") * 1000 / (F.col("na") + F.col("nb") - F.col("inter"))
+        F.col("inter") * 1000 / (F.col("n_src") + F.col("n_dst") - F.col("inter"))
     ).cast("long")
     return (
-        withs.withColumn("jaccard_milli", jac)
+        _exact_intersections(cand, g)
+        .select(F.col("src").alias("doc_a"), F.col("dst").alias("doc_b"),
+                jac.alias("jaccard_milli"))
         .filter(F.col("jaccard_milli") >= 700)
-        .select("doc_a", "doc_b", "jaccard_milli")
     )
 
 
@@ -2198,8 +2130,9 @@ def q_tfidf_cosine_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME soft-dedup operator as q_tfidf_cosine_pairs (TF-IDF
     cosine >= 0.9, integer-exact) computed via WEIGHTED PREFIX
     FILTERING (AllPairs, Bayardo et al. 2007, §4) instead of the full
-    token self-join — the weighted analog of
-    q_ngram_jaccard_prefix_pairs / operators/prefix_join.py.
+    token self-join — the weighted analog of operators/prefix_join.py.
+    That module's prefix is a fixed token count per doc; this one is
+    bounded by the tail's squared norm, so it keeps its own build.
 
     Order each doc's weighted tokens by a GLOBAL key (document
     frequency asc, token asc) — rarest first — and keep in the doc's
@@ -2248,8 +2181,7 @@ def q_tfidf_cosine_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "tok", "df", (F.col("tf") * idf_deci).alias("w"))
         .filter(F.col("w") > 0)
         # both the prefix builder and the verify join reuse this table;
-        # localCheckpoint materializes it once (same pattern as
-        # q_ngram_jaccard_prefix_pairs)
+        # localCheckpoint materializes it once
         .localCheckpoint(eager=False)
     )
     # per-doc integer tail sums in the global (df asc, tok asc) order —
@@ -2347,10 +2279,9 @@ def q_tfidf_cosine_dense_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     |weighted vocab| is small enough to densify (<=
     _TFIDF_DENSE_VOCAB_MAX), the right plan is no candidate pairs at
     all: sparse int vectors -> B(B+1)/2 independent BLAS tiles that
-    emit only survivors. Dispatch rule for callers: vocab size is one
-    cheap aggregate; use this form when it fits, the weighted-prefix
-    form otherwise (realistic web corpora, where vocab is huge and
-    prefixes prune).
+    emit only survivors. q_tfidf_cosine_pairs_auto applies the rule:
+    this form when it fits, the weighted-prefix form otherwise
+    (realistic web corpora, where vocab is huge and prefixes prune).
 
     Integer exactness end-to-end: weights are the same tf * idf_deci
     integers, dots are float64-BLAS-exact on the integer grid (int64
@@ -2361,6 +2292,20 @@ def q_tfidf_cosine_dense_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The one driver-side action is the vocab collect — bounded by the
     guard, the same pattern as IVF's broadcast centroids."""
+    out = _tfidf_dense_pairs(spark, sf_dir)
+    if out is None:
+        raise ValueError(
+            f"weighted vocabulary exceeds {_TFIDF_DENSE_VOCAB_MAX} tokens;"
+            " the dense tile join densifies past it — use"
+            " q_tfidf_cosine_prefix_pairs for large vocabularies"
+        )
+    return out
+
+
+def _tfidf_dense_pairs(spark: SparkSession, sf_dir: str) -> DataFrame | None:
+    """q_tfidf_cosine_dense_pairs' plan, or None when the weighted
+    vocabulary exceeds ``_TFIDF_DENSE_VOCAB_MAX`` (the caller falls
+    back or refuses)."""
     from imageduplicatefinder_spark.operators.similarity import (
         int_cosine_tile_pairs,
     )
@@ -2388,14 +2333,13 @@ def q_tfidf_cosine_dense_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("idf_deci") > 0)
         .orderBy("tok")
+        # one row past the guard is enough to refuse: a web-scale vocab
+        # never reaches the driver
+        .limit(_TFIDF_DENSE_VOCAB_MAX + 1)
         .collect()
     )
     if len(vocab_rows) > _TFIDF_DENSE_VOCAB_MAX:
-        raise ValueError(
-            f"weighted vocabulary has {len(vocab_rows)} tokens; the dense"
-            f" tile join densifies past {_TFIDF_DENSE_VOCAB_MAX} — use"
-            " q_tfidf_cosine_prefix_pairs for large vocabularies"
-        )
+        return None
     vocab = spark.createDataFrame(
         [(i, r.tok, r.idf_deci) for i, r in enumerate(vocab_rows)],
         "idx int, tok string, idf_deci long",
@@ -2427,62 +2371,24 @@ def q_tfidf_cosine_dense_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tfidf_cosine_pairs_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The TF-IDF soft-dedup DISPATCHER: one cheap weighted-vocab-size
-    aggregate, then the right physical plan for this corpus shape —
-    the dense block-matrix tile join when the weighted vocabulary fits
-    (<= _TFIDF_DENSE_VOCAB_MAX tokens: compact vocab = every token hot
-    = token-keyed candidate schemes degenerate to df^2), the weighted
-    prefix-filter join otherwise (web-scale vocab: rare tokens, real
-    pruning). Round-4 verdict: the dispatch rule used to live only in
-    docstrings, leaving q_tfidf_cosine_pairs (brute, df^2 fan-out) as
-    the entry a naive caller grabs first — this entry makes the rule
-    code a caller can't skip.
+    """The TF-IDF soft-dedup DISPATCHER: the dense block-matrix tile
+    join when the weighted vocabulary fits (<= _TFIDF_DENSE_VOCAB_MAX
+    tokens: compact vocab = every token hot = token-keyed candidate
+    schemes degenerate to df^2), the weighted prefix-filter join
+    otherwise (web-scale vocab: rare tokens, real pruning). The
+    decision is the dense builder's own bounded vocab collect — no
+    separate probe. Round-4 verdict: the dispatch rule used to live
+    only in docstrings, leaving q_tfidf_cosine_pairs (brute, df^2
+    fan-out) as the entry a naive caller grabs first — this entry makes
+    the rule code a caller can't skip.
 
     All three fixed plans are integer-exact and output-identical
     (pytest-pinned), so the dispatch can never change RESULTS — only
-    the plan. Shares SQL_TFIDF_COSINE_PAIRS as its oracle. The
-    dispatch aggregate is one distinct-count over (tok, df) — a single
-    shuffled partial/final agg, O(|vocab|) state, trivially cheap next
-    to either pair plan; its cost is NOT wasted for the dense branch,
-    which recomputes the vocab anyway to assign dense indices."""
-    chosen, n_weighted_vocab = tfidf_dispatch_choice(spark, sf_dir)
-    logging.getLogger(__name__).info(
-        "tfidf_cosine_pairs_auto: weighted vocab %d -> %s plan "
-        "(dense cutoff %d)", n_weighted_vocab, chosen,
-        _TFIDF_DENSE_VOCAB_MAX,
-    )
-    fn = (q_tfidf_cosine_dense_pairs if chosen == "dense"
-          else q_tfidf_cosine_prefix_pairs)
-    return fn(spark, sf_dir)
-
-
-def tfidf_dispatch_choice(
-    spark: SparkSession, sf_dir: str
-) -> tuple[str, int]:
-    """The auto dispatcher's decision for this corpus, exposed for
-    tools/tests: ("dense" | "prefix", weighted vocab size). One count
-    of the docs table plus one distinct-count over weighted tokens."""
-    docs = load_table(spark, sf_dir, "documents")
-    n_docs = docs.count()
-    idf_deci = F.greatest(
-        F.floor(
-            F.log10(F.lit(float(n_docs)) / F.col("df")) * 10
-        ),
-        F.lit(0),
-    ).cast("long")
-    n_weighted_vocab = (
-        widen_if_narrow(docs).select("doc_id", F.explode(_words()).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("doc_id", "tok")
-        .agg(F.count("*").alias("tf"))
-        .groupBy("tok")
-        .agg(F.count("*").alias("df"))
-        .filter(idf_deci > 0)
-        .count()
-    )
-    chosen = ("dense" if n_weighted_vocab <= _TFIDF_DENSE_VOCAB_MAX
-              else "prefix")
-    return chosen, n_weighted_vocab
+    the plan. Shares SQL_TFIDF_COSINE_PAIRS as its oracle."""
+    dense = _tfidf_dense_pairs(spark, sf_dir)
+    if dense is not None:
+        return dense
+    return q_tfidf_cosine_prefix_pairs(spark, sf_dir)
 
 
 #: sequence-packing budget: docs are packed, in deterministic doc_id

@@ -404,13 +404,12 @@ def test_pipeline_langs_filter_restricts_corpus(spark, tmp_path):
     assert paths == {"a.py", "b.py"}  # go docs never enter the pipeline
 
 
-@pytest.mark.parametrize("scheme", ["prefix", "exact"])
+@pytest.mark.parametrize("scheme", ["prefix"])
 def test_pipeline_candidate_scheme_recall(spark, corpus, scheme):
     """candidates="prefix" (AllPairs/PPJoin, exact for the verify rule)
-    and candidates="exact" (inverted-index self-join) must reach the
-    same recall/precision bar as the LSH default on the planted
-    corpus — prefix filtering has NO recall knob, so anything below
-    1.0 recall here is a prefix-length bug, not tuning."""
+    must reach the same recall/precision bar as the LSH default on the
+    planted corpus — prefix filtering has NO recall knob, so anything
+    below 1.0 recall here is a prefix-length bug, not tuning."""
     df = corpus_to_dataframe(spark, corpus)
     pipe = DedupPipeline(
         spark, DedupConfig(candidates=scheme),
@@ -431,10 +430,10 @@ def test_candidates_scheme_config_hash():
     to the pre-knob format so existing checkpoints stay valid."""
     lsh = DedupConfig().config_hash()
     assert DedupConfig(candidates="prefix").config_hash() != lsh
-    assert DedupConfig(candidates="exact").config_hash() != lsh
     assert DedupConfig(candidates="lsh").config_hash() == lsh
-    with pytest.raises(ValueError):
-        DedupConfig(candidates="minhash")
+    for bad in ("minhash", "exact"):
+        with pytest.raises(ValueError):
+            DedupConfig(candidates=bad)
 
 
 def test_pipeline_memory_durability_matches_disk(spark, corpus):

@@ -13,12 +13,15 @@ filter) where an off-by-one would silently lose recall.
 from __future__ import annotations
 
 import itertools
+from fractions import Fraction
 
 import pytest
 
 from imageduplicatefinder_spark.config import DedupConfig
 from imageduplicatefinder_spark.operators.prefix_join import (
+    doc_tokens,
     exact_candidates,
+    jaccard_prefix_pairs,
     prefix_candidates,
 )
 
@@ -106,3 +109,53 @@ def test_prefix_candidates_tight_thresholds(spark):
         for r in prefix_candidates(_sig_df(spark, docs), cfg).collect()
     }
     assert (1, 2) in got  # identical pair must survive
+
+
+# (A, B) set pairs for the shared Jaccard join, several sitting exactly
+# on a threshold; each pair gets its own token range so document
+# frequencies never mix across pairs. A's extra tokens have df 1, so
+# they lead A's prefix — the order in which a prefix one token too
+# short misses every shared token. In doubles 0.7*10 and 0.8*5 are
+# exact; 0.55*100 is 55.00000000000001, the case the epsilon guards.
+JACCARD_BOUNDARY = [
+    ({1, 2, 3}, {1, 2, 4}),                        # J = 0.5
+    (set(range(1, 6)), set(range(1, 5))),          # J = 0.8, n = 5
+    (set(range(1, 10)), set(range(1, 9)) | {10}),  # J = 0.8, n = 9, 9
+    (set(range(1, 11)), set(range(1, 8))),         # J = 0.7, n = 10
+    (set(range(1, 101)), set(range(1, 56))),       # J = 0.55, n = 100
+    (set(range(1, 10)), set(range(1, 8)) | {11}),  # J = 0.7, n = 9, 8
+    ({7, 8, 9}, {7, 8, 9}),                        # identical
+    ({42}, {42}),                                  # single token, identical
+    ({43}, set()),                                 # single token vs empty set
+]
+
+
+@pytest.mark.parametrize("tok_type", ["long", "string"])
+@pytest.mark.parametrize("threshold", [0.5, 0.55, 0.7, 0.8])
+def test_jaccard_prefix_pairs_matches_brute_force(spark, threshold, tok_type):
+    """jaccard_prefix_pairs (the join behind candidates="prefix",
+    ngram_jaccard_prefix_pairs and the char-gram fallback) must return
+    every pair with J >= t by exact rational arithmetic, only pairs that
+    share a token, and both true set sizes — with the epsilon-guarded
+    prefix length and length filter at pairs sitting exactly on t."""
+    docs = {}
+    for i, (a, b) in enumerate(JACCARD_BOUNDARY):
+        docs[2 * i + 1] = {1000 * i + t for t in a}
+        docs[2 * i + 2] = {1000 * i + t for t in b}
+    conv = str if tok_type == "string" else int
+    rows = [(d, conv(t)) for d, toks in docs.items() for t in toks]
+    tokens = spark.createDataFrame(rows, f"doc_id long, tok {tok_type}")
+    got = {
+        tuple(r)
+        for r in jaccard_prefix_pairs(doc_tokens(tokens), threshold).collect()
+    }
+    t = Fraction(str(threshold))
+    need, sharing = set(), set()
+    for a, b in itertools.combinations(sorted(docs), 2):
+        sa, sb = docs[a], docs[b]
+        if sa & sb:
+            sharing.add((a, b, len(sa), len(sb)))
+            if Fraction(len(sa & sb), len(sa | sb)) >= t:
+                need.add((a, b, len(sa), len(sb)))
+    assert need <= got, f"t={threshold}: missing {need - got}"
+    assert got <= sharing, f"t={threshold}: fabricated {got - sharing}"

@@ -1,19 +1,17 @@
 """Candidate-scheme comparison bench: the full dedup pipeline at
-replica x16 through each of the three candidate generators
-(DedupConfig.candidates = lsh | prefix | exact) on the same input.
+replica x16 through each of the two candidate generators
+(DedupConfig.candidates = lsh | prefix) on the same input.
 
 lsh     MinHash banding — probabilistic (recall set by the band curve),
         cheapest join, the at-scale default below the prefix scheme's
         threshold sweet spot.
 prefix  AllPairs/PPJoin prefix filtering — EXACT for the verify rule,
         deterministic, no recall knob; the high-threshold default.
-exact   full inverted-index self-join — exhaustive correctness
-        baseline; quadratic on hot shingles.
 
 Usage: python tools/bench_candidate_schemes.py [replicate] [cpus]
 Prints one JSON line per scheme: wall seconds, docs/sec, verified-edge
-count (pair-set equality between prefix and exact is pinned by
-tests/test_pipeline.py; lsh may differ by its recall curve).
+count (prefix recall is pinned by tests/test_pipeline.py; lsh may
+differ by its recall curve).
 """
 
 from __future__ import annotations
@@ -48,7 +46,7 @@ def main() -> None:
                   checkpoint_dir=tempfile.mkdtemp()).run(warm).plan.count()
     warm.unpersist()
 
-    for scheme in ("lsh", "prefix", "exact"):
+    for scheme in ("lsh", "prefix"):
         t0 = time.monotonic()
         res = DedupPipeline(
             spark, DedupConfig(candidates=scheme),

@@ -215,9 +215,10 @@ ANNOTATED = {
         "eval shard at scale"
     ),
     "ngram_jaccard_prefix_pairs": (
-        "AllPairs prefix filter: self-join only each doc's rarest "
-        "~20% shingles (localCheckpoint leaf), PPJoin 5*min>=4*max "
-        "length prune, then exact intersection verify on candidates"
+        "AllPairs prefix filter (operators/prefix_join.py): self-join "
+        "only each doc's rarest ~20% shingles (localCheckpoint leaf) "
+        "with the PPJoin min>=0.8*max length prune inside the join, "
+        "then exact intersection verify on candidates"
     ),
     "code_clone_classes": (
         "Type-2-lite clones: row-local regexp canonicalization, one "
@@ -258,7 +259,7 @@ def main() -> None:
     # build + explain each catalog query exactly ONCE, shared by the
     # PLANS.md emission, the BNL gate and the global-window gate — some
     # builders do eager driver work (CC iteration, the streaming drain,
-    # the tfidf dispatch aggregate), so a second full-catalog build pass
+    # the tfidf dense builder's vocab collect), so a second full-catalog build pass
     # roughly doubled this tool's wall for nothing (round-5 review)
     plans_text: dict[str, str] = {}
     for name, fn in QUERIES.items():
