@@ -1,5 +1,4 @@
 from imageduplicatefinder_spark.operators.signatures import compute_signatures
-from imageduplicatefinder_spark.operators.exact import exact_dup_edges
 from imageduplicatefinder_spark.operators.lsh import band_table, candidate_pairs
 from imageduplicatefinder_spark.operators.verify import verify_pairs
 from imageduplicatefinder_spark.operators.components import (
@@ -17,7 +16,6 @@ from imageduplicatefinder_spark.operators.similarity import (
 
 __all__ = [
     "compute_signatures",
-    "exact_dup_edges",
     "band_table",
     "candidate_pairs",
     "verify_pairs",

@@ -41,6 +41,11 @@ from pyspark.sql import functions as F
 #: tests monkeypatch it).
 CC_DRIVER_MAX_EDGES = 2_000_000
 
+#: star-contraction alternations allowed before the rounds raise
+#: instead of returning over-split labels (the proven bound is
+#: O(log^2 n) rounds). Tests monkeypatch it, like CC_DRIVER_MAX_EDGES.
+CC_MAX_ROUNDS = 50
+
 
 def _np_min_label_components(nodes, ai, bi, np):
     """Vectorized min-label propagation with pointer jumping over edge
@@ -108,11 +113,7 @@ def _driver_guard(edges: DataFrame) -> tuple[DataFrame, DataFrame | None]:
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iterations: int = 50,
-    on_nonconverged: str = "raise",
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(src:long, dst:long) -> (doc_id:long, cluster_id:long).
 
     Only nodes that appear in edges are returned, including singleton
@@ -138,15 +139,10 @@ def connected_components(
     Labels then read directly off the star edges (property-tested
     equal to the driver pass in tests/test_lsh_components).
 
-    If the fixpoint is not reached within ``max_iterations``
+    If the fixpoint is not reached within ``CC_MAX_ROUNDS``
     alternations, the labels would silently split one component into
-    several clusters, so the default is to ``raise``; pass
-    ``on_nonconverged="warn"`` to log and return the partial labels.
-    ``max_iterations`` and ``on_nonconverged`` only govern the
-    distributed rounds.
+    several clusters, so the rounds raise ``RuntimeError`` instead.
     """
-    if on_nonconverged not in ("raise", "warn"):
-        raise ValueError(f"unknown on_nonconverged {on_nonconverged!r}")
     # bounded-size dispatch on the raw edges (self-loops included — the
     # driver kernel labels self-loop-only nodes as their own singletons,
     # same as the distributed contract below)
@@ -180,7 +176,7 @@ def connected_components(
 
     prev = checksum(e)
     converged = prev[0] == 0
-    for _ in range(max_iterations):
+    for _ in range(CC_MAX_ROUNDS):
         if converged:
             break
         # large-star: m = min(closed neighborhood of u); (v, m) for v > u
@@ -216,16 +212,11 @@ def connected_components(
         prev = cur
 
     if not converged:
-        msg = (
+        raise RuntimeError(
             f"connected_components did not converge in "
-            f"{max_iterations} rounds (proven bound O(log^2 n); the edge "
+            f"{CC_MAX_ROUNDS} rounds (proven bound O(log^2 n); the edge "
             "set is still contracting — results would be over-split)"
         )
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     # fixpoint is a star per component rooted at the component min;
     # nodes absent from the contracted edges (self-loop-only) are
     # singletons labeled by themselves
@@ -236,13 +227,6 @@ def connected_components(
         )
         .distinct()
     )
-    if not converged:
-        # mid-contraction a node can still carry several partner labels;
-        # collapse to the minimum so the partial result is one (possibly
-        # over-split) label per node — at the fixpoint this is a no-op
-        labels = labels.groupBy("doc_id").agg(
-            F.min("cluster_id").alias("cluster_id")
-        )
     singletons = nodes.join(
         labels, nodes.node == labels.doc_id, how="left_anti"
     ).select(F.col("node").alias("doc_id"), F.col("node").alias("cluster_id"))

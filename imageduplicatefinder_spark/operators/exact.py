@@ -32,25 +32,3 @@ def exact_groups(signatures: DataFrame) -> DataFrame:
     return signatures.select("sha256", "doc_id").join(rep_ids(signatures),
                                                       on="sha256")
 
-
-def exact_dup_edges(signatures: DataFrame) -> DataFrame:
-    """Star edges rep_id -> doc_id for every non-representative member.
-
-    Feeding stars (not cliques) into connected components keeps edge
-    count linear in group size while producing identical components.
-    """
-    g = exact_groups(signatures)
-    return (
-        g.filter(F.col("doc_id") != F.col("rep_id"))
-        .select(F.col("rep_id").alias("src"), F.col("doc_id").alias("dst"))
-    )
-
-
-def representatives(signatures: DataFrame) -> DataFrame:
-    """One row per distinct content: the LSH stage runs on these only.
-
-    Implemented as a partial-aggregating min + semi-join on the
-    (sha256, min doc_id) key — no per-group sort, mega-group safe
-    (same reasoning as rep_ids)."""
-    mins = rep_ids(signatures).withColumnRenamed("rep_id", "doc_id")
-    return signatures.join(mins, on=["sha256", "doc_id"])

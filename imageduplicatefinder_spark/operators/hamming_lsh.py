@@ -9,9 +9,10 @@ and the radius (``_key_scheme``):
 - S < ``KEY_JOIN_MIN_SKETCHES`` (50,000): an exact tiled all-pairs
   XOR/popcount kernel (``_close_pairs_tiles``: ``block_pair_tiles``
   over the distinct-sketch table, SWAR popcount, no join). A
-  connected-components consumer gets a per-tile spanning forest
-  instead (``_forest_edges_tiles``), so the edge volume stays ~linear
-  in sketches.
+  connected-components consumer gets the union of per-tile spanning
+  forests instead (``_forest_edges_tiles``): the same components in at
+  most 2 x (tile blocks) x S edges, under the driver-pass bound of the
+  consumer's ``connected_components``.
 - S >= 50,000: a pigeonhole key join, generalized to combination keys
   (the shape of Manku/Jain/Das Sarma, "Detecting Near-Duplicates for
   Web Crawling", WWW'07 §3). Split the sketch into B = radius + m
@@ -63,7 +64,6 @@ from pyspark.sql import functions as F
 
 from imageduplicatefinder_spark.functions.fingerprints import hamming_distance_col
 from imageduplicatefinder_spark.operators.components import (
-    _np_edge_components,
     _np_min_label_components,
 )
 from imageduplicatefinder_spark.operators.tiles import block_pair_tiles
@@ -313,7 +313,7 @@ def _forest_edges_tiles(src: DataFrame, radius: int, n_sk: int) -> DataFrame:
     subgraphs' union) — so a CC consumer gets identical clusters from
     ~B x nodes edges instead of the full quadratic-in-family pair set.
     Measured at sf1.0: 18.5M close sketch pairs contract to < 1M forest
-    edges before the CC rounds ever shuffle them.
+    edges before ``connected_components`` ever sees them.
 
     Output: (sk_a, sk_b), sk_a < sk_b (signed).
     """
@@ -340,47 +340,6 @@ def _forest_edges_tiles(src: DataFrame, radius: int, n_sk: int) -> DataFrame:
     return _tile_pairs(src, n_sk, kernel, "sk_a long, sk_b long")
 
 
-def _contract_forest(forest: DataFrame) -> DataFrame:
-    """Collapse the union of per-tile spanning forests to ONE star per
-    connected component (root = component-min sketch value): a single
-    bounded reduce, so a downstream distributed CC converges in O(1)
-    rounds instead of O(cross-tile chain depth).
-
-    Boundedness: the input is the tile forests — at most
-    ``sum_tiles (nodes_in_tile - 1) <= 2 * n_blocks * S`` edges of two
-    longs, and the tile dispatch keeps S below
-    ``KEY_JOIN_MIN_SKETCHES``, so the single task tops out at tens of
-    MB even at the dispatch boundary. This is the same
-    bounded-single-pass reasoning as the guarded driver collects, run
-    executor-side; beyond the cap the pigeonhole path never reaches
-    this operator."""
-    import numpy as np
-    import pandas as pd
-
-    def run(batches):
-        chunks = [pdf for pdf in batches if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(columns=["sk_a", "sk_b"])
-            return
-        a = np.concatenate([c["sk_a"].to_numpy(dtype=np.int64)
-                            for c in chunks])
-        b = np.concatenate([c["sk_b"].to_numpy(dtype=np.int64)
-                            for c in chunks])
-        nodes, lab = _np_edge_components(a, b, np)
-        member = np.nonzero(lab != np.arange(len(nodes)))[0]
-        # np.unique sorts ascending, so the min label index IS the min
-        # signed sketch value: sk_a < sk_b holds by construction
-        yield pd.DataFrame(
-            {"sk_a": nodes[lab[member]], "sk_b": nodes[member]}
-        )
-
-    # repartition (NOT coalesce): coalesce(1) would propagate the
-    # single-partition constraint upstream and serialize the tile
-    # stage itself; the exchange keeps tiles parallel and moves only
-    # the forest rows
-    return forest.repartition(1).mapInPandas(run, "sk_a long, sk_b long")
-
-
 def _close_sketch_pairs(
     sig: DataFrame, radius: int, forest: bool = False
 ) -> DataFrame:
@@ -389,9 +348,11 @@ def _close_sketch_pairs(
     be materialized by the caller.
 
     ``forest=True`` (connected-components consumers only) lets the tile
-    kernel emit a connectivity-preserving spanning subset instead of
+    kernel emit the union of its per-tile spanning forests instead of
     every close pair — same components, orders of magnitude fewer edge
-    rows on clustered corpora; the returned frame then has no
+    rows on clustered corpora, but neither a star per component nor
+    free of chains across tiles: the caller's ``connected_components``
+    does the global labelling. The returned frame then has no
     ``hamming`` column on the tile path."""
     # the dispatch reads the distinct-sketch count (one cheap
     # fixed-width count job, AQE-style runtime stats); the distinct
@@ -401,7 +362,7 @@ def _close_sketch_pairs(
     scheme = _key_scheme(radius, n_sk)
     if scheme is None:
         if forest:
-            return _contract_forest(_forest_edges_tiles(src, radius, n_sk))
+            return _forest_edges_tiles(src, radius, n_sk)
         return _close_pairs_tiles(src, radius, n_sk)
     _, cap = scheme
     keys = sketch_keys(src, radius, sketch_col="sketch")

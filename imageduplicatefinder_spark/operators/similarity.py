@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from imageduplicatefinder_spark.operators.components import connected_components
 from imageduplicatefinder_spark.operators.tiles import block_pair_tiles
 
 
@@ -492,6 +493,27 @@ def ivf_topk(
     )
 
 
+def _min_id_keepers(assigned: DataFrame, edges: DataFrame,
+                     id_col: str) -> DataFrame:
+    """(id_col, list_id, action, keeper_id) for every ``assigned`` row:
+    each connected component of ``edges`` (src, dst) keeps its min id
+    and DELETEs the rest; a row in no edge KEEPs itself."""
+    comp = connected_components(edges).withColumnsRenamed(
+        {"doc_id": id_col, "cluster_id": "keeper_id"}
+    )
+    keeper, own = F.col("keeper_id"), F.col(id_col)
+    return assigned.select(id_col, "list_id").join(
+        comp, on=id_col, how="left"
+    ).select(
+        id_col,
+        "list_id",
+        F.when(keeper.isNull() | (keeper == own), F.lit("KEEP"))
+        .otherwise(F.lit("DELETE"))
+        .alias("action"),
+        F.coalesce(keeper, own).alias("keeper_id"),
+    )
+
+
 def semantic_dedup_keeper(
     embeddings: DataFrame,
     threshold_milli: int = 950,
@@ -524,10 +546,6 @@ def semantic_dedup_keeper(
     groups close under connected components (a chain a~b~c collapses
     to ONE keeper even when cos(a,c) < t, matching the pipeline's
     cluster semantics)."""
-    from imageduplicatefinder_spark.operators.components import (
-        connected_components,
-    )
-
     cents = train_centroids(
         embeddings, nlist=nlist, seed=seed, id_col=id_col, vec_col=vec_col
     )
@@ -545,26 +563,4 @@ def semantic_dedup_keeper(
     edges = pairs.select(
         F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")
     )
-    comp = connected_components(edges)  # (doc_id, cluster_id), min-id label
-    return (
-        assigned.select(id_col, "list_id")
-        .join(
-            comp.withColumnsRenamed(
-                {"doc_id": id_col, "cluster_id": "keeper_id"}
-            ),
-            on=id_col,
-            how="left",
-        )
-        .select(
-            id_col,
-            "list_id",
-            F.when(
-                F.col("keeper_id").isNull()
-                | (F.col("keeper_id") == F.col(id_col)),
-                F.lit("KEEP"),
-            )
-            .otherwise(F.lit("DELETE"))
-            .alias("action"),
-            F.coalesce("keeper_id", F.col(id_col)).alias("keeper_id"),
-        )
-    )
+    return _min_id_keepers(assigned, edges, id_col)

@@ -160,7 +160,7 @@ class CheckpointManager:
             return False  # same config, DIFFERENT corpus: recompute
         return True
 
-    def materialize(self, stage: str, df_fn, num_partitions: int | None = None) -> DataFrame:
+    def materialize(self, stage: str, df_fn) -> DataFrame:
         """Run ``df_fn()`` and checkpoint, or read back an existing
         checkpoint for this (config, input). Records a metrics row
         either way.
@@ -177,8 +177,6 @@ class CheckpointManager:
         c0 = codegen_compiles(self.spark)
         if self.durability == "memory":
             df = df_fn()
-            if num_partitions:
-                df = df.repartition(num_partitions)
             # lazy checkpoint + count: the count IS the materializing
             # action, so the stage runs ONE job and one data pass
             # (eager=True + count would serialize the partitions twice)
@@ -210,8 +208,6 @@ class CheckpointManager:
             return out
 
         df: DataFrame = df_fn()
-        if num_partitions:
-            df = df.repartition(num_partitions)
         df.write.mode("overwrite").option("compression", "zstd").parquet(d)
         out = self.spark.read.parquet(d)
 

@@ -4181,6 +4181,20 @@ SQL_SIMHASH_HAMMING_PAIRS = SQL_SIMHASH_HAMMING_PAIRS_TEMPLATE.format(
 )
 
 
+def _cluster_members(edges: DataFrame) -> DataFrame:
+    """(cluster_id, doc_id, n_members): the connected components of
+    ``edges`` (src, dst), each node with its component's size."""
+    from imageduplicatefinder_spark.operators.components import (
+        connected_components,
+    )
+
+    comps = connected_components(edges)
+    sizes = comps.groupBy("cluster_id").agg(F.count("*").alias("n_members"))
+    return comps.join(sizes, on="cluster_id").select(
+        "cluster_id", "doc_id", "n_members"
+    )
+
+
 def q_simhash_radius_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's full ``idf cluster`` shape — hash every file,
     group by Hamming radius, emit BFS clusters
@@ -4195,20 +4209,13 @@ def q_simhash_radius_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge, so clusters have >= 2 members by construction (the
     reference's singleton drop, Commands.java:149-151).
     """
-    from imageduplicatefinder_spark.operators.components import (
-        connected_components,
-    )
     from imageduplicatefinder_spark.operators.hamming_lsh import hamming_edges
 
     docs = load_table(spark, sf_dir, "documents")
     sim = _portable_simhash(docs)
     edges = hamming_edges(sim, radius=10, id_col="doc_id",
                           sketch_col="simhash")
-    comps = connected_components(edges)
-    sizes = comps.groupBy("cluster_id").agg(F.count("*").alias("n_members"))
-    return comps.join(sizes, on="cluster_id").select(
-        "cluster_id", "doc_id", "n_members"
-    )
+    return _cluster_members(edges)
 
 
 SQL_SIMHASH_RADIUS_CLUSTERS = f"""
@@ -4241,18 +4248,10 @@ def q_near_dup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     set -> rows-only check); this query pins the CC operator itself
     against a DuckDB recursive-CTE fixpoint.
     """
-    from imageduplicatefinder_spark.operators.components import (
-        connected_components,
-    )
-
     edges = q_ngram_jaccard_pairs(spark, sf_dir).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
-    comps = connected_components(edges)
-    sizes = comps.groupBy("cluster_id").agg(F.count("*").alias("n_members"))
-    return comps.join(sizes, on="cluster_id").select(
-        "cluster_id", "doc_id", "n_members"
-    )
+    return _cluster_members(edges)
 
 
 def q_near_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4877,8 +4876,8 @@ def q_semdedup_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~0.51), so the demo threshold (0.45) sits at the tail of THEIR
     distribution; planted-dup behavior at a realistic 0.95 is pinned
     by the operator pytest."""
-    from imageduplicatefinder_spark.operators.components import (
-        connected_components,
+    from imageduplicatefinder_spark.operators.similarity import (
+        _min_id_keepers,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -4902,29 +4901,7 @@ def q_semdedup_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(cos >= 0.45)
         .select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
     )
-    comp = connected_components(edges)
-    return (
-        assigned.select("vec_id", "list_id")
-        .join(
-            comp.withColumnsRenamed(
-                {"doc_id": "vec_id", "cluster_id": "keeper_id"}
-            ),
-            on="vec_id",
-            how="left",
-        )
-        .select(
-            "vec_id",
-            "list_id",
-            F.when(
-                F.col("keeper_id").isNull()
-                | (F.col("keeper_id") == F.col("vec_id")),
-                F.lit("KEEP"),
-            )
-            .otherwise(F.lit("DELETE"))
-            .alias("action"),
-            F.coalesce("keeper_id", F.col("vec_id")).alias("keeper_id"),
-        )
-    )
+    return _min_id_keepers(assigned, edges, "vec_id")
 
 
 def _semdedup_keeper_sql() -> str:

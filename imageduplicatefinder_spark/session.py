@@ -139,14 +139,6 @@ def get_spark(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
-        # floor the SCAN parallelism at the session's shuffle width:
-        # single-file local testdata otherwise plans 1-2 map tasks and
-        # serializes every fused per-row stage (guide §6 input split
-        # sizing). On a real cluster inputs have >> cores splits and
-        # this floor is inert; it is a floor, not a split-size
-        # override, so large sequential scans keep their natural
-        # split size.
-        .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Arrow batch sizing (guide §4.2): the record cap exists to bound

@@ -18,7 +18,7 @@ from imageduplicatefinder_spark.sources.jsonl import (
     read_documents_jsonl,
     write_documents_jsonl,
 )
-from imageduplicatefinder_spark.sources.tables import load_table, load_testdata
+from imageduplicatefinder_spark.sources.tables import load_table
 
 __all__ = [
     "DOCUMENTS_JSONL_SCHEMA",
@@ -31,7 +31,6 @@ __all__ = [
     "load_corpus",
     "load_table",
     "write_corpus",
-    "load_testdata",
     "read_documents_jsonl",
     "scan_files",
     "write_documents_jsonl",

@@ -56,21 +56,29 @@ def read_documents_jsonl(
         raise ValueError(f"unknown bad_lines policy {bad_lines!r}")
     if bad_lines == "strict":
         return spark.read.schema(schema).option("mode", "FAILFAST").json(path)
-    # skip/keep parse via text + from_json rather than the JSON data
-    # source: the data source forbids any plan whose scan references
-    # ONLY the corrupt column (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_
-    # RECORD_COLUMN), which is exactly what column pruning produces for
-    # aggregate-only consumers like `read_documents_jsonl(p).count()`.
-    # from_json carries no such restriction, honors the same PERMISSIVE
-    # + columnNameOfCorruptRecord contract, and Catalyst still prunes
-    # unreferenced fields out of the parse (OptimizeJsonExprs).
+    return _parse_jsonl_lines(spark.read.text(path), schema, bad_lines)
+
+
+def _parse_jsonl_lines(
+    lines: DataFrame, schema: T.StructType, bad_lines: str
+) -> DataFrame:
+    """Parse a ``value`` column of JSONL lines (batch or streaming)
+    against ``schema`` under the ``"skip"`` / ``"keep"`` policy.
+
+    text + from_json rather than the JSON data source: the data source
+    forbids any plan whose scan references ONLY the corrupt column
+    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN), which is
+    exactly what column pruning produces for aggregate-only consumers
+    like ``read_documents_jsonl(p).count()``. from_json carries no such
+    restriction, honors the same PERMISSIVE + columnNameOfCorruptRecord
+    contract, and Catalyst still prunes unreferenced fields out of the
+    parse (OptimizeJsonExprs)."""
     full = T.StructType(
         list(schema.fields) + [T.StructField(_CORRUPT_COL, T.StringType())]
     )
     parsed = (
-        spark.read.text(path)
         # the JSON source ignores blank lines; mirror that (P5 analog)
-        .filter(F.trim(F.col("value")) != "")
+        lines.filter(F.trim(F.col("value")) != "")
         .select(
             F.from_json(
                 "value",

@@ -273,41 +273,18 @@ def stream_documents_jsonl(
     10^6 shards must not become one giant first batch); None leaves
     Spark's default.
     """
-    from pyspark.sql import types as T
-
     from imageduplicatefinder_spark.sources.jsonl import (
-        _CORRUPT_COL,
         DOCUMENTS_JSONL_SCHEMA,
+        _parse_jsonl_lines,
     )
 
     if bad_lines not in ("skip", "keep"):
         # FAILFAST aborts a continuous query on one bad line — never
         # what a 24/7 ingest wants, so it is not offered here
         raise ValueError(f"unknown bad_lines policy {bad_lines!r}")
-    full = T.StructType(
-        list(DOCUMENTS_JSONL_SCHEMA.fields)
-        + [T.StructField(_CORRUPT_COL, T.StringType())]
-    )
-    # text + from_json, same as the batch reader: the JSON source
-    # forbids plans whose scan references only the corrupt column
-    # (e.g. an aggregate-only sink after skip-mode pruning); from_json
-    # honors the identical PERMISSIVE corrupt-record contract without
-    # that restriction.
     reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = (
-        reader.text(path)
-        .filter(F.trim(F.col("value")) != "")
-        .select(
-            F.from_json(
-                "value",
-                full,
-                {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": _CORRUPT_COL},
-            ).alias("_j")
-        )
-        .select("_j.*")
+    return _parse_jsonl_lines(
+        reader.text(path), DOCUMENTS_JSONL_SCHEMA, bad_lines
     )
-    if bad_lines == "keep":
-        return df
-    return df.filter(F.col(_CORRUPT_COL).isNull()).drop(_CORRUPT_COL)

@@ -6,12 +6,15 @@ ref: src/main/java/index/BKTreeIndex.java:34-50)."""
 
 import random
 import warnings
+from itertools import combinations
 
 import pytest
 from pyspark.sql import functions as F
 
 from imageduplicatefinder_spark.functions.fingerprints import hamming_distance_col
+from imageduplicatefinder_spark.operators import components
 from imageduplicatefinder_spark.operators import hamming_lsh as H
+from imageduplicatefinder_spark.operators.components import connected_components
 from imageduplicatefinder_spark.operators.hamming_lsh import (
     _auto_n_agree,
     _chunk_widths,
@@ -52,6 +55,14 @@ def _brute(spark, df, radius):
         .filter(F.col("hamming") <= radius)
         .collect()
     }
+
+
+def _components(edges):
+    """The connected components of ``edges`` as a set of frozensets."""
+    by_cluster = {}
+    for r in connected_components(edges).collect():
+        by_cluster.setdefault(r.cluster_id, set()).add(r.doc_id)
+    return {frozenset(v) for v in by_cluster.values()}
 
 
 def _to_signed(u: int) -> int:
@@ -199,24 +210,13 @@ def test_hamming_edges_cluster_parity(spark, sketches, monkeypatch):
     all-pairs form on both paths (tile spanning forest by default, the
     key join when forced), with linear (not quadratic) same-sketch
     output."""
-    from imageduplicatefinder_spark.operators.components import (
-        connected_components,
-    )
-
     pairs = hamming_pairs(sketches, radius=10).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     edges = hamming_edges(sketches, radius=10)
     assert _ran_tiles(edges)
 
-    def comps(e):
-        rows = connected_components(e).collect()
-        by_cluster = {}
-        for r in rows:
-            by_cluster.setdefault(r.cluster_id, set()).add(r.doc_id)
-        return {frozenset(v) for v in by_cluster.values()}
-
-    expected = comps(pairs)
-    assert comps(edges) == expected
+    expected = _components(pairs)
+    assert _components(edges) == expected
     # the 3-doc same-sketch family (base + 2000 + 2001) emits 3 pairs
     # in the all-pairs form but only 2 star edges here
     n_same_pairs = pairs.join(
@@ -227,7 +227,61 @@ def test_hamming_edges_cluster_parity(spark, sketches, monkeypatch):
     with pytest.warns(H.HammingAutoCapWarning):
         key_edges = hamming_edges(sketches, radius=10)
     assert not _ran_tiles(key_edges)
-    assert comps(key_edges) == expected
+    assert _components(key_edges) == expected
+
+
+@pytest.mark.parametrize("driver_pass", [True, False])
+def test_hamming_edges_multi_tile_forests(spark, monkeypatch, driver_pass):
+    """With 16-sketch tile blocks the forests of at least 9 blocks are
+    unioned: chains of 5-bit steps cross tiles, so only the consumer's
+    connected components join them. hamming_edges -> CC must give the
+    components of hamming_pairs -> CC and of a plain-Python brute force,
+    on the CC driver pass and on the forced star-contraction rounds."""
+    rng = random.Random(77)
+    sks = [rng.getrandbits(64) for _ in range(80)]
+    for _ in range(3):
+        cur = rng.getrandbits(64)
+        for _ in range(20):
+            for pos in rng.sample(range(64), 5):
+                cur ^= 1 << pos
+            sks.append(cur)
+    ids = list(range(len(sks)))
+    # a same-sketch pair on a chain member and on a background sketch
+    sks += [sks[90], sks[7]]
+    ids += [500, 501]
+    radius = 10
+    n_sk = len(set(sks))
+    monkeypatch.setattr(H, "_TILE_BLOCK_ROWS", 16)
+    assert -(-n_sk // 16) >= 9
+    if not driver_pass:
+        monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
+
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for i, j in combinations(range(len(sks)), 2):
+        if bin(sks[i] ^ sks[j]).count("1") <= radius:
+            parent[find(ids[i])] = find(ids[j])
+    brute = {}
+    for x in list(parent):
+        brute.setdefault(find(x), set()).add(x)
+    brute = {frozenset(v) for v in brute.values()}
+    assert any(len(c) >= 20 for c in brute)
+
+    df = spark.createDataFrame(
+        [(i, _to_signed(s)) for i, s in zip(ids, sks)],
+        "doc_id long, simhash long",
+    )
+
+    edges = hamming_edges(df, radius=radius)
+    assert _ran_tiles(edges)
+    pairs = hamming_pairs(df, radius=radius).select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    assert _components(edges) == _components(pairs) == brute
 
 
 @pytest.mark.parametrize("m", [1, 2])

@@ -217,19 +217,10 @@ def test_cc_raises_on_nonconvergence(spark, monkeypatch):
     # iteration guard is under test — the driver kernel always reaches
     # fixpoint)
     monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(components, "CC_MAX_ROUNDS", 1)
     chain = [(i, i + 1) for i in range(40)]
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(_edges(spark, chain), max_iterations=1)
-
-
-def test_cc_warn_mode_returns_partial(spark, monkeypatch):
-    monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
-    chain = [(i, i + 1) for i in range(40)]
-    with pytest.warns(RuntimeWarning, match="did not converge"):
-        rows = connected_components(
-            _edges(spark, chain), max_iterations=1, on_nonconverged="warn",
-        ).collect()
-    assert len(rows) == 41
+        connected_components(_edges(spark, chain))
 
 
 def test_cc_driver_dispatch_matches_distributed(spark, monkeypatch):
@@ -343,10 +334,11 @@ def test_star_cc_deep_chain_logarithmic_rounds(spark, monkeypatch):
     """A 200-node chain has diameter 199 — star contraction must
     converge well within 20 alternation rounds (O(log n))."""
     monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(components, "CC_MAX_ROUNDS", 20)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(199)], "src long, dst long"
     )
-    got = connected_components(edges, max_iterations=20).collect()
+    got = connected_components(edges).collect()
     assert len(got) == 200
     assert {r.cluster_id for r in got} == {0}
 
@@ -359,21 +351,6 @@ def test_star_cc_empty_and_self_loops(spark):
            for r in connected_components(loops).collect()}
     # self-loop-only node stays as a singleton
     assert got == {(5, 5), (7, 7), (8, 7)}
-
-
-def test_star_cc_warn_mode_returns_partial(spark, monkeypatch):
-    """Mid-contraction partial labels are one per node and never point
-    above the node: over-split, never wrongly merged."""
-    monkeypatch.setattr(components, "CC_DRIVER_MAX_EDGES", 0)
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], "src long, dst long"
-    )
-    with pytest.warns(RuntimeWarning, match="did not converge"):
-        rows = connected_components(
-            chain, max_iterations=1, on_nonconverged="warn",
-        ).collect()
-    assert sorted(r.doc_id for r in rows) == list(range(41))
-    assert all(0 <= r.cluster_id <= r.doc_id for r in rows)
 
 
 def test_refresh_clusters_merges_and_extends(spark):

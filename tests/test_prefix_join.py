@@ -111,6 +111,31 @@ def test_prefix_candidates_tight_thresholds(spark):
     assert (1, 2) in got  # identical pair must survive
 
 
+@pytest.mark.parametrize("threshold,n_shared", [(0.55, 55), (0.07, 7)])
+def test_prefix_candidates_containment_on_float_boundary(
+    spark, threshold, n_shared
+):
+    """Containment exactly on a threshold whose double product rounds
+    above the integer (0.55*100 = 55.00000000000001, 0.07*100 =
+    7.000000000000001). A's 100 - n_shared df-1 shingles lead its
+    rarest-first prefix, so a prefix one token too short holds no
+    shared shingle. At jaccard_threshold 0.99 the Jaccard leg's length
+    filter rules the pair out: only the containment leg can find it."""
+    shared = list(range(1, n_shared + 1))
+    docs = {
+        1: shared + list(range(1000, 1000 + 100 - n_shared)),
+        2: shared + list(range(2000, 2100)),
+    }
+    cfg = DedupConfig(jaccard_threshold=0.99,
+                      containment_threshold=threshold)
+    assert _qualifying(docs, cfg) == {(1, 2)}
+    got = {
+        (r.src, r.dst)
+        for r in prefix_candidates(_sig_df(spark, docs), cfg).collect()
+    }
+    assert (1, 2) in got
+
+
 # (A, B) set pairs for the shared Jaccard join, several sitting exactly
 # on a threshold; each pair gets its own token range so document
 # frequencies never mix across pairs. A's extra tokens have df 1, so
