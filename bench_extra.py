@@ -1,10 +1,11 @@
 """Per-query isolation bench (guide §1.4): times individual catalog
 queries with the SAME methodology as the frozen bench.py (count() on
-local[$SPARK_GRAFT_CPUS], shuffle partitions = core count) but lets the
-optimizer run one query at a time, with min-of-N, job labels, and an
-optional noop-sink mode that forces EVERY column (count() lets Catalyst
-prune columns the same way the graded bench does, so count is the
-default here for comparability).
+local[$SPARK_GRAFT_CPUS] — default: the CPUs this process may run on —
+shuffle partitions = core count) but lets the optimizer run one query
+at a time, with min-of-N, job labels, and an optional noop-sink mode
+that forces EVERY column (count() lets Catalyst prune columns the same
+way the graded bench does, so count is the default here for
+comparability).
 
 Usage:
     python bench_extra.py [--sf DIR] [--runs N] [--sink count|noop]
@@ -57,9 +58,7 @@ def main() -> None:
     from imageduplicatefinder_spark.queries import QUERIES
     from imageduplicatefinder_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app_name="bench_extra", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus)
+    spark = get_spark(app_name="bench_extra")
     from pyspark.sql import functions as F
 
     from imageduplicatefinder_spark.sources.tables import load_table
@@ -100,7 +99,8 @@ def main() -> None:
             spark.sparkContext.setJobDescription(None)
         out[name] = samples
         print(f"# {name}: {samples}", file=sys.stderr, flush=True)
-    print(json.dumps({"sf": args.sf, "sink": args.sink, "cpus": cpus,
+    print(json.dumps({"sf": args.sf, "sink": args.sink,
+                      "cpus": spark.sparkContext.defaultParallelism,
                       "queries": out}))
 
 

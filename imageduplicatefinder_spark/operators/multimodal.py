@@ -55,6 +55,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from imageduplicatefinder_spark.operators.jpeg import decode_jpeg
+
 FEATURE_DIM = 32
 
 #: real-decode feature length: an 8x8 grayscale block, row-major —
@@ -389,51 +391,32 @@ def bilinear_resize(gray: np.ndarray, out_h: int = 8,
     return top * (1 - wy)[:, None] + bot * wy[:, None]
 
 
-def _bmp_decode(data: bytes) -> tuple[int, int, np.ndarray]:
-    """Codec-free real decode kernel: BMP read -> BT.601 luminance ->
-    8x8 bilinear block (the exact input phash64 consumes). Malformed
-    payloads degrade to the (0, 0, zeros) row — per-row error isolation
+def _codec_decode(reader, data: bytes) -> tuple[int, int, np.ndarray]:
+    """Codec-free real decode kernel over one stdlib reader: read ->
+    BT.601 luminance -> 8x8 bilinear block (the exact input phash64
+    consumes). Empty and malformed payloads degrade to the
+    (0, 0, zeros) row — per-row error isolation
     (ref: app/Commands.java:76-84), same contract as ``_real_decode``."""
     if data is None or len(data) == 0:
         return 0, 0, np.zeros(REAL_FEATURE_DIM, dtype=np.float32)
     try:
-        w, h, gray = decode_bmp(data)
+        w, h, gray = reader(data)
         block = bilinear_resize(gray, 8, 8)
         return w, h, block.reshape(REAL_FEATURE_DIM).astype(np.float32)
     except ValueError:
         return 0, 0, np.zeros(REAL_FEATURE_DIM, dtype=np.float32)
+
+
+def _bmp_decode(data: bytes) -> tuple[int, int, np.ndarray]:
+    return _codec_decode(decode_bmp, data)
 
 
 def _png_decode(data: bytes) -> tuple[int, int, np.ndarray]:
-    """Codec-free real decode kernel: PNG read -> BT.601 luminance ->
-    8x8 bilinear block (the exact input phash64 consumes). Malformed
-    payloads degrade to the (0, 0, zeros) row — per-row error isolation
-    (ref: app/Commands.java:76-84), same contract as ``_bmp_decode``."""
-    if data is None or len(data) == 0:
-        return 0, 0, np.zeros(REAL_FEATURE_DIM, dtype=np.float32)
-    try:
-        w, h, gray = decode_png(data)
-        block = bilinear_resize(gray, 8, 8)
-        return w, h, block.reshape(REAL_FEATURE_DIM).astype(np.float32)
-    except ValueError:
-        return 0, 0, np.zeros(REAL_FEATURE_DIM, dtype=np.float32)
+    return _codec_decode(decode_png, data)
 
 
 def _jpeg_decode(data: bytes) -> tuple[int, int, np.ndarray]:
-    """Codec-free real decode kernel: baseline JPEG read
-    (operators/jpeg.py) -> luminance -> 8x8 bilinear block. Malformed
-    payloads degrade to the (0, 0, zeros) row — per-row error
-    isolation (ref: app/Commands.java:76-84)."""
-    from imageduplicatefinder_spark.operators.jpeg import decode_jpeg
-
-    if data is None or len(data) == 0:
-        return 0, 0, np.zeros(REAL_FEATURE_DIM, dtype=np.float32)
-    try:
-        w, h, gray = decode_jpeg(data)
-        block = bilinear_resize(gray, 8, 8)
-        return w, h, block.reshape(REAL_FEATURE_DIM).astype(np.float32)
-    except ValueError:
-        return 0, 0, np.zeros(REAL_FEATURE_DIM, dtype=np.float32)
+    return _codec_decode(decode_jpeg, data)
 
 
 def _auto_decode(data: bytes) -> tuple[int, int, np.ndarray]:

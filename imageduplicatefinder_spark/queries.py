@@ -723,27 +723,6 @@ FROM k
 """
 
 
-def q_containment_confirmed_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same J3 exact confirmation, probed through the SUFFIX-ARRAY
-    primitive (north_star "suffix-array substring matching" literal):
-    pairs grouped per host document, the host's suffix array built once
-    (prefix-doubling numpy, operators/containment.py:_suffix_array) and
-    each candidate answered by O(m log n) binary search. Shares
-    q_containment_confirmed's oracle — the probe primitive must not
-    change a single bit of the result."""
-    from imageduplicatefinder_spark.operators.containment import (
-        containment_verify_grouped,
-    )
-
-    pairs = q_ngram_containment_pairs(spark, sf_dir).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.col("text").alias("content")
-    )
-    return containment_verify_grouped(pairs, docs, use_suffix_array=True)
-
-
 _COVERAGE_N = 13  # GPT-3 appendix-A decontamination gram length
 
 
@@ -5258,8 +5237,8 @@ QUERIES: dict[str, QueryFn] = {
     # --- driver window boundary (50) -----------------------------------
     # past the window: still oracled + checked by tools/check_oracles.py,
     # each redundant with an in-window sibling (containment_confirmed_sa
-    # shares containment_confirmed's oracle and its SA path is pytest-
-    # pinned) or vacuous at driver scale (exact_dup_*/code_clone_classes/
+    # is an alias of containment_confirmed, whose suffix-array path is
+    # pytest-pinned) or vacuous at driver scale (exact_dup_*/code_clone_classes/
     # embedding_near_dup_pairs return 0 rows on the driver corpus — their
     # non-vacuous siblings hold the window slots) or a relational demo
     "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
@@ -5270,7 +5249,7 @@ QUERIES: dict[str, QueryFn] = {
     "exact_dup_pairs": q_exact_dup_pairs,
     "code_clone_classes": q_code_clone_classes,
     "embedding_near_dup_pairs": q_embedding_near_dup_pairs,
-    "containment_confirmed_sa": q_containment_confirmed_sa,
+    "containment_confirmed_sa": q_containment_confirmed,
     "near_dup_clusters_star": q_near_dup_clusters_star,
     "token_stats": q_token_stats,
     "train_val_test_split": q_train_val_test_split,

@@ -1,6 +1,10 @@
-from pyspark.sql import functions as F
-
+from imageduplicatefinder_spark.operators import containment as C
 from imageduplicatefinder_spark.operators.containment import containment_verify
+
+
+def _verify(pairs, docs):
+    return {(r.src, r.dst): (r.contained, r.contained_canonical, r.offset)
+            for r in containment_verify(pairs, docs).collect()}
 
 
 def test_containment_verify_exact_and_canonical(spark):
@@ -30,11 +34,7 @@ def test_containment_empty_small_side(spark):
     assert r.contained and r.offset == 0  # empty string trivially contained
 
 
-def test_containment_verify_grouped_matches_plain(spark):
-    from imageduplicatefinder_spark.operators.containment import (
-        containment_verify_grouped,
-    )
-
+def test_containment_verify_host_on_either_side(spark):
     docs = spark.createDataFrame(
         [
             (1, "alpha beta"),
@@ -45,48 +45,20 @@ def test_containment_verify_grouped_matches_plain(spark):
         ],
         "doc_id long, content string",
     )
-    # (2,3)/(2,4): the bigger host doc 2 sits on the SRC side (smaller
-    # doc_id) — the grouped form must group by the host, not by dst
+    # (2,3): the bigger host doc 2 sits on the SRC side (smaller doc_id)
+    # — the probes must be grouped by the host, not by dst; (4,2)/(2,4)
+    # tie on length, so the dst side hosts
     pairs = spark.createDataFrame(
         [(1, 2), (3, 2), (4, 2), (2, 5), (2, 3), (2, 4)], "src long, dst long"
     )
-    plain = {(r.src, r.dst): (r.contained, r.contained_canonical, r.offset)
-             for r in containment_verify(pairs, docs).collect()}
-    grouped = {(r.src, r.dst): (r.contained, r.contained_canonical, r.offset)
-               for r in containment_verify_grouped(pairs, docs).collect()}
-    assert plain == grouped
-    assert grouped[(1, 2)][0] and grouped[(2, 5)][0]
-    assert not grouped[(4, 2)][0]
-
-
-def test_containment_candidates_find_high_ratio_pairs(spark):
-    """The candidate generator must surface 'snippet embedded in a much
-    bigger host' pairs — the exact shape MinHash bands miss (J ~ 1/ratio)."""
-    from imageduplicatefinder_spark.config import DedupConfig
-    from imageduplicatefinder_spark.operators.containment import (
-        containment_candidates,
-    )
-    from imageduplicatefinder_spark.operators.signatures import compute_signatures
-
-    snippet = " ".join(f"tok{i}" for i in range(40))
-    filler = " ".join(f"host{i}" for i in range(400))
-    rows = [
-        ("r", "snippet.py", "c1", "py", snippet),
-        ("r", "host.py", "c2", "py", filler + " " + snippet),     # ratio ~11
-        ("r", "unrelated.py", "c3", "py",
-         " ".join(f"zzz{i}" for i in range(40))),
-    ]
-    docs = spark.createDataFrame(
-        rows, "repo string, path string, commit string, lang string, content string"
-    )
-    sig = compute_signatures(docs, DedupConfig())
-    ids = {r.path: r.doc_id for r in sig.select("path", "doc_id").collect()}
-    got = {(r.src, r.dst) for r in containment_candidates(sig).collect()}
-    want = (min(ids["snippet.py"], ids["host.py"]),
-            max(ids["snippet.py"], ids["host.py"]))
-    assert want in got
-    for a, b in got:  # unrelated doc never pairs
-        assert ids["unrelated.py"] not in (a, b)
+    assert _verify(pairs, docs) == {
+        (1, 2): (True, True, 2),
+        (3, 2): (False, True, -1),
+        (4, 2): (False, False, -1),
+        (2, 5): (True, True, 2),
+        (2, 3): (False, True, -1),
+        (2, 4): (False, False, -1),
+    }
 
 
 def test_containment_null_content_treated_as_empty(spark):
@@ -98,12 +70,6 @@ def test_containment_null_content_treated_as_empty(spark):
     pairs = spark.createDataFrame([(1, 2)], "src long, dst long")
     r = containment_verify(pairs, docs).collect()[0]
     assert r.contained and r.offset == 0
-    from imageduplicatefinder_spark.operators.containment import (
-        containment_verify_grouped,
-    )
-
-    g = containment_verify_grouped(pairs, docs).collect()[0]
-    assert g.contained and g.offset == 0
 
 
 def test_suffix_array_matches_sorted_suffixes_and_find():
@@ -136,13 +102,9 @@ def test_suffix_array_matches_sorted_suffixes_and_find():
     assert _sa_find(s, sa, "ac") == -1
 
 
-def test_containment_grouped_suffix_array_matches_find(spark):
+def test_containment_grouped_suffix_array_matches_find(spark, monkeypatch):
     """Forcing the suffix-array probe primitive must be bit-identical
     to the find() path on exact, canonical-only, and miss pairs."""
-    from imageduplicatefinder_spark.operators.containment import (
-        containment_verify_grouped,
-    )
-
     docs = spark.createDataFrame(
         [
             (1, "alpha beta"),
@@ -156,14 +118,47 @@ def test_containment_grouped_suffix_array_matches_find(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (3, 2), (4, 2), (2, 5), (2, 3), (2, 4)], "src long, dst long"
     )
-    plain = {(r.src, r.dst): (r.contained, r.contained_canonical, r.offset)
-             for r in containment_verify_grouped(
-                 pairs, docs, use_suffix_array=False).collect()}
-    sa = {(r.src, r.dst): (r.contained, r.contained_canonical, r.offset)
-          for r in containment_verify_grouped(
-              pairs, docs, use_suffix_array=True).collect()}
+    plain = _verify(pairs, docs)
+    monkeypatch.setattr(C, "SA_MIN_PROBES", 0)
+    sa = _verify(pairs, docs)
     assert plain == sa
     assert sa[(1, 2)] == (True, True, 2)
+
+
+def test_containment_mixed_hosts_pick_primitive_by_probe_count(
+    spark, monkeypatch
+):
+    """At SA_MIN_PROBES = 2 one call mixes both primitives: host 10 has
+    four probes, three of them on the canonical path (so both of its
+    suffix arrays are built), host 20 has one (find()). Every pair must
+    equal the find() answer."""
+    host_sa = "ab ab  cd ab ab  cd tail"
+    host_find = "one two  three one two  three"
+    docs = spark.createDataFrame(
+        [
+            (10, host_sa),
+            (1, "ab ab"),          # repeated hit: offset = first
+            (2, "ab cd"),          # canonical-only
+            (3, "zz"),             # miss
+            (5, "ab cd ab"),       # canonical-only
+            (20, host_find),
+            (4, "two three"),      # canonical-only
+        ],
+        "doc_id long, content string",
+    )
+    pairs = spark.createDataFrame(
+        [(1, 10), (2, 10), (3, 10), (10, 5), (4, 20)], "src long, dst long"
+    )
+    want = {
+        (1, 10): (True, True, host_sa.find("ab ab")),
+        (2, 10): (False, True, -1),
+        (3, 10): (False, False, -1),
+        (10, 5): (False, True, -1),
+        (4, 20): (False, True, -1),
+    }
+    assert _verify(pairs, docs) == want
+    monkeypatch.setattr(C, "SA_MIN_PROBES", 2)
+    assert _verify(pairs, docs) == want
 
 
 def test_canon_is_explicit_ascii_whitespace_only(spark):
@@ -178,37 +173,20 @@ def test_canon_is_explicit_ascii_whitespace_only(spark):
     assert _canon("a\xa0b") == "a\xa0b"      # NBSP preserved
 
 
-def test_use_suffix_array_rejects_bad_mode(spark):
-    """A misspelled mode ("force", "true") must raise, not silently
-    fall through to the find() path."""
-    import pytest as _pytest
-
-    from imageduplicatefinder_spark.operators.containment import (
-        containment_verify_grouped,
-    )
-
-    docs = spark.createDataFrame([(1, "a")], "doc_id long, content string")
-    pairs = spark.createDataFrame([(1, 1)], "src long, dst long")
-    with _pytest.raises(ValueError, match="use_suffix_array"):
-        containment_verify_grouped(pairs, docs, use_suffix_array="force")
-
-
-def test_lone_surrogate_host_degrades_to_find(spark):
+def test_lone_surrogate_host_degrades_to_find(spark, monkeypatch):
     """A host string containing a lone surrogate breaks the utf-32
     encode behind the suffix array; the probe must degrade to find()
     instead of aborting the task (str.find handles surrogates fine)."""
-    from imageduplicatefinder_spark.operators.containment import (
-        containment_verify_grouped,
-    )
-
     host = "prefix \ud800 alpha beta suffix"
+    assert C._suffix_array_or_none(host) is None
     docs = spark.createDataFrame(
         [(1, "alpha beta"), (2, host), (3, "missing")],
         "doc_id long, content string",
     )
     pairs = spark.createDataFrame([(1, 2), (3, 2)], "src long, dst long")
-    got = {(r.src, r.dst): (r.contained, r.offset)
-           for r in containment_verify_grouped(
-               pairs, docs, use_suffix_array=True).collect()}
-    assert got[(1, 2)] == (True, host.find("alpha beta"))
-    assert got[(3, 2)] == (False, -1)
+    plain = _verify(pairs, docs)
+    monkeypatch.setattr(C, "SA_MIN_PROBES", 0)
+    got = _verify(pairs, docs)
+    assert got == plain
+    assert got[(1, 2)] == (True, True, host.find("alpha beta"))
+    assert got[(3, 2)] == (False, False, -1)

@@ -108,20 +108,6 @@ def test_no_cartesian_in_any_dedup_similarity_query(spark):
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 
-def test_containment_candidates_no_cartesian(spark):
-    from imageduplicatefinder_spark.config import DedupConfig
-    from imageduplicatefinder_spark.operators.containment import (
-        containment_candidates,
-    )
-    from imageduplicatefinder_spark.operators.signatures import compute_signatures
-    from imageduplicatefinder_spark.queries import _docs_as_input_hint
-
-    sig = compute_signatures(_docs_as_input_hint(spark, SF_DIR), DedupConfig())
-    plan = plan_of(containment_candidates(sig))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_media_dedup_no_cartesian(spark):
     from imageduplicatefinder_spark.operators.multimodal import (
         extract_features,

@@ -32,10 +32,9 @@ from imageduplicatefinder_spark.session import get_spark  # noqa: E402
 
 def main() -> None:
     replicate = int(sys.argv[1]) if len(sys.argv) > 1 else 16
-    cpus = int(sys.argv[2]) if len(sys.argv) > 2 else 8
+    master = f"local[{int(sys.argv[2])}]" if len(sys.argv) > 2 else None
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="bench_candidate_schemes",
-                      master=f"local[{cpus}]", shuffle_partitions=cpus)
+    spark = get_spark(app_name="bench_candidate_schemes", master=master)
     docs = build_replicated_documents(spark, sf_dir, replicate,
                                       distinct=True).cache()
     n_docs = docs.count()

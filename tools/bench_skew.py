@@ -49,11 +49,11 @@ BOILER_TOKENS = 120
 
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    cpus, frac, replicate = 32, 0.3, 1
+    master, frac, replicate = None, 0.3, 1
     skip_exact = "--skip-exact" in sys.argv
     for a in sys.argv[1:]:
         if a.startswith("--cpus"):
-            cpus = int(a.split("=", 1)[1])
+            master = f"local[{int(a.split('=', 1)[1])}]"
         if a.startswith("--frac"):
             frac = float(a.split("=", 1)[1])
         if a.startswith("--replicate"):
@@ -81,8 +81,7 @@ def main() -> None:
     from imageduplicatefinder_spark.queries import _docs_as_input_hint
     from imageduplicatefinder_spark.session import get_spark
 
-    spark = get_spark(app_name="bench_skew", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus)
+    spark = get_spark(app_name="bench_skew", master=master)
 
     boiler = " ".join(f"boilerplate_token_{i}" for i in range(BOILER_TOKENS))
     if replicate > 1:

@@ -44,8 +44,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from imageduplicatefinder_spark.session import get_spark
 
-    spark = get_spark(app_name="check_oracles", master="local[8]",
-                      shuffle_partitions=8)
+    spark = get_spark(app_name="check_oracles")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(
