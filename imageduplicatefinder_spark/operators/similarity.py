@@ -123,18 +123,17 @@ def int_cosine_tile_pairs(
     (``cos2_den * dot^2 >= cos2_num * |a|^2 * |b|^2``, no sqrt, no
     float boundary), so the output hash-matches a SQL oracle.
 
-    This is the COMPACT-VOCAB leg of the TF-IDF soft-dedup dispatch:
-    when the weighted vocabulary is small (<= a few thousand distinct
-    tokens), every token is hot and ANY token-keyed candidate scheme —
-    the brute self-join AND weighted prefix filtering — degenerates to
-    df^2 fan-out, because prefixes collapse onto the same few tokens
-    (measured at sf0.1: 12.39M candidate pairs from 5 000 docs over a
-    31-token vocab, i.e. zero pruning). Densifying to int vectors and
-    tiling turns the same n^2/2 work into B(B+1)/2 independent BLAS
-    tiles emitting only survivors — no candidate-pair shuffle at all.
-    For large vocabularies (distinct vectors, rare tokens) the
-    weighted-prefix join is the right plan; queries.py documents the
-    dispatch rule.
+    This is the dense leg of the TF-IDF soft-dedup dispatcher
+    (``queries.q_tfidf_cosine_pairs``): when the weighted vocabulary is
+    small (<= a few thousand distinct tokens), every token is hot and
+    a token-keyed candidate scheme such as weighted prefix filtering
+    degenerates to df^2 fan-out, because prefixes collapse onto the
+    same few tokens (measured at sf0.1: 12.39M candidate pairs from
+    5 000 docs over a 31-token vocab, i.e. zero pruning). Densifying
+    to int vectors and tiling turns the same n^2/2 work into B(B+1)/2
+    independent BLAS tiles emitting only survivors — no candidate-pair
+    shuffle at all. Past the dispatcher's vocabulary limit the
+    weighted-prefix leg runs instead.
 
     Exactness envelope (round-6 shape — one HALF-precision matmul per
     tile instead of two full ones): the tile's only dense matmul is a
@@ -152,8 +151,9 @@ def int_cosine_tile_pairs(
     operator raises rather than wrap silently — rescale the weights or
     use the weighted-prefix join. Norms are exact int64 row sums. The
     screen can only over-select (slack direction), never drop: output
-    is IDENTICAL to the float64/bigint round-5 kernel and to the brute
-    form (pytest pins three-way equality).
+    is IDENTICAL to the float64/bigint round-5 kernel and to the
+    weighted-prefix leg (pytest pins both legs against the DuckDB
+    oracle).
 
     Input: one row per vector, sparse as parallel arrays ``idx_col``
     (int positions < dim) / ``val_col`` (nonnegative int64 weights,

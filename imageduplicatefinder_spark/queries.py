@@ -1976,6 +1976,48 @@ FROM scored
 #: integer comparison with no floating-point boundary to disagree on
 _TFIDF_COS2_NUM = 81
 _TFIDF_COS2_DEN = 100
+#: the one TF-IDF dispatch limit: the dense tile leg densifies to
+#: |weighted vocab| columns per row, so past this many weighted tokens
+#: the weighted-prefix leg runs instead
+_TFIDF_DENSE_VOCAB_MAX = 4096
+
+
+def _tfidf_weights(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, int]:
+    """The one tf/idf build both TF-IDF legs read: ``tf`` (doc_id, tok,
+    tf), localCheckpointed because the idf aggregate and the leg's
+    weight join both read it; ``idf`` (tok, df, idf_deci), holding only
+    tokens that carry weight; and the corpus size as a driver literal.
+
+    idf is floored to DECI units, floor(10*log10(N/df)). That is
+    irrational except at exact powers of ten, where IEEE log10 is
+    exact, so the floor never straddles engines and every weight
+    tf * idf_deci is an integer. Tokens with idf_deci == 0 (df within
+    ~21% of N: corpus boilerplate) carry no weight and are dropped
+    here, so no join downstream fans out on them."""
+    docs = load_table(spark, sf_dir, "documents")
+    tf = (
+        widen_if_narrow(docs).select("doc_id", F.explode(_words()).alias("tok"))
+        .filter(F.col("tok") != "")
+        .groupBy("doc_id", "tok")
+        .agg(F.count("*").alias("tf"))
+        .localCheckpoint(eager=False)
+    )
+    n_docs = docs.count()
+    idf = (
+        tf.groupBy("tok")
+        .agg(F.count("*").alias("df"))
+        .withColumn(
+            "idf_deci",
+            F.greatest(
+                F.floor(F.log10(F.lit(float(n_docs)) / F.col("df")) * 10),
+                F.lit(0),
+            ).cast("long"),
+        )
+        .filter(F.col("idf_deci") > 0)
+    )
+    return tf, idf, n_docs
 
 
 def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1988,130 +2030,81 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup over sparse vectors rather than embeddings).
 
     Cross-engine exactness (same recipe as unigram_logprob_quality):
-    idf is floored to DECI units per token (10*log10(N/df) is
-    irrational except at exact powers of ten, where IEEE log10 is
-    exact, so the floor can never straddle engines), weights w = tf *
-    idf_deci are integers, and the cosine cut cos² >= 81/100 becomes
-    the pure-integer comparison 100*dot² >= 81*|a|²*|b|² — no sqrt, no
-    float division anywhere. int64 envelope: w <= tf_max * 10*log10(N);
-    at the tested scales dot <= ~8e6 so 1000*dot² <= ~7e16 << 2⁶³; a
-    10¹²-file run would cast the three filter products to
-    decimal(38,0) (Spark) / HUGEINT (DuckDB) — same semantics, wider
-    lanes.
+    weights are the integers tf * idf_deci (``_tfidf_weights``), and
+    the cosine cut cos² >= 81/100 is the pure-integer comparison
+    100*dot² >= 81*|a|²*|b|² — no sqrt, no float division anywhere.
+    int64 envelope: w <= tf_max * 10*log10(N); at the tested scales
+    dot <= ~8e6 so 1000*dot² <= ~7e16 << 2⁶³; a 10¹²-file run would
+    cast the three filter products to decimal(38,0) (Spark) / HUGEINT
+    (DuckDB) — same semantics, wider lanes.
 
-    100 TB: tokens with idf_deci == 0 (df within ~21% of N — corpus
-    boilerplate) carry zero weight and are DROPPED before the self-join,
-    so the classic all-pairs-similarity hot-key problem self-resolves:
-    the join fans out only on discriminative (rarer) tokens, exactly
-    the DIMSUM/prefix-filter insight. Per-token fan-out is df²; AQE
-    skew-join splits what remains. Everything is keyed aggregation —
-    no cartesian, no window over the corpus, no Python."""
-    docs = load_table(spark, sf_dir, "documents")
-    tf = (
-        widen_if_narrow(docs).select("doc_id", F.explode(_words()).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("doc_id", "tok")
-        .agg(F.count("*").alias("tf"))
+    One operator, two physical legs, picked from the weighted
+    vocabulary size seen at run time. ``idf`` is collected in token
+    order, at most ``_TFIDF_DENSE_VOCAB_MAX + 1`` rows, so a web-scale
+    vocabulary never reaches the driver. When it fits, the dense tile
+    leg runs: a compact vocabulary makes every token hot, and any
+    token-keyed candidate scheme degenerates to df² fan-out (12.39M
+    candidate pairs from 5 000 docs over 31 tokens at sf0.1). Past it,
+    the weighted-prefix leg runs (rare tokens, real pruning). Both legs
+    are integer-exact and return the same rows, so every TF-IDF catalog
+    key names this builder and shares SQL_TFIDF_COSINE_PAIRS."""
+    tf, idf, n_docs = _tfidf_weights(spark, sf_dir)
+    vocab_rows = (
+        idf.select("tok", "idf_deci")
+        .orderBy("tok")
+        .limit(_TFIDF_DENSE_VOCAB_MAX + 1)
+        .collect()
     )
-    n = docs.agg(F.count("*").alias("n_docs"))
-    dfreq = tf.groupBy("tok").agg(F.count("*").alias("df"))
-    idf_deci = F.greatest(
-        F.floor(
-            F.log10(F.col("n_docs").cast("double") / F.col("df")) * 10
-        ),
-        F.lit(0),
-    ).cast("long")
-    w = (
-        tf.join(dfreq, "tok")
-        .crossJoin(F.broadcast(n))
+    if len(vocab_rows) > _TFIDF_DENSE_VOCAB_MAX:
+        return _tfidf_prefix_pairs(tf, idf)
+    return _tfidf_dense_pairs(tf, vocab_rows, n_docs)
+
+
+def _tfidf_dense_pairs(tf: DataFrame, vocab_rows: list, n_docs: int) -> DataFrame:
+    """Dense leg: each doc becomes a sparse int vector over the
+    broadcast vocabulary, and ``int_cosine_tile_pairs`` runs B(B+1)/2
+    independent block tiles that emit only survivors, with no
+    candidate-pair shuffle at all."""
+    from imageduplicatefinder_spark.operators.similarity import (
+        int_cosine_tile_pairs,
+    )
+
+    vocab = tf.sparkSession.createDataFrame(
+        [(i, r.tok, r.idf_deci) for i, r in enumerate(vocab_rows)],
+        "idx int, tok string, idf_deci long",
+    )
+    sparse = (
+        tf.join(F.broadcast(vocab), "tok")
+        .select("doc_id", "idx", (F.col("tf") * F.col("idf_deci")).alias("w"))
+        .groupBy("doc_id")
+        .agg(F.array_sort(F.collect_list(F.struct("idx", "w"))).alias("e"))
         .select(
-            "doc_id", "tok", (F.col("tf") * idf_deci).alias("w")
-        )
-        .filter(F.col("w") > 0)
-    )
-    norms = w.groupBy("doc_id").agg(
-        F.sum(F.col("w") * F.col("w")).alias("n2")
-    )
-    num = (
-        w.alias("a")
-        .join(
-            w.alias("b"),
-            (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst")
-        )
-        .agg(
-            F.sum(F.col("a.w") * F.col("b.w")).alias("dot"),
-            F.count("*").alias("n_shared"),
+            "doc_id",
+            F.col("e.idx").alias("idxs"),
+            F.col("e.w").alias("ws"),
         )
     )
-    return (
-        num.join(
-            norms.select(F.col("doc_id").alias("src"), F.col("n2").alias("na2")),
-            "src",
-        )
-        .join(
-            norms.select(F.col("doc_id").alias("dst"), F.col("n2").alias("nb2")),
-            "dst",
-        )
-        .filter(
-            F.lit(_TFIDF_COS2_DEN) * F.col("dot") * F.col("dot")
-            >= F.lit(_TFIDF_COS2_NUM) * F.col("na2") * F.col("nb2")
-        )
-        .select(
-            "src",
-            "dst",
-            F.col("n_shared").cast("long").alias("n_shared"),
-            F.col("dot").cast("long").alias("dot"),
-            F.expr(
-                "CAST((1000 * dot * dot) DIV (na2 * nb2) AS BIGINT)"
-            ).alias("cos2_permille"),
-        )
+    # block count scales with the corpus so tile rows stay ~3k and the
+    # B(B+1)/2 tasks oversubscribe the cores (36 tiles on 32 cores
+    # left 2-3-tile stragglers on the hash-collided partitions at
+    # sf1.0); output is partition-invariant, so the oracle is
+    # unaffected
+    n_blocks = min(64, max(8, -(-n_docs // 3072)))
+    return int_cosine_tile_pairs(
+        sparse,
+        dim=len(vocab_rows),
+        cos2_num=_TFIDF_COS2_NUM,
+        cos2_den=_TFIDF_COS2_DEN,
+        n_blocks=n_blocks,
     )
 
 
-SQL_TFIDF_COSINE_PAIRS = f"""
-WITH tf AS (
-  SELECT doc_id, tok, count(*) AS tf
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
-  WHERE tok <> '' GROUP BY doc_id, tok
-),
-n AS (SELECT count(*) AS n_docs FROM documents),
-dfreq AS (SELECT tok, count(*) AS df FROM tf GROUP BY tok),
-w AS (
-  SELECT tf.doc_id, tf.tok,
-         tf.tf * greatest(CAST(floor(
-           log10(CAST(n.n_docs AS DOUBLE) / dfreq.df) * 10) AS BIGINT), 0)
-           AS w
-  FROM tf JOIN dfreq USING (tok), n
-),
-wz AS (SELECT * FROM w WHERE w > 0),
-nrm AS (SELECT doc_id, sum(w * w) AS n2 FROM wz GROUP BY doc_id),
-num AS (
-  SELECT a.doc_id AS src, b.doc_id AS dst,
-         sum(a.w * b.w) AS dot, count(*) AS n_shared
-  FROM wz a JOIN wz b ON a.tok = b.tok AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT src, dst, CAST(n_shared AS BIGINT) AS n_shared,
-       CAST(dot AS BIGINT) AS dot,
-       CAST((1000 * dot * dot) // (na.n2 * nb.n2) AS BIGINT)
-         AS cos2_permille
-FROM num JOIN nrm na ON na.doc_id = num.src
-         JOIN nrm nb ON nb.doc_id = num.dst
-WHERE {_TFIDF_COS2_DEN} * dot * dot >= {_TFIDF_COS2_NUM} * na.n2 * nb.n2
-"""
-
-
-def q_tfidf_cosine_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME soft-dedup operator as q_tfidf_cosine_pairs (TF-IDF
-    cosine >= 0.9, integer-exact) computed via WEIGHTED PREFIX
-    FILTERING (AllPairs, Bayardo et al. 2007, §4) instead of the full
-    token self-join — the weighted analog of operators/prefix_join.py.
-    That module's prefix is a fixed token count per doc; this one is
-    bounded by the tail's squared norm, so it keeps its own build.
+def _tfidf_prefix_pairs(tf: DataFrame, idf: DataFrame) -> DataFrame:
+    """Weighted-prefix leg: WEIGHTED PREFIX FILTERING (AllPairs,
+    Bayardo et al. 2007, §4), the weighted analog of
+    operators/prefix_join.py. That module's prefix is a fixed token
+    count per doc; this one is bounded by the tail's squared norm, so
+    it keeps its own build.
 
     Order each doc's weighted tokens by a GLOBAL key (document
     frequency asc, token asc) — rarest first — and keep in the doc's
@@ -2126,39 +2119,17 @@ def q_tfidf_cosine_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     contradiction; so every qualifying pair surfaces in the
     full(a) x prefix(b) token join (either probe direction; pairs are
     canonicalized + distinct). Exact verification then recomputes the
-    integer cosine over candidate pairs only, so the result is
-    IDENTICAL to the brute form — it shares SQL_TFIDF_COSINE_PAIRS as
-    its oracle, and a pytest pins Spark-vs-Spark equality.
+    integer cosine over candidate pairs only.
 
-    100 TB: this kills the brute form's df^2 hot-token fan-out (the
-    round-3 `weak`). The join's index side holds only prefix tokens —
-    and a token common enough to be hot has LOW idf weight, so it
+    100 TB: a token common enough to be hot has LOW idf weight, so it
     sorts LAST in every doc and falls out of prefixes first; fan-out
-    per token becomes df_full x df_prefix with df_prefix collapsing
-    exactly where df_full explodes. The per-doc tail sums are one
-    window pass partitioned by doc_id (bounded by doc length, no
-    global window), and the verify join touches only candidate
-    pairs."""
-    docs = load_table(spark, sf_dir, "documents")
-    tf = (
-        widen_if_narrow(docs).select("doc_id", F.explode(_words()).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("doc_id", "tok")
-        .agg(F.count("*").alias("tf"))
-    )
-    n = docs.agg(F.count("*").alias("n_docs"))
-    dfreq = tf.groupBy("tok").agg(F.count("*").alias("df"))
-    idf_deci = F.greatest(
-        F.floor(
-            F.log10(F.col("n_docs").cast("double") / F.col("df")) * 10
-        ),
-        F.lit(0),
-    ).cast("long")
+    per token is df_full x df_prefix, with df_prefix collapsing exactly
+    where df_full explodes. The per-doc tail sums are one window pass
+    partitioned by doc_id (bounded by doc length, no global window),
+    and the verify join touches only candidate pairs."""
     w = (
-        tf.join(dfreq, "tok")
-        .crossJoin(F.broadcast(n))
-        .select("doc_id", "tok", "df", (F.col("tf") * idf_deci).alias("w"))
-        .filter(F.col("w") > 0)
+        tf.join(idf, "tok")
+        .select("doc_id", "tok", "df", (F.col("tf") * F.col("idf_deci")).alias("w"))
         # both the prefix builder and the verify join reuse this table;
         # localCheckpoint materializes it once
         .localCheckpoint(eager=False)
@@ -2238,136 +2209,37 @@ def q_tfidf_cosine_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: dense-path guard: the int-vector tile join densifies to |vocab|
-#: columns per row; beyond this many weighted tokens the sparse
-#: prefix-filter join is the right plan and the dense builder refuses
-_TFIDF_DENSE_VOCAB_MAX = 4096
-
-
-def q_tfidf_cosine_dense_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME soft-dedup operator as q_tfidf_cosine_pairs, computed
-    via the DENSE block-matrix tile join (operators/similarity.py
-    int_cosine_tile_pairs) — the compact-vocabulary leg of the TF-IDF
-    dispatch.
-
-    Why a third form exists: candidate generation by token equality —
-    brute self-join AND weighted prefix filtering alike — fans out by
-    document frequency, and on a compact vocabulary EVERY token is hot
-    (measured at sf0.1: 31 distinct tokens, 5 000 docs, 12.39M
-    candidate pairs after prefix filtering = zero pruning). When
-    |weighted vocab| is small enough to densify (<=
-    _TFIDF_DENSE_VOCAB_MAX), the right plan is no candidate pairs at
-    all: sparse int vectors -> B(B+1)/2 independent BLAS tiles that
-    emit only survivors. q_tfidf_cosine_pairs_auto applies the rule:
-    this form when it fits, the weighted-prefix form otherwise
-    (realistic web corpora, where vocab is huge and prefixes prune).
-
-    Integer exactness end-to-end: weights are the same tf * idf_deci
-    integers, dots are float64-BLAS-exact on the integer grid (int64
-    matmul past 2^53), and every screened pair is re-verified with
-    arbitrary-precision integer arithmetic — so the output is
-    IDENTICAL to the brute form and shares SQL_TFIDF_COSINE_PAIRS as
-    its oracle (pytest pins three-way Spark equality).
-
-    The one driver-side action is the vocab collect — bounded by the
-    guard, the same pattern as IVF's broadcast centroids."""
-    out = _tfidf_dense_pairs(spark, sf_dir)
-    if out is None:
-        raise ValueError(
-            f"weighted vocabulary exceeds {_TFIDF_DENSE_VOCAB_MAX} tokens;"
-            " the dense tile join densifies past it — use"
-            " q_tfidf_cosine_prefix_pairs for large vocabularies"
-        )
-    return out
-
-
-def _tfidf_dense_pairs(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """q_tfidf_cosine_dense_pairs' plan, or None when the weighted
-    vocabulary exceeds ``_TFIDF_DENSE_VOCAB_MAX`` (the caller falls
-    back or refuses)."""
-    from imageduplicatefinder_spark.operators.similarity import (
-        int_cosine_tile_pairs,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    tf = (
-        widen_if_narrow(docs).select("doc_id", F.explode(_words()).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("doc_id", "tok")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)  # reused: dfreq + weight join
-    )
-    n_docs = docs.count()
-    vocab_rows = (
-        tf.groupBy("tok")
-        .agg(F.count("*").alias("df"))
-        .select(
-            "tok",
-            F.greatest(
-                F.floor(
-                    F.log10(F.lit(float(n_docs)) / F.col("df")) * 10
-                ),
-                F.lit(0),
-            ).cast("long").alias("idf_deci"),
-        )
-        .filter(F.col("idf_deci") > 0)
-        .orderBy("tok")
-        # one row past the guard is enough to refuse: a web-scale vocab
-        # never reaches the driver
-        .limit(_TFIDF_DENSE_VOCAB_MAX + 1)
-        .collect()
-    )
-    if len(vocab_rows) > _TFIDF_DENSE_VOCAB_MAX:
-        return None
-    vocab = spark.createDataFrame(
-        [(i, r.tok, r.idf_deci) for i, r in enumerate(vocab_rows)],
-        "idx int, tok string, idf_deci long",
-    )
-    sparse = (
-        tf.join(F.broadcast(vocab), "tok")
-        .select("doc_id", "idx", (F.col("tf") * F.col("idf_deci")).alias("w"))
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("idx", "w"))).alias("e"))
-        .select(
-            "doc_id",
-            F.col("e.idx").alias("idxs"),
-            F.col("e.w").alias("ws"),
-        )
-    )
-    # block count scales with the corpus so tile rows stay ~3k and the
-    # B(B+1)/2 tasks oversubscribe the cores (36 tiles on 32 cores
-    # left 2-3-tile stragglers on the hash-collided partitions at
-    # sf1.0); output is partition-invariant, so the oracle is
-    # unaffected
-    n_blocks = min(64, max(8, -(-n_docs // 3072)))
-    return int_cosine_tile_pairs(
-        sparse,
-        dim=len(vocab_rows),
-        cos2_num=_TFIDF_COS2_NUM,
-        cos2_den=_TFIDF_COS2_DEN,
-        n_blocks=n_blocks,
-    )
-
-
-def q_tfidf_cosine_pairs_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The TF-IDF soft-dedup DISPATCHER: the dense block-matrix tile
-    join when the weighted vocabulary fits (<= _TFIDF_DENSE_VOCAB_MAX
-    tokens: compact vocab = every token hot = token-keyed candidate
-    schemes degenerate to df^2), the weighted prefix-filter join
-    otherwise (web-scale vocab: rare tokens, real pruning). The
-    decision is the dense builder's own bounded vocab collect — no
-    separate probe. Round-4 verdict: the dispatch rule used to live
-    only in docstrings, leaving q_tfidf_cosine_pairs (brute, df^2
-    fan-out) as the entry a naive caller grabs first — this entry makes
-    the rule code a caller can't skip.
-
-    All three fixed plans are integer-exact and output-identical
-    (pytest-pinned), so the dispatch can never change RESULTS — only
-    the plan. Shares SQL_TFIDF_COSINE_PAIRS as its oracle."""
-    dense = _tfidf_dense_pairs(spark, sf_dir)
-    if dense is not None:
-        return dense
-    return q_tfidf_cosine_prefix_pairs(spark, sf_dir)
+SQL_TFIDF_COSINE_PAIRS = f"""
+WITH tf AS (
+  SELECT doc_id, tok, count(*) AS tf
+  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
+  WHERE tok <> '' GROUP BY doc_id, tok
+),
+n AS (SELECT count(*) AS n_docs FROM documents),
+dfreq AS (SELECT tok, count(*) AS df FROM tf GROUP BY tok),
+w AS (
+  SELECT tf.doc_id, tf.tok,
+         tf.tf * greatest(CAST(floor(
+           log10(CAST(n.n_docs AS DOUBLE) / dfreq.df) * 10) AS BIGINT), 0)
+           AS w
+  FROM tf JOIN dfreq USING (tok), n
+),
+wz AS (SELECT * FROM w WHERE w > 0),
+nrm AS (SELECT doc_id, sum(w * w) AS n2 FROM wz GROUP BY doc_id),
+num AS (
+  SELECT a.doc_id AS src, b.doc_id AS dst,
+         sum(a.w * b.w) AS dot, count(*) AS n_shared
+  FROM wz a JOIN wz b ON a.tok = b.tok AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+)
+SELECT src, dst, CAST(n_shared AS BIGINT) AS n_shared,
+       CAST(dot AS BIGINT) AS dot,
+       CAST((1000 * dot * dot) // (na.n2 * nb.n2) AS BIGINT)
+         AS cos2_permille
+FROM num JOIN nrm na ON na.doc_id = num.src
+         JOIN nrm nb ON nb.doc_id = num.dst
+WHERE {_TFIDF_COS2_DEN} * dot * dot >= {_TFIDF_COS2_NUM} * na.n2 * nb.n2
+"""
 
 
 #: sequence-packing budget: docs are packed, in deterministic doc_id
@@ -4233,12 +4105,6 @@ def q_near_dup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cluster_members(edges)
 
 
-def q_near_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same operator as ``near_dup_clusters_exact`` (one CC algorithm:
-    star contraction behind the driver pass), kept as a catalog name."""
-    return q_near_dup_clusters_exact(spark, sf_dir)
-
-
 SQL_NEAR_DUP_CLUSTERS_EXACT = f"""
 WITH RECURSIVE {_SHINGLE_CTE},
 edges AS (
@@ -5176,11 +5042,9 @@ QUERIES: dict[str, QueryFn] = {
     "char_ngram_jaccard_pairs": q_char_ngram_jaccard_pairs,
     "minhash_band_pairs_portable": q_minhash_band_pairs_portable,
     "lsh_recall_report": q_lsh_recall_report,
-    # tfidf: the AUTO dispatcher holds the window slot (same oracle and
-    # result as the brute baseline, plus the dispatch rule); brute and
-    # the two fixed alternates are pytest-pinned output-identical and
-    # sit past the window — the freed slot went to ann_ivf_topk
-    "tfidf_cosine_pairs_auto": q_tfidf_cosine_pairs_auto,
+    # tfidf: one dispatcher behind four keys; this one holds the window
+    # slot, the other three sit past the window
+    "tfidf_cosine_pairs_auto": q_tfidf_cosine_pairs,
     "containment_confirmed": q_containment_confirmed,
     "dedup_keeper_plan": q_dedup_keeper_plan,
     "quality_keeper_plan": q_quality_keeper_plan,
@@ -5236,21 +5100,21 @@ QUERIES: dict[str, QueryFn] = {
     "streaming_dup_stats": q_streaming_dup_stats,
     # --- driver window boundary (50) -----------------------------------
     # past the window: still oracled + checked by tools/check_oracles.py,
-    # each redundant with an in-window sibling (containment_confirmed_sa
-    # is an alias of containment_confirmed, whose suffix-array path is
-    # pytest-pinned) or vacuous at driver scale (exact_dup_*/code_clone_classes/
+    # each redundant with an in-window sibling (containment_confirmed_sa,
+    # near_dup_clusters_star and the other tfidf keys are aliases of
+    # in-window builders, whose dispatch paths are pytest-pinned) or vacuous at driver scale (exact_dup_*/code_clone_classes/
     # embedding_near_dup_pairs return 0 rows on the driver corpus — their
     # non-vacuous siblings hold the window slots) or a relational demo
     "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
     "tfidf_cosine_pairs": q_tfidf_cosine_pairs,
-    "tfidf_cosine_prefix_pairs": q_tfidf_cosine_prefix_pairs,
-    "tfidf_cosine_dense_pairs": q_tfidf_cosine_dense_pairs,
+    "tfidf_cosine_prefix_pairs": q_tfidf_cosine_pairs,
+    "tfidf_cosine_dense_pairs": q_tfidf_cosine_pairs,
     "exact_dup_clusters": q_exact_dup_clusters,
     "exact_dup_pairs": q_exact_dup_pairs,
     "code_clone_classes": q_code_clone_classes,
     "embedding_near_dup_pairs": q_embedding_near_dup_pairs,
     "containment_confirmed_sa": q_containment_confirmed,
-    "near_dup_clusters_star": q_near_dup_clusters_star,
+    "near_dup_clusters_star": q_near_dup_clusters_exact,
     "token_stats": q_token_stats,
     "train_val_test_split": q_train_val_test_split,
     "vocab_top_terms": q_vocab_top_terms,
@@ -5308,9 +5172,6 @@ ORACLES: dict[str, str] = {
     "minhash_band_pairs_portable": SQL_MINHASH_BAND_PAIRS_PORTABLE,
     "lsh_recall_report": SQL_LSH_RECALL_REPORT,
     "tfidf_cosine_pairs": SQL_TFIDF_COSINE_PAIRS,
-    # the prefix-filtered and dense-tile forms compute the identical
-    # result, so all three share one oracle (the ngram_jaccard_prefix
-    # pattern)
     "tfidf_cosine_prefix_pairs": SQL_TFIDF_COSINE_PAIRS,
     "tfidf_cosine_dense_pairs": SQL_TFIDF_COSINE_PAIRS,
     "tfidf_cosine_pairs_auto": SQL_TFIDF_COSINE_PAIRS,

@@ -5,5 +5,5 @@ from imageduplicatefinder_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="idf_tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="idf_tests")
     yield s

@@ -221,15 +221,23 @@ def test_quality_keeper_no_cartesian_partial_minby(spark):
     assert "partial_min_by" in plan, plan
 
 
-def test_tfidf_cosine_no_cartesian(spark):
-    """TF-IDF soft dedup: the token self-join must be an equi-join
-    (never a cartesian); the only nested-loop allowed is the 1-row
-    corpus-count scalar attach (same pattern as unigram_logprob)."""
-    plan = plan_of(QUERIES["tfidf_cosine_pairs"](spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    # the token self-join itself must be hash-based
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan \
-        or plan.count("BroadcastHashJoin") >= 1, plan
+def test_tfidf_cosine_no_cartesian(spark, monkeypatch):
+    """TF-IDF soft dedup, both legs of the dispatcher: no cartesian and
+    no nested loop (the corpus size is a driver literal). The dense leg
+    is one grouped pandas tile pass; the prefix leg has none, and its
+    token join is an equi-join."""
+    from imageduplicatefinder_spark import queries as Q
+
+    dense = plan_of(QUERIES["tfidf_cosine_pairs"](spark, SF_DIR))
+    monkeypatch.setattr(Q, "_TFIDF_DENSE_VOCAB_MAX", -1)
+    prefix = plan_of(QUERIES["tfidf_cosine_pairs"](spark, SF_DIR))
+    for plan in (dense, prefix):
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "FlatMapGroupsInPandas" in dense, dense
+    assert "FlatMapGroupsInPandas" not in prefix, prefix
+    assert "SortMergeJoin" in prefix or "ShuffledHashJoin" in prefix \
+        or "BroadcastHashJoin" in prefix, prefix
 
 
 def test_dump_plans_bnl_build_side_parser():

@@ -777,107 +777,99 @@ def test_lsh_recall_report_empty_corpus_cross_engine(spark, tmp_path):
     assert s == o == [(0, 0, 0, 0, 1000, 1000)]
 
 
-def test_tfidf_three_forms_identical_and_cross_engine(spark, tmp_path):
-    """The brute token self-join, the weighted-prefix-filtered join,
-    and the dense block-matrix tile join are THREE PLANS for ONE
-    operator (TF-IDF cosine >= 0.9, integer-exact): on a planted
-    corpus with both qualifying and non-qualifying near-dups all three
-    must return the identical pair set, and all three must match the
-    shared DuckDB oracle. The corpus vocabulary is large enough that
-    the prefix filter actually prunes (rare tokens exist) and small
-    enough for the dense form's vocab guard."""
-    base = (
-        "alpha bravo charlie delta echo foxtrot golf hotel india "
-        "juliet kilo lima mike november oscar papa quebec romeo"
-    )
-    forks = [
-        (1, base),
-        # one extra occurrence of a shared token: with every base token
-        # at df=2/w=3 and the doubled one at w=6, cos^2 =
-        # 171^2/(162*189) ~= 0.955 >= 0.81 -> qualifying pair
-        (2, base + " alpha"),
-        # one rare-token swap: the two df=1 swapped tokens carry weight
-        # 6 vs the shared 3s, cos^2 = 153^2/189^2 ~= 0.655 -> rejected
-        # (exercises the verify stage on a surviving candidate)
-        (6, base.replace("quebec", "sierra")),
-        # disjoint-vocab rewrite pair: exact token multiset permutation
-        # -> cosine exactly 1 -> qualifying
-        (3, "tango uniform victor whiskey xray yankee zulu "
-            "gamma theta sigma omega lambda epsilon"),
-        (4, "zulu yankee xray whiskey victor uniform tango "
-            "epsilon lambda omega sigma theta gamma"),
-        (5, "entirely disjoint vocabulary one two three four five six"),
-    ]
-    _write_docs(spark, tmp_path, forks)
-    runs = {
-        name: sorted(tuple(r) for r in
-                     QUERIES[name](spark, str(tmp_path)).collect())
-        for name in (
-            "tfidf_cosine_pairs",
-            "tfidf_cosine_prefix_pairs",
-            "tfidf_cosine_dense_pairs",
-        )
-    }
-    brute = runs["tfidf_cosine_pairs"]
-    pairs = {(a, b) for a, b, *_ in brute}
-    assert pairs == {(1, 2), (3, 4)}
-    assert runs["tfidf_cosine_prefix_pairs"] == brute
-    assert runs["tfidf_cosine_dense_pairs"] == brute
-    con = _duck_docs(tmp_path)
-    o = sorted(tuple(r) for r in
-               con.sql(ORACLES["tfidf_cosine_pairs"]).fetchall())
-    assert brute == o
+_TFIDF_BASE = (
+    "alpha bravo charlie delta echo foxtrot golf hotel india "
+    "juliet kilo lima mike november oscar papa quebec romeo"
+)
+#: corpus name -> (docs, expected pairs)
+_TFIDF_CORPORA = {
+    "forks": (
+        [
+            (1, _TFIDF_BASE),
+            # one extra occurrence of a shared token: base tokens at
+            # df=3/w=3, quebec at df=2/w=4, the doubled alpha at w=6:
+            # cos^2 = 178^2/(169*196) ~= 0.957 >= 0.81 -> qualifying
+            (2, _TFIDF_BASE + " alpha"),
+            # one rare-token swap: quebec (w=4) vs sierra (df=1, w=7)
+            # beside the shared 3s, cos^2 = 153^2/(169*202) ~= 0.686
+            # -> rejected (a surviving candidate the verify must drop)
+            (6, _TFIDF_BASE.replace("quebec", "sierra")),
+            # exact token multiset permutation -> cosine exactly 1
+            (3, "tango uniform victor whiskey xray yankee zulu "
+                "gamma theta sigma omega lambda epsilon"),
+            (4, "zulu yankee xray whiskey victor uniform tango "
+                "epsilon lambda omega sigma theta gamma"),
+            (5, "entirely disjoint vocabulary one two three four five six"),
+        ],
+        {(1, 2), (3, 4)},
+    ),
+    # each twin's rarest token is its own (df=1, w=7), so the pair is
+    # found only through the shared (w=4) tokens further into the
+    # prefix: cos^2 = 640^2/689^2 ~= 0.863
+    "rare_first": (
+        [
+            (1, " ".join(f"w{j}" for j in range(40)) + " only1"),
+            (2, " ".join(f"w{j}" for j in range(40)) + " only2"),
+        ] + [(i, f"filler{i}") for i in range(3, 7)],
+        {(1, 2)},
+    ),
+    # every token in every doc: df == N, idf_deci == 0 everywhere, so
+    # the weighted vocabulary is empty
+    "no_weighted_vocab": (
+        [
+            (1, "alpha bravo charlie"),
+            (2, "charlie bravo alpha alpha"),
+            (3, "bravo charlie alpha"),
+        ],
+        set(),
+    ),
+    # NULL and empty texts count toward N but carry no token
+    "null_and_empty": (
+        [
+            (1, None),
+            (2, ""),
+            (3, "the quick brown fox jumps"),
+            (4, "the quick brown fox jumps"),
+            (5, "lorem ipsum dolor sit amet"),
+        ],
+        {(3, 4)},
+    ),
+    "single_doc": ([(1, "a lone document")], set()),
+}
 
 
-def test_tfidf_auto_dispatch_equal_and_picks_by_vocab(spark, tmp_path):
-    """The auto dispatcher (round-4 verdict item 1) is the documented
-    dispatch rule AS CODE: identical output to all three fixed plans,
-    dense branch below the vocab cutoff, prefix branch above it —
-    pinned by monkeypatching the cutoff on the same corpus so both
-    branches run on identical input and still agree."""
+@pytest.mark.parametrize("leg", ["dense", "prefix"])
+@pytest.mark.parametrize("corpus", list(_TFIDF_CORPORA))
+def test_tfidf_legs_match_oracle(spark, tmp_path, monkeypatch, corpus, leg):
+    """TF-IDF cosine (>= 0.9, integer-exact) is one dispatcher over two
+    legs, picked by ``_TFIDF_DENSE_VOCAB_MAX``: the default keeps these
+    small vocabularies on the dense tile leg, and -1 forces the
+    weighted-prefix leg even when the weighted vocabulary is empty (0
+    would still fit it). Each forced leg must equal the DuckDB oracle,
+    on the planted forks and on the edge corpora."""
     from imageduplicatefinder_spark import queries as Q
 
-    base = (
-        "alpha bravo charlie delta echo foxtrot golf hotel india "
-        "juliet kilo lima mike november oscar papa quebec romeo"
-    )
-    forks = [
-        (1, base),
-        (2, base + " alpha"),
-        (3, "tango uniform victor whiskey xray yankee zulu "
-            "gamma theta sigma omega lambda epsilon"),
-        (4, "zulu yankee xray whiskey victor uniform tango "
-            "epsilon lambda omega sigma theta gamma"),
-        (5, "entirely disjoint vocabulary one two three four five six"),
-    ]
-    _write_docs(spark, tmp_path, forks)
-    brute = sorted(
+    if leg == "prefix":
+        monkeypatch.setattr(Q, "_TFIDF_DENSE_VOCAB_MAX", -1)
+    ran = []
+    for name in ("_tfidf_dense_pairs", "_tfidf_prefix_pairs"):
+        def spy(*args, _fn=getattr(Q, name), _name=name):
+            ran.append(_name)
+            return _fn(*args)
+
+        monkeypatch.setattr(Q, name, spy)
+    docs, expected = _TFIDF_CORPORA[corpus]
+    _write_docs(spark, tmp_path, docs)
+    got = sorted(
         tuple(r)
         for r in QUERIES["tfidf_cosine_pairs"](spark, str(tmp_path)).collect()
     )
-    # default cutoff (4096): this corpus' weighted vocab fits -> dense
-    auto_dense = sorted(
-        tuple(r)
-        for r in QUERIES["tfidf_cosine_pairs_auto"](
-            spark, str(tmp_path)
-        ).collect()
+    assert ran == [f"_tfidf_{leg}_pairs"]
+    assert {(a, b) for a, b, *_ in got} == expected
+    con = _duck_docs(tmp_path)
+    assert got == sorted(
+        tuple(r) for r in con.sql(ORACLES["tfidf_cosine_pairs"]).fetchall()
     )
-    assert auto_dense == brute
-    # squeeze the cutoff below the vocab size -> prefix branch; the
-    # dense form would now REFUSE (vocab guard), so agreement proves
-    # the dispatcher actually switched plans
-    old = Q._TFIDF_DENSE_VOCAB_MAX
-    Q._TFIDF_DENSE_VOCAB_MAX = 4
-    try:
-        auto_prefix = sorted(
-            tuple(r)
-            for r in QUERIES["tfidf_cosine_pairs_auto"](
-                spark, str(tmp_path)
-            ).collect()
-        )
-    finally:
-        Q._TFIDF_DENSE_VOCAB_MAX = old
-    assert auto_prefix == brute
 
 
 def test_streaming_dup_stats_matches_batch_oracle(spark, tmp_path):
@@ -915,27 +907,6 @@ def test_streaming_dup_stats_matches_batch_oracle(spark, tmp_path):
     # doc 3: single arrival -> 0 dups
     assert by_first["0000000003"][2] == 0
     assert len(got) == 4  # 4 distinct contents
-
-
-def test_tfidf_dense_vocab_guard(spark, tmp_path):
-    """The dense tile join densifies to |vocab| columns; past the
-    guard it must REFUSE loudly and point at the prefix form rather
-    than OOM an executor."""
-    import pytest as _pytest
-
-    from imageduplicatefinder_spark import queries as Q
-
-    forks = [
-        (i, " ".join(f"tok{i}w{j}" for j in range(40))) for i in range(4)
-    ]
-    _write_docs(spark, tmp_path, forks)
-    old = Q._TFIDF_DENSE_VOCAB_MAX
-    Q._TFIDF_DENSE_VOCAB_MAX = 8
-    try:
-        with _pytest.raises(ValueError, match="prefix"):
-            QUERIES["tfidf_cosine_dense_pairs"](spark, str(tmp_path))
-    finally:
-        Q._TFIDF_DENSE_VOCAB_MAX = old
 
 
 def test_token_set_dup_pairs_cross_engine(spark, tmp_path):

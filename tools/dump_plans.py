@@ -18,7 +18,7 @@ sys.path.insert(0, ".")
 #: queries whose plan may contain a BroadcastNestedLoopJoin — each is a
 #: 1-row corpus-count scalar attach (cross join against a global agg),
 #: verified structurally below; everything else must be BNL-free
-ALLOW_BNL = frozenset({"tfidf_cosine_pairs", "unigram_logprob_quality"})
+ALLOW_BNL = frozenset({"unigram_logprob_quality"})
 
 
 #: queries whose physical plan may contain a GLOBAL (unpartitioned)
@@ -142,26 +142,15 @@ ANNOTATED = {
         "keys + a single partial-aggregated global row"
     ),
     "tfidf_cosine_pairs": (
-        "TF-IDF soft dedup: integer deci-floored idf weights, zero-weight "
-        "(boilerplate) tokens dropped BEFORE the token self-join, cosine "
-        "cut as pure-integer 100*dot^2 >= 81*|a|^2*|b|^2 — no cartesian, "
-        "no float boundary, no Python (the one BroadcastNestedLoopJoin is "
-        "the 1-row corpus-count scalar attach, same pattern as "
-        "unigram_logprob_quality)"
-    ),
-    "tfidf_cosine_prefix_pairs": (
-        "weighted AllPairs prefix filter: per-doc tokens sorted by "
-        "ascending weight, the maximal suffix whose cumulative weighted "
-        "mass cannot reach cos 0.9 is pruned from the join keys "
-        "(localCheckpoint leaf); identical integer-exact verify and "
-        "oracle as the brute form; no cartesian"
-    ),
-    "tfidf_cosine_dense_pairs": (
-        "dense block-matrix tile join for compact vocabularies (any "
-        "token-keyed scheme degenerates when every token is hot): "
-        "docs -> fixed-width integer weight vectors -> block-pair "
-        "explode -> one applyInPandas integer-matmul tile per group; "
-        "same oracle as the brute form; no driver collect"
+        "TF-IDF soft dedup, one dispatcher for all four tfidf keys: "
+        "integer deci-floored idf weights with zero-weight (boilerplate) "
+        "tokens dropped, N a driver literal (no nested loop), and the "
+        "cosine cut as pure-integer 100*dot^2 >= 81*|a|^2*|b|^2. A "
+        "weighted vocabulary collected under the 4096-token limit runs "
+        "the dense tile leg shown here (broadcast vocab -> sparse int "
+        "vectors -> one applyInPandas integer tile per block pair); past "
+        "it, the weighted AllPairs prefix leg (equi-joins on prefix "
+        "tokens, exact verify over candidates). No cartesian"
     ),
     "token_set_dup_pairs": (
         "whitespace/order-invariant exact dup: sha256 over the sorted "
@@ -259,7 +248,7 @@ def main() -> None:
     # build + explain each catalog query exactly ONCE, shared by the
     # PLANS.md emission, the BNL gate and the global-window gate — some
     # builders do eager driver work (CC iteration, the streaming drain,
-    # the tfidf dense builder's vocab collect), so a second full-catalog build pass
+    # the tfidf dispatcher's vocab collect), so a second full-catalog build pass
     # roughly doubled this tool's wall for nothing (round-5 review)
     plans_text: dict[str, str] = {}
     for name, fn in QUERIES.items():

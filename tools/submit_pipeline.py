@@ -3,8 +3,9 @@
 This is the multi-executor launch path from the north_rule
 ("launched via spark-submit --py-files on multi-executor clusters at
 N and 4N executors"). In this sandbox there is no real cluster — the
-same script runs under local[N] (see tools/bench_scaling.py for the
-N-vs-4N evidence) — but the packaging and launch shape is the real one:
+same script runs under local[N] (the N-vs-4N runs are in
+bench_artifacts/scaling_*.json) — but the packaging and launch shape
+is the real one:
 
     # package the engine (pure Python, no build step)
     cd /root/repo && zip -qr /tmp/idf_spark.zip imageduplicatefinder_spark
