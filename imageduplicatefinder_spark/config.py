@@ -103,6 +103,12 @@ class DedupConfig:
             raise ValueError(f"unknown sketch family {self.sketch!r}")
         if self.candidates not in ("lsh", "prefix"):
             raise ValueError(f"unknown candidate scheme {self.candidates!r}")
+        if self.max_band_size < 1:
+            # the salted cap keeps pmod(hash, size) < max_band_size:
+            # below 1 it would silently drop every member of a hot band
+            raise ValueError(
+                f"max_band_size must be >= 1, got {self.max_band_size}"
+            )
 
     # identical config => identical hash => checkpoint reuse is safe
     def config_hash(self) -> str:

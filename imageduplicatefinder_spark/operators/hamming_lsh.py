@@ -29,11 +29,12 @@ least 10 bits wide (radius <= 5); m=2 below that, since at radius 10
 single chunks are 5-6 bits and ~20% of ALL sketch pairs would collide
 in one — m=2 gives 12 blocks, C(12,2)=66 combo keys of 10-12 bits.
 Even m=2 goes near-quadratic on dispersed corpora, so at m=2 a salted
-per-key cap of ``AUTO_MAX_KEY_GROUP`` (``capped_sketch_keys``,
-mirroring operators/lsh.py ``kept_bands_given_hot``) bounds the
-candidates linearly in S; the driver gets a ``HammingAutoCapWarning``
-and ``hamming_key_stats`` lists the capped keys. Everywhere else the
-search is exact.
+per-key cap of ``AUTO_MAX_KEY_GROUP`` bounds the candidates linearly in
+S — the capped key join of operators/lsh.py (``hot_keys`` ->
+``kept_given_hot`` -> ``key_pairs``), the same rule as the LSH band
+cap; the driver gets a ``HammingAutoCapWarning`` and
+``hamming_key_stats`` lists the capped keys. Everywhere else the search
+is exact.
 
 Scale shape:
 - both forms run over DISTINCT sketch values, not documents — the
@@ -65,6 +66,11 @@ from pyspark.sql import functions as F
 from imageduplicatefinder_spark.functions.fingerprints import hamming_distance_col
 from imageduplicatefinder_spark.operators.components import (
     _np_min_label_components,
+)
+from imageduplicatefinder_spark.operators.lsh import (
+    hot_keys,
+    key_pairs,
+    kept_given_hot,
 )
 from imageduplicatefinder_spark.operators.tiles import block_pair_tiles
 
@@ -188,39 +194,6 @@ def sketch_keys(
             F.posexplode(F.array(*combo_vals)).alias("key_id", "key_val"),
         )
     )
-
-
-def capped_sketch_keys(
-    keys: DataFrame, max_key_group: int
-) -> tuple[DataFrame, DataFrame]:
-    """Salted deterministic per-key cap with drop accounting, mirroring
-    operators/lsh.py ``hot_band_stats`` + ``kept_bands_given_hot``.
-    Returns (kept_keys, key_stats).
-
-    Sketches in a (key_id, key_val) group larger than ``max_key_group``
-    are down-sampled by a deterministic hash threshold — map-side after
-    a broadcast-able hot-key join, so a mega-key never serializes onto
-    one task. Capping trades exactness for a hard candidate bound:
-    a capped group loses only candidates whose ONLY agreeing block
-    combination was the capped key; key_stats
-    (key_id, key_val, group_size, capped) makes the drop visible.
-    """
-    keys = keys.localCheckpoint(eager=False)  # scanned twice below
-    sizes = keys.groupBy("key_id", "key_val").agg(
-        F.count("*").alias("group_size")
-    )
-    stats = sizes.withColumn("capped", F.col("group_size") > max_key_group)
-    hot = sizes.filter(F.col("group_size") > max_key_group)
-    salted = keys.join(hot, on=["key_id", "key_val"], how="left")
-    kept = salted.filter(
-        F.col("group_size").isNull()
-        | (
-            F.pmod(F.xxhash64("sketch", "key_id", "key_val"),
-                   F.col("group_size"))
-            < F.lit(max_key_group)
-        )
-    ).select("sketch", "key_id", "key_val")
-    return kept, stats
 
 
 def _popcount64(x):
@@ -366,6 +339,7 @@ def _close_sketch_pairs(
         return _close_pairs_tiles(src, radius, n_sk)
     _, cap = scheme
     keys = sketch_keys(src, radius, sketch_col="sketch")
+    key = ["key_id", "key_val"]
     if cap is not None:
         # the result just became approximate — make that loud on the
         # driver, not only in hamming_key_stats
@@ -378,20 +352,13 @@ def _close_sketch_pairs(
         )
         warnings.warn(msg, HammingAutoCapWarning, stacklevel=4)
         _LOG.warning(msg)
-        keys, _ = capped_sketch_keys(keys, cap)
+        keys = keys.localCheckpoint(eager=False)  # scanned twice below
+        hot = hot_keys(keys, key, cap, "group_size")
+        keys = kept_given_hot(keys, hot, key, "sketch", cap, "group_size")
     # a self-join scans its input twice; materialize the tiny distinct
     # sketch->key table instead of recomputing the upstream lineage
     keys = keys.localCheckpoint(eager=False)
-    cand = (
-        keys.select("key_id", "key_val", F.col("sketch").alias("sk_a"))
-        .join(
-            keys.select("key_id", "key_val", F.col("sketch").alias("sk_b")),
-            on=["key_id", "key_val"],
-        )
-        .filter(F.col("sk_a") < F.col("sk_b"))
-        .select("sk_a", "sk_b")
-        .distinct()
-    )
+    cand = key_pairs(keys, key, "sketch", "sk_a", "sk_b")
     return cand.withColumn(
         "hamming",
         hamming_distance_col(F.col("sk_a"), F.col("sk_b")).cast("long"),
@@ -537,11 +504,9 @@ def hamming_key_stats(
     nothing; at radius <= 5 (m=1) nothing is capped. The frame is then
     a key-skew profile with every ``capped`` false.
     """
-    keys = sketch_keys(sketches, radius, sketch_col=sketch_col)
     _, cap = _key_scheme(radius, KEY_JOIN_MIN_SKETCHES)
-    if cap is None:
-        return keys.groupBy("key_id", "key_val").agg(
-            F.count("*").alias("group_size")
-        ).withColumn("capped", F.lit(False))
-    _, stats = capped_sketch_keys(keys, cap)
-    return stats
+    sizes = sketch_keys(sketches, radius, sketch_col=sketch_col).groupBy(
+        "key_id", "key_val"
+    ).agg(F.count("*").alias("group_size"))
+    capped = F.lit(False) if cap is None else F.col("group_size") > cap
+    return sizes.withColumn("capped", capped)

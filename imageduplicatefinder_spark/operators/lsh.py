@@ -20,6 +20,12 @@ Scale notes (north_rule: skew handled explicitly):
   capped-band stats (``band_stats``) so the drop is visible;
 - the pair self-join is an equi-join on (band_id, band_hash) which AQE
   can split further if residual skew remains.
+
+The cap and the self-join are written once, over any key columns
+(``hot_keys`` -> ``kept_given_hot`` -> ``key_pairs``): the Hamming
+pigeonhole key join (operators/hamming_lsh.py), the hyperplane bucket
+join (operators/similarity.py) and the exhaustive shingle join
+(operators/prefix_join.py ``exact_candidates``) use the same three.
 """
 
 from __future__ import annotations
@@ -46,79 +52,90 @@ def band_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def hot_band_stats(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """The bands over the cap — (band_id, band_hash, band_size,
-    capped=true). This is the durable drop-accounting table AND the
-    exact join input ``kept_bands_given_hot`` needs, so a caller that
-    materializes it first aggregates the band table exactly once
-    (measured: the stats-after-bands ordering re-ran this groupBy for
-    7.5 s of an 88 s run, BENCH.md "Band-stats fold"). ``bands`` is
-    scanned here and again by ``kept_bands_given_hot``: pass a
-    materialized (checkpointed) band table."""
+#: the equi-join key of the band table
+BAND_KEY = ["band_id", "band_hash"]
+
+
+def hot_keys(
+    rows: DataFrame, keys: list[str], cap: int, size_col: str
+) -> DataFrame:
+    """The key groups over the cap — (*keys, size_col, capped=true).
+    This is the durable drop-accounting table (the pipeline's
+    ``band_stats``) AND the exact join input ``kept_given_hot`` needs,
+    so a caller that materializes it first aggregates ``rows`` exactly
+    once (measured: the stats-after-bands ordering re-ran this groupBy
+    for 7.5 s of an 88 s run, BENCH.md "Band-stats fold"). ``rows`` is
+    scanned here and again by ``kept_given_hot``: pass a materialized
+    (checkpointed) table."""
     return (
-        bands.groupBy("band_id", "band_hash")
-        .agg(F.count("*").alias("band_size"))
-        .filter(F.col("band_size") > cfg.max_band_size)
+        rows.groupBy(*keys)
+        .agg(F.count("*").alias(size_col))
+        .filter(F.col(size_col) > cap)
         .withColumn("capped", F.lit(True))
     )
 
 
-def kept_bands_given_hot(
-    bands: DataFrame, hot: DataFrame, cfg: DedupConfig
+def kept_given_hot(
+    rows: DataFrame,
+    hot: DataFrame,
+    keys: list[str],
+    member: str,
+    cap: int,
+    size_col: str,
 ) -> DataFrame:
-    """Apply the hot-band cap given the ``hot_band_stats`` table.
+    """Apply the hot-key cap given the ``hot_keys`` table — the one
+    skew rule of every capped equi-key join (LSH bands, Hamming
+    pigeonhole keys, hyperplane buckets).
 
-    Members of a band larger than ``max_band_size`` are down-sampled by
-    a deterministic hash threshold: keep iff
-    ``pmod(xxhash64(doc_id, band_id, band_hash), band_size) < cap``
-    (expected kept ≈ cap). This is the salting formulation of the cap:
-    no per-group sort, no single-reducer window — a mega-band (license
-    boilerplate at 10^12-file scale) is filtered map-side, so the
-    skewed key never serializes onto one task. Exact duplicates never
-    reach here (the sha256 pre-pass collapsed them), so sampling only
+    Members of a key group larger than ``cap`` are down-sampled by a
+    deterministic hash threshold: keep iff
+    ``pmod(xxhash64(member, *keys), size) < cap`` (expected kept ≈
+    cap). This is the salting formulation of the cap: no per-group
+    sort, no single-reducer window — a mega-key (license boilerplate at
+    10^12-file scale) is filtered map-side, so the skewed key never
+    serializes onto one task. Exact duplicates never reach the band
+    join (the sha256 pre-pass collapsed them), so sampling there only
     thins candidates between near-identical boilerplate docs.
 
     Joining only the HOT set keeps the common case a map-side
     null-check — in realistic corpora the hot set is tiny
     (boilerplate), so AQE turns this into a broadcast join instead of a
-    full sort-merge of the band table against all sizes. Callers must
-    keep the hot set somewhere durable (the pipeline's ``band_stats``
-    checkpoint, the stream's ``<edges_out>_band_stats``) so the drop is
-    visible."""
-    salted = bands.join(
-        hot.select("band_id", "band_hash", "band_size"),
-        on=["band_id", "band_hash"],
-        how="left",
-    )
+    full sort-merge of the table against all sizes. Callers must keep
+    the hot set somewhere durable (the pipeline's ``band_stats``
+    checkpoint, the stream's ``<edges_out>_band_stats``,
+    ``hamming_key_stats``) so the drop is visible.
+
+    Output: (member, *keys)."""
+    salted = rows.join(hot.select(*keys, size_col), on=keys, how="left")
     return salted.filter(
-        F.col("band_size").isNull()
+        F.col(size_col).isNull()
         | (
-            F.pmod(
-                F.xxhash64("doc_id", "band_id", "band_hash"),
-                F.col("band_size"),
-            )
-            < F.lit(cfg.max_band_size)
+            F.pmod(F.xxhash64(member, *keys), F.col(size_col))
+            < F.lit(cap)
         )
-    ).select("doc_id", "band_id", "band_hash")
+    ).select(member, *keys)
 
 
-def pairs_from_kept_bands(kept: DataFrame) -> DataFrame:
-    """Self-join on (band_id, band_hash) -> distinct (src, dst), src < dst.
+def key_pairs(
+    rows: DataFrame, keys: list[str], member: str, a: str = "src",
+    b: str = "dst",
+) -> DataFrame:
+    """Self-join on ``keys`` -> distinct (a, b) member pairs, a < b.
 
-    The src < dst predicate both dedups the symmetric pair and removes
+    The a < b predicate both dedups the symmetric pair and removes
     self-pairs — the Spark-native form of the reference's "don't return
     the probe itself" semantics.
 
-    ``kept`` should be a MATERIALIZED (checkpointed) band table: a
-    self-join scans its input twice, so an unmaterialized lineage here
-    would recompute the whole fingerprint->band chain twice.
+    ``rows`` should be MATERIALIZED (checkpointed): a self-join scans
+    its input twice, so an unmaterialized lineage here would recompute
+    the whole upstream chain (fingerprint -> band, sketch -> key) twice.
     """
-    left = kept.select("band_id", "band_hash", F.col("doc_id").alias("src"))
-    right = kept.select("band_id", "band_hash", F.col("doc_id").alias("dst"))
+    left = rows.select(*keys, F.col(member).alias(a))
+    right = rows.select(*keys, F.col(member).alias(b))
     return (
-        left.join(right, on=["band_id", "band_hash"])
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
+        left.join(right, on=keys)
+        .filter(F.col(a) < F.col(b))
+        .select(a, b)
         .distinct()
     )
 
@@ -126,7 +143,11 @@ def pairs_from_kept_bands(kept: DataFrame) -> DataFrame:
 def candidate_pairs(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Cap hot bands then self-join. Convenience form for small inputs
     that discards the hot-band stats; the pipeline checkpoints them and
-    the kept band table (see ``pairs_from_kept_bands``)."""
+    the kept band table (see ``key_pairs``)."""
     bands = bands.localCheckpoint(eager=False)  # scanned twice below
-    kept = kept_bands_given_hot(bands, hot_band_stats(bands, cfg), cfg)
-    return pairs_from_kept_bands(kept)
+    cap = cfg.max_band_size
+    hot = hot_keys(bands, BAND_KEY, cap, "band_size")
+    return key_pairs(
+        kept_given_hot(bands, hot, BAND_KEY, "doc_id", cap, "band_size"),
+        BAND_KEY, "doc_id",
+    )

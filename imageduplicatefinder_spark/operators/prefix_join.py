@@ -64,6 +64,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from imageduplicatefinder_spark.config import DedupConfig
+from imageduplicatefinder_spark.operators.lsh import key_pairs
 
 
 def _prefix_len(n: Column, threshold: float) -> Column:
@@ -193,11 +194,4 @@ def exact_candidates(signatures: DataFrame) -> DataFrame:
     sh = signatures.filter(F.col("shingles").isNotNull()).select(
         "doc_id", F.explode("shingles").alias("shingle")
     )
-    sh = sh.localCheckpoint(eager=False)
-    return (
-        sh.alias("a")
-        .join(sh.alias("b"), on="shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-        .distinct()
-    )
+    return key_pairs(sh.localCheckpoint(eager=False), ["shingle"], "doc_id")

@@ -35,6 +35,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from imageduplicatefinder_spark.operators.components import connected_components
+from imageduplicatefinder_spark.operators.lsh import (
+    hot_keys,
+    key_pairs,
+    kept_given_hot,
+)
 from imageduplicatefinder_spark.operators.tiles import block_pair_tiles
 
 
@@ -294,8 +299,8 @@ def hyperplane_lsh_pairs(
     dedups cross-table repeats before any downstream verify.
 
     ``max_bucket_size``: buckets larger than this are down-sampled by
-    the same deterministic salted-threshold scheme as the MinHash band
-    cap (operators/lsh.py kept_bands_given_hot) — a degenerate bucket
+    the capped key join of the MinHash band cap (operators/lsh.py
+    ``hot_keys`` -> ``kept_given_hot``) — a degenerate bucket
     (e.g. all-zero embeddings landing at bucket 0 of every table) would
     otherwise blow up one join key quadratically. None disables the
     cap (exact candidate semantics, e.g. for oracle-checked queries).
@@ -325,32 +330,12 @@ def hyperplane_lsh_pairs(
     )
     # one bucket computation, consumed by both join sides
     buckets = buckets.localCheckpoint(eager=False)
+    key = ["table_id", "bucket"]
     if max_bucket_size is not None:
-        sizes = buckets.groupBy("table_id", "bucket").agg(
-            F.count("*").alias("_bsz")
-        )
-        hot = sizes.filter(F.col("_bsz") > max_bucket_size)
-        buckets = (
-            buckets.join(F.broadcast(hot), on=["table_id", "bucket"],
-                         how="left")
-            .filter(
-                F.col("_bsz").isNull()
-                | (
-                    F.pmod(F.xxhash64("_id", "table_id", "bucket"),
-                           F.col("_bsz"))
-                    < F.lit(max_bucket_size)
-                )
-            )
-            .drop("_bsz")
-        )
-    a = buckets.select("table_id", "bucket", F.col("_id").alias(out_a))
-    b = buckets.select("table_id", "bucket", F.col("_id").alias(out_b))
-    return (
-        a.join(b, on=["table_id", "bucket"])
-        .filter(F.col(out_a) < F.col(out_b))
-        .select(out_a, out_b)
-        .distinct()
-    )
+        hot = hot_keys(buckets, key, max_bucket_size, "_bsz")
+        buckets = kept_given_hot(buckets, F.broadcast(hot), key, "_id",
+                                 max_bucket_size, "_bsz")
+    return key_pairs(buckets, key, "_id", out_a, out_b)
 
 
 def train_centroids(

@@ -32,10 +32,11 @@ from imageduplicatefinder_spark.config import DedupConfig
 from imageduplicatefinder_spark.operators.components import connected_components
 from imageduplicatefinder_spark.operators.exact import rep_ids
 from imageduplicatefinder_spark.operators.lsh import (
+    BAND_KEY,
     band_table,
-    hot_band_stats,
-    kept_bands_given_hot,
-    pairs_from_kept_bands,
+    hot_keys,
+    key_pairs,
+    kept_given_hot,
 )
 from imageduplicatefinder_spark.operators.plan import clusters_table, keeper_plan
 from imageduplicatefinder_spark.operators.prefix_join import prefix_candidates
@@ -206,14 +207,18 @@ class DedupPipeline:
             # consumer (the old bands-then-stats order re-ran the 5M-row
             # groupBy for ~9% of pipeline wall, BENCH.md round 4)
             banded = band_table(signatures, cfg).localCheckpoint(eager=False)
+            cap = cfg.max_band_size
             hot = self.ckpt.materialize(
-                "band_stats", lambda: hot_band_stats(banded, cfg)
+                "band_stats",
+                lambda: hot_keys(banded, BAND_KEY, cap, "band_size"),
             )
             bands = self.ckpt.materialize(
-                "bands", lambda: kept_bands_given_hot(banded, hot, cfg)
+                "bands",
+                lambda: kept_given_hot(banded, hot, BAND_KEY, "doc_id", cap,
+                                       "band_size"),
             )
             cands = self.ckpt.materialize(
-                "candidates", lambda: pairs_from_kept_bands(bands)
+                "candidates", lambda: key_pairs(bands, BAND_KEY, "doc_id")
             )
         else:
             # "prefix" — AllPairs/PPJoin prefix filtering: EXACT for the

@@ -29,6 +29,7 @@ from imageduplicatefinder_spark.operators.prefix_join import (
     jaccard_prefix_pairs,
 )
 from imageduplicatefinder_spark.operators.signatures import widen_if_narrow
+from imageduplicatefinder_spark.operators.similarity import _fold_dot
 from imageduplicatefinder_spark.sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -91,8 +92,9 @@ def _shingles_expr(w: Column) -> Column:
 # ("the end of"-style boilerplate) is a mega-key whose join output is
 # O(df^2); dup families are small, so family-linking shingles have low
 # df and survive. The cap is part of the operator's SEMANTICS (applied
-# identically in Spark and the DuckDB oracle), mirroring the salted
-# band cap of the LSH path (operators/lsh.py kept_bands_given_hot).
+# identically in Spark and the DuckDB oracle), so it drops a hot key
+# outright (``_drop_hot_keys``) where the operators' capped key join
+# samples it (operators/lsh.py hot_keys / kept_given_hot).
 _SHINGLE_DF_CAP = 32
 
 _SHINGLE_CTE = f"""
@@ -122,6 +124,22 @@ pair_inter AS (
 """
 
 
+def _drop_hot_keys(rows: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """``rows`` without the key groups of more than ``cap`` rows — the
+    oracle-pinned hot-key drop of the catalog builders (the SQL
+    oracles' ``HAVING count(*) > cap`` / ``NOT IN hot``). The hot set is
+    tiny (boilerplate) and removed via a BROADCAST anti-join, so no
+    mega-key ever reaches the caller's self-join. ``rows`` is scanned
+    twice: pass a materialized table."""
+    hot = (
+        rows.groupBy(*keys)
+        .agg(F.count("*").alias("df"))
+        .filter(F.col("df") > cap)
+        .select(*keys)
+    )
+    return rows.join(F.broadcast(hot), on=keys, how="left_anti")
+
+
 def _capped_shingle_table(docs: DataFrame, checkpoint: bool = True) -> DataFrame:
     """(doc_id, shingle) with the document-frequency cap applied: the
     hot set (df > _SHINGLE_DF_CAP — tiny, boilerplate) is removed via a
@@ -135,13 +153,7 @@ def _capped_shingle_table(docs: DataFrame, checkpoint: bool = True) -> DataFrame
     )
     if checkpoint:
         sh = sh.localCheckpoint(eager=False)
-    hot = (
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > _SHINGLE_DF_CAP)
-        .select("shingle")
-    )
-    sh = sh.join(F.broadcast(hot), on="shingle", how="left_anti")
+    sh = _drop_hot_keys(sh, ["shingle"], _SHINGLE_DF_CAP)
     if checkpoint:
         sh = sh.localCheckpoint(eager=False)
     return sh
@@ -1529,13 +1541,7 @@ def q_minhash_band_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.col("bk.key").alias("key"))
         .localCheckpoint(eager=False)
     )
-    hot = (
-        bt.groupBy("band", "key")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > _SHINGLE_DF_CAP)
-        .select("band", "key")
-    )
-    bt = bt.join(F.broadcast(hot), on=["band", "key"], how="left_anti")
+    bt = _drop_hot_keys(bt, ["band", "key"], _SHINGLE_DF_CAP)
     return (
         bt.alias("a")
         .join(bt.alias("b"), on=["band", "key"])
@@ -1651,13 +1657,7 @@ def q_winnow_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle — no cartesian anywhere."""
     docs = load_table(spark, sf_dir, "documents")
     fps = _winnow_fps(docs).localCheckpoint(eager=False)
-    hot = (
-        fps.groupBy("fingerprint")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > _SHINGLE_DF_CAP)
-        .select("fingerprint")
-    )
-    fps = fps.join(F.broadcast(hot), on="fingerprint", how="left_anti")
+    fps = _drop_hot_keys(fps, ["fingerprint"], _SHINGLE_DF_CAP)
     fps = fps.localCheckpoint(eager=False)
     sizes = fps.groupBy("doc_id").agg(F.count("*").alias("n"))
     inter = (
@@ -2396,13 +2396,8 @@ def q_source_mirror_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         widen_if_narrow(docs).select("source", _token_set_hash().alias("sh"))
         .distinct()
     )
-    disc = (
-        classes.groupBy("sh")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= _MIRROR_MAX_SOURCE_DF)
-        .select("sh")
-    )
-    cf = classes.join(disc, "sh").localCheckpoint(eager=False)
+    cf = _drop_hot_keys(classes, ["sh"], _MIRROR_MAX_SOURCE_DF)
+    cf = cf.localCheckpoint(eager=False)
     per_src = cf.groupBy("source").agg(F.count("*").alias("n_classes"))
     shared = (
         cf.alias("a")
@@ -3220,17 +3215,9 @@ FROM documents WHERE lang IN ('en','de','es') GROUP BY lang
 # ---------------------------------------------------------------------------
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def q_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    norm = F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
+    norm = F.sqrt(_fold_dot(F.col("embedding"), F.col("embedding")))
     return emb.select(
         "vec_id",
         F.size("embedding").alias("dim"),
@@ -3259,7 +3246,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("qn"),
+        F.sqrt(_fold_dot(F.col("embedding"), F.col("embedding"))).alias("qn"),
     )
     # widen the neighbor side: the 200k-pair dot folds run in the scan
     # stage after the broadcast join, and the single-row-group testdata
@@ -3267,10 +3254,10 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = widen_if_narrow(emb, key="vec_id").select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("ne"),
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nn"),
+        F.sqrt(_fold_dot(F.col("embedding"), F.col("embedding"))).alias("nn"),
     )
     pairs = F.broadcast(q).crossJoin(c).filter(F.col("query_id") != F.col("neighbor_id"))
-    cos = _dot(F.col("qe"), F.col("ne")) / (F.col("qn") * F.col("nn"))
+    cos = _fold_dot(F.col("qe"), F.col("ne")) / (F.col("qn") * F.col("nn"))
     ranked = pairs.withColumn("cos", cos).withColumn(
         "rank",
         F.row_number().over(
@@ -3369,7 +3356,7 @@ def q_embedding_dedup_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     than under the oracle's sequential fold — and here one flipped pair
     would re-cluster whole components, not just add a row. So the BLAS
     block join only PRE-FILTERS with a 0.01 margin (>= 0.39) and every
-    surviving pair is re-scored with the sequential-fold ``_dot`` —
+    surviving pair is re-scored with the sequential ``_fold_dot`` —
     the same evaluation order as DuckDB's list_sum — making the
     threshold decision bit-identical across engines.
     """
@@ -3388,9 +3375,9 @@ def q_embedding_dedup_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("embedding").alias("ea"))
     eb = emb.select(F.col("vec_id").alias("vec_b"),
                     F.col("embedding").alias("eb"))
-    fold_cos = _dot(F.col("ea"), F.col("eb")) / (
-        F.sqrt(_dot(F.col("ea"), F.col("ea")))
-        * F.sqrt(_dot(F.col("eb"), F.col("eb")))
+    fold_cos = _fold_dot(F.col("ea"), F.col("eb")) / (
+        F.sqrt(_fold_dot(F.col("ea"), F.col("ea")))
+        * F.sqrt(_fold_dot(F.col("eb"), F.col("eb")))
     )
     edges = (
         cands.join(ea, on="vec_a")
@@ -4416,7 +4403,9 @@ def q_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes = _ann_planes()
     sig_bits = [
         F.when(
-            _dot(F.col("embedding"), F.array(*[F.lit(v) for v in p])) >= 0, 1
+            _fold_dot(F.col("embedding"), F.array(*[F.lit(v) for v in p]))
+            >= 0,
+            1,
         ).otherwise(0)
         for p in planes
     ]
@@ -4426,12 +4415,14 @@ def q_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed = emb.withColumn("bucket", bucket)
     # norms once per row, not per in-bucket pair (bit-identical fold;
     # see q_semdedup_keeper)
-    a = bucketed.select("bucket", F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea")
-                        ).withColumn("na", F.sqrt(_dot(F.col("ea"), F.col("ea"))))
-    b = bucketed.select("bucket", F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb")
-                        ).withColumn("nb", F.sqrt(_dot(F.col("eb"), F.col("eb"))))
+    a = bucketed.select(
+        "bucket", F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea")
+    ).withColumn("na", F.sqrt(_fold_dot(F.col("ea"), F.col("ea"))))
+    b = bucketed.select(
+        "bucket", F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb")
+    ).withColumn("nb", F.sqrt(_fold_dot(F.col("eb"), F.col("eb"))))
     pairs = a.join(b, on="bucket").filter(F.col("vec_a") < F.col("vec_b"))
-    cos = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+    cos = _fold_dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
     rn = F.row_number().over(Window.partitionBy("vec_a").orderBy(F.desc("cos"), F.asc("vec_b")))
     return (
         pairs.withColumn("cos", cos)
@@ -4508,13 +4499,13 @@ def q_embedding_neardup_lsh_amplified(
     )
     # norms once per row, not per candidate pair (bit-identical fold;
     # see q_semdedup_keeper)
-    ea = emb.select(F.col("vec_id").alias("vec_a"),
-                    F.col("embedding").alias("ea")
-                    ).withColumn("na", F.sqrt(_dot(F.col("ea"), F.col("ea"))))
-    eb = emb.select(F.col("vec_id").alias("vec_b"),
-                    F.col("embedding").alias("eb")
-                    ).withColumn("nb", F.sqrt(_dot(F.col("eb"), F.col("eb"))))
-    cos = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+    ea = emb.select(
+        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea")
+    ).withColumn("na", F.sqrt(_fold_dot(F.col("ea"), F.col("ea"))))
+    eb = emb.select(
+        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb")
+    ).withColumn("nb", F.sqrt(_fold_dot(F.col("eb"), F.col("eb"))))
+    cos = _fold_dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
     return (
         cands.join(ea, on="vec_a")
         .join(eb, on="vec_b")
@@ -4652,7 +4643,7 @@ def _ivf_centroids() -> list[list[float]]:
 def _ivf_score_exprs(vec_col: str) -> list[Column]:
     """Per-centroid squared-distance scores -2*x.c + ||c||^2 (the
     ||x||^2 term is constant per row and drops out of the argmin).
-    The dot is the sequential ``_dot`` fold — the same evaluation
+    The dot is the sequential ``_fold_dot`` fold — the same evaluation
     order as the oracle's list_sum — and ||c||^2 is a plain sequential
     Python sum inlined as the SAME literal in both engines, so the
     scores are bit-identical across Spark and DuckDB."""
@@ -4662,7 +4653,8 @@ def _ivf_score_exprs(vec_col: str) -> list[Column]:
         for v in c:
             csq += v * v
         exprs.append(
-            F.lit(-2.0) * _dot(F.col(vec_col), F.array(*[F.lit(v) for v in c]))
+            F.lit(-2.0)
+            * _fold_dot(F.col(vec_col), F.array(*[F.lit(v) for v in c]))
             + F.lit(csq)
         )
     return exprs
@@ -4735,11 +4727,11 @@ def q_semdedup_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compute things you throw away"; same fix as ann_cosine_topk)
     a = assigned.select(
         "list_id", F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea")
-    ).withColumn("na", F.sqrt(_dot(F.col("ea"), F.col("ea"))))
+    ).withColumn("na", F.sqrt(_fold_dot(F.col("ea"), F.col("ea"))))
     b = assigned.select(
         "list_id", F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb")
-    ).withColumn("nb", F.sqrt(_dot(F.col("eb"), F.col("eb"))))
-    cos = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+    ).withColumn("nb", F.sqrt(_fold_dot(F.col("eb"), F.col("eb"))))
+    cos = _fold_dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
     edges = (
         a.join(b, on="list_id")
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -4825,16 +4817,16 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # norms once per probe row / per assigned row, not per candidate
     # (bit-identical fold; see q_semdedup_keeper)
     cand = probes.withColumn(
-        "qn", F.sqrt(_dot(F.col("qe"), F.col("qe")))
+        "qn", F.sqrt(_fold_dot(F.col("qe"), F.col("qe")))
     ).join(
         assigned.select(
             "list_id",
             F.col("vec_id").alias("neighbor_id"),
             F.col("embedding").alias("ne"),
-        ).withColumn("nn", F.sqrt(_dot(F.col("ne"), F.col("ne")))),
+        ).withColumn("nn", F.sqrt(_fold_dot(F.col("ne"), F.col("ne")))),
         on="list_id",
     ).filter(F.col("query_id") != F.col("neighbor_id"))
-    cos = _dot(F.col("qe"), F.col("ne")) / (F.col("qn") * F.col("nn"))
+    cos = _fold_dot(F.col("qe"), F.col("ne")) / (F.col("qn") * F.col("nn"))
     ranked = cand.withColumn("cos", cos).withColumn(
         "rank",
         F.row_number().over(

@@ -98,7 +98,7 @@ def incremental_dedup(
     Candidates are verified exactly over the shingle sets with the
     standard Jaccard/containment rule and verified edges land under
     ``edges_out``, ready for a periodic connected-components pass.
-    Hot-band cap drops (``hot_band_stats``, history and batch) are
+    Hot-band cap drops (``lsh.hot_keys``, history and batch) are
     recorded per batch at ``<edges_out>_band_stats`` with a ``side``
     column.
 
@@ -115,27 +115,32 @@ def incremental_dedup(
 
     The historical band table is computed once (not per batch); at
     scale it would be the checkpointed ``bands`` stage of the last
-    batch run. Returns the started StreamingQuery's writer (call
-    ``.start()``-equivalent semantics: this function starts it).
+    batch run. Returns the started ``StreamingQuery`` (an
+    ``availableNow`` trigger: call ``awaitTermination()`` to drain).
     """
     from pyspark.sql import functions as SF
 
-    from imageduplicatefinder_spark.operators.lsh import (
-        band_table,
-        hot_band_stats,
-        kept_bands_given_hot,
-    )
+    from imageduplicatefinder_spark.operators import lsh
     from imageduplicatefinder_spark.operators.signatures import compute_signatures
     from imageduplicatefinder_spark.operators.verify import verify_pairs
 
     # hot-band cap on the HISTORY side, same as the batch pipeline: a
     # mega-band in the corpus (license boilerplate) would otherwise fan
     # every colliding new doc out O(band_size) per micro-batch
-    hist_banded = band_table(history_signatures, cfg).localCheckpoint(eager=False)
-    hist_hot = hot_band_stats(hist_banded, cfg).localCheckpoint(eager=False)
-    hist_bands = kept_bands_given_hot(hist_banded, hist_hot, cfg).localCheckpoint(
-        eager=False
-    )
+    key, cap = lsh.BAND_KEY, cfg.max_band_size
+
+    def capped_bands(signatures: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """(hot-band stats, kept bands) of a signatures table."""
+        banded = lsh.band_table(signatures, cfg).localCheckpoint(eager=False)
+        # read twice (stats write, kept-bands join): aggregate once
+        hot = lsh.hot_keys(banded, key, cap, "band_size").localCheckpoint(
+            eager=False
+        )
+        return hot, lsh.kept_given_hot(banded, hot, key, "doc_id", cap,
+                                       "band_size")
+
+    hist_hot, hist_bands = capped_bands(history_signatures)
+    hist_bands = hist_bands.localCheckpoint(eager=False)
     hist_sigs = history_signatures.select("doc_id", "simhash", "shingles")
     stats_out = edges_out.rstrip("/") + "_band_stats"
 
@@ -149,10 +154,7 @@ def incremental_dedup(
         # whole backlog can land in one batch, and an uncapped mega-band
         # (license boilerplate) self-pairs quadratically on one
         # (band_id, band_hash) key — the exact skew the cap exists for
-        new_banded = band_table(sigs, cfg).localCheckpoint(eager=False)
-        # read twice (stats write, kept-bands join): aggregate once
-        new_hot = hot_band_stats(new_banded, cfg).localCheckpoint(eager=False)
-        new_bands = kept_bands_given_hot(new_banded, new_hot, cfg)
+        new_hot, new_bands = capped_bands(sigs)
         # drops must be visible, not silent — persist the capped-band
         # stats (history + this batch) next to the edges, replayed
         # idempotently per batch_id like the edges

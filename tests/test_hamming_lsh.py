@@ -15,11 +15,11 @@ from imageduplicatefinder_spark.functions.fingerprints import hamming_distance_c
 from imageduplicatefinder_spark.operators import components
 from imageduplicatefinder_spark.operators import hamming_lsh as H
 from imageduplicatefinder_spark.operators.components import connected_components
+from imageduplicatefinder_spark.operators.lsh import hot_keys, kept_given_hot
 from imageduplicatefinder_spark.operators.hamming_lsh import (
     _auto_n_agree,
     _chunk_widths,
     _key_scheme,
-    capped_sketch_keys,
     hamming_edges,
     hamming_key_stats,
     hamming_pairs,
@@ -182,17 +182,24 @@ def test_multi_block_keys_are_more_selective(spark, sketches):
     assert v2 > 64 or v2 >= n_sketches * 0.9
 
 
+def _capped_keys(keys, cap):
+    """The key join's cap (operators/lsh.py): (kept keys, hot keys)."""
+    key = ["key_id", "key_val"]
+    hot = hot_keys(keys, key, cap, "group_size")
+    return kept_given_hot(keys, hot, key, "sketch", cap, "group_size"), hot
+
+
 def test_capped_sketch_keys_accounting(spark):
-    """A mega-key gets down-sampled to ~cap with capped=true stats;
-    small keys pass through untouched."""
+    """A mega-key gets down-sampled to ~cap with capped=true stats, and
+    hamming_key_stats lists exactly the keys the key join's cap hits."""
     # 200 sketches that all share block pattern 0 in the low bits would
     # be contrived; instead cap aggressively so every key is hot
     rows = [(i, i << 40) for i in range(50)]  # low 40 bits identical (0)
     df = spark.createDataFrame(rows, "doc_id long, simhash long")
     keys = sketch_keys(df, 10, sketch_col="simhash")  # m=2
-    kept, stats = capped_sketch_keys(keys, max_key_group=5)
-    hot = stats.filter(F.col("capped")).count()
-    assert hot > 0  # low-bit block combos are shared by all 50 sketches
+    kept, hot = _capped_keys(keys, 5)
+    # low-bit block combos are shared by all 50 sketches
+    assert hot.count() > 0 and hot.filter(~F.col("capped")).count() == 0
     # kept size per hot key is ~cap (salted threshold keeps ~cap rows)
     per_key = (
         kept.groupBy("key_id", "key_val").count()
@@ -200,9 +207,16 @@ def test_capped_sketch_keys_accounting(spark):
     )
     assert per_key <= 15  # ~5 expected, deterministic hash variance bound
     # determinism: same input -> same kept set
-    kept2, _ = capped_sketch_keys(keys, max_key_group=5)
+    kept2, _ = _capped_keys(keys, 5)
     assert sorted(map(tuple, kept.collect())) == sorted(
         map(tuple, kept2.collect()))
+    # the public accounting: capped rows == the key join's hot set
+    _, hot32 = _capped_keys(keys, H.AUTO_MAX_KEY_GROUP)
+    stats = hamming_key_stats(df, 10).filter(F.col("capped"))
+    cols = ["key_id", "key_val", "group_size"]
+    assert sorted(map(tuple, stats.select(cols).collect())) == sorted(
+        map(tuple, hot32.select(cols).collect()))
+    assert hot32.count() > 0
 
 
 def test_hamming_edges_cluster_parity(spark, sketches, monkeypatch):

@@ -12,11 +12,14 @@ from imageduplicatefinder_spark.config import DedupConfig
 from imageduplicatefinder_spark.functions.fingerprints import band_hashes_numpy
 from imageduplicatefinder_spark.operators import components
 from imageduplicatefinder_spark.operators.components import connected_components
+from imageduplicatefinder_spark.operators.hamming_lsh import sketch_keys
 from imageduplicatefinder_spark.operators.lsh import (
+    BAND_KEY,
     band_table,
     candidate_pairs,
-    hot_band_stats,
-    kept_bands_given_hot,
+    hot_keys,
+    key_pairs,
+    kept_given_hot,
 )
 
 CFG = DedupConfig()
@@ -64,9 +67,17 @@ def test_min_tokens_excludes_empty_docs(spark):
     ]
 
 
+def _band_hot_kept(bands, cfg):
+    """The pipeline's band cap: (hot band stats, kept band rows)."""
+    cap = cfg.max_band_size
+    hot = hot_keys(bands, BAND_KEY, cap, "band_size")
+    return hot, kept_given_hot(bands, hot, BAND_KEY, "doc_id", cap,
+                               "band_size")
+
+
 def test_band_cap_limits_group_and_reports(spark):
-    """hot_band_stats reports exactly the over-cap bands and
-    kept_bands_given_hot thins only those: a 40-member mega-band family
+    """hot_keys reports exactly the over-cap bands and kept_given_hot
+    thins only those: a 40-member mega-band family
     is down-sampled (deterministically) while a 2-member family beside
     it is kept whole."""
     cfg = DedupConfig(max_band_size=3)
@@ -78,8 +89,8 @@ def test_band_cap_limits_group_and_reports(spark):
         + [(100 + i, 10, cold_sig) for i in range(2)],
     )
     bands = band_table(df, cfg).localCheckpoint(eager=True)
-    hot = hot_band_stats(bands, cfg)
-    kept = kept_bands_given_hot(bands, hot, cfg).collect()
+    hot, kept = _band_hot_kept(bands, cfg)
+    kept = kept.collect()
 
     band_rows = bands.collect()
     sizes = Counter((r.band_id, r.band_hash) for r in band_rows)
@@ -95,7 +106,7 @@ def test_band_cap_limits_group_and_reports(spark):
     assert sorted(tuple(r) for r in kept if r.doc_id >= 100) == sorted(
         tuple(r) for r in band_rows if r.doc_id >= 100
     )
-    kept2 = kept_bands_given_hot(bands, hot_band_stats(bands, cfg), cfg)
+    _, kept2 = _band_hot_kept(bands, cfg)
     assert sorted(map(tuple, kept)) == sorted(map(tuple, kept2.collect()))
     # distinct pair union across 64 independently-sampled bands stays
     # well below the uncapped 40*39/2 = 780 (the hard guarantee is the
@@ -104,48 +115,80 @@ def test_band_cap_limits_group_and_reports(spark):
     assert candidate_pairs(bands, cfg).count() < 500
 
 
-def test_hot_band_stats_path_equals_capped_bands(spark):
-    """The pipeline's one-aggregation flow (hot_band_stats ->
-    kept_bands_given_hot) must produce exactly the capped band table of
-    the cap rule written out directly: per-band sizes by window count,
-    every member of an at-or-below-cap band kept, a member of an
-    over-cap band kept iff pmod(xxhash64(doc_id, band_id, band_hash),
-    band_size) < cap. Same kept rows, and the hot set == the capped
-    subset of the per-band stats. Mixed corpus: one 40-member mega-band
-    family plus small families."""
-    from pyspark.sql import Window
-
+def _mega_bands(spark):
+    """Band table: one 40-member mega-band family plus a 2-member one."""
     cfg = DedupConfig(max_band_size=3)
-    hot_sig = [7] * cfg.num_perm
-    cold_sig = [11] * cfg.num_perm
     df = _sig_df(
         spark,
-        [(i, 10, hot_sig) for i in range(40)]
-        + [(100 + i, 10, cold_sig) for i in range(2)],
+        [(i, 10, [7] * cfg.num_perm) for i in range(40)]
+        + [(100 + i, 10, [11] * cfg.num_perm) for i in range(2)],
     )
-    bands = band_table(df, cfg).localCheckpoint(eager=True)
+    return (band_table(df, cfg), BAND_KEY, "doc_id", cfg.max_band_size,
+            "band_size")
 
-    sized = bands.withColumn(
-        "band_size",
-        F.count("*").over(Window.partitionBy("band_id", "band_hash")),
-    ).withColumn("capped", F.col("band_size") > cfg.max_band_size)
+
+def _mega_sketch_keys(spark):
+    """m=2 pigeonhole keys (radius 10) of 50 sketches whose low 40 bits
+    are identical: the low-bit block combinations are shared by all."""
+    df = spark.createDataFrame([(i, i << 40) for i in range(50)],
+                               "doc_id long, simhash long")
+    return sketch_keys(df, 10), ["key_id", "key_val"], "sketch", 5, "group_size"
+
+
+def _mega_buckets(spark):
+    """Hyperplane (table_id, bucket) rows over two tables: 40 vectors
+    share bucket 0, 20 more spread over three small buckets."""
+    rows = [(i, t, 0 if i < 40 else 1 + i % 3)
+            for i in range(60) for t in range(2)]
+    df = spark.createDataFrame(rows, "_id long, table_id int, bucket long")
+    return df, ["table_id", "bucket"], "_id", 16, "_bsz"
+
+
+@pytest.mark.parametrize(
+    "shape", [_mega_bands, _mega_sketch_keys, _mega_buckets],
+    ids=["bands", "sketch_keys", "buckets"],
+)
+def test_hot_band_stats_path_equals_capped_bands(spark, shape):
+    """Every capped key join — LSH bands, m=2 Hamming pigeonhole keys,
+    hyperplane buckets — runs the one rule of operators/lsh.py:
+    hot_keys -> kept_given_hot -> key_pairs must produce exactly the
+    cap written out directly. Per-key sizes by window count, every
+    member of an at-or-below-cap key kept, a member of an over-cap key
+    kept iff pmod(xxhash64(member, *keys), size) < cap; the hot set ==
+    the capped subset of the per-key stats; the pairs == every distinct
+    member pair (a < b) sharing a kept key."""
+    from pyspark.sql import Window
+
+    rows, keys, member, cap, size = shape(spark)
+    rows = rows.localCheckpoint(eager=True)
+
+    sized = rows.withColumn(
+        size, F.count("*").over(Window.partitionBy(*keys))
+    ).withColumn("capped", F.col(size) > cap)
     kept_ref = sized.filter(
         ~F.col("capped")
-        | (F.pmod(F.xxhash64("doc_id", "band_id", "band_hash"),
-                  F.col("band_size")) < cfg.max_band_size)
-    ).select("doc_id", "band_id", "band_hash")
-    stats_ref = sized.select(
-        "band_id", "band_hash", "band_size", "capped"
-    ).distinct()
+        | (F.pmod(F.xxhash64(member, *keys), F.col(size)) < cap)
+    ).select(member, *keys)
+    stats_ref = sized.select(*keys, size, "capped").distinct()
 
-    hot = hot_band_stats(bands, cfg)
-    kept_new = kept_bands_given_hot(bands, hot, cfg)
-    assert sorted(map(tuple, kept_new.collect())) == sorted(
-        map(tuple, kept_ref.collect())
-    )
-    assert sorted(map(tuple, hot.collect())) == sorted(
+    hot = hot_keys(rows, keys, cap, size)
+    kept_new = kept_given_hot(rows, hot, keys, member, cap, size)
+    kept_rows = sorted(map(tuple, kept_new.collect()))
+    assert kept_rows == sorted(map(tuple, kept_ref.collect()))
+    hot_rows = sorted(map(tuple, hot.collect()))
+    assert hot_rows  # the shape has a hot key
+    assert hot_rows == sorted(
         map(tuple, stats_ref.filter("capped").collect())
     )
+
+    groups: dict = {}
+    for r in kept_rows:
+        groups.setdefault(r[1:], set()).add(r[0])
+    pairs_ref = {(a, b) for g in groups.values() for a in g for b in g
+                 if a < b}
+    pairs = key_pairs(kept_new, keys, member, "a", "b").collect()
+    assert len(pairs) == len(pairs_ref)
+    assert {(r.a, r.b) for r in pairs} == pairs_ref
 
 
 def test_small_bands_not_sampled(spark):
@@ -153,10 +196,20 @@ def test_small_bands_not_sampled(spark):
     sig = [9] * cfg.num_perm
     df = _sig_df(spark, [(i, 10, sig) for i in range(3)])
     bands = band_table(df, cfg)
-    hot = hot_band_stats(bands, cfg)
+    hot, kept = _band_hot_kept(bands, cfg)
     assert hot.count() == 0
     # at-cap bands keep everyone
-    assert kept_bands_given_hot(bands, hot, cfg).count() == 3 * cfg.lsh_bands
+    assert kept.count() == 3 * cfg.lsh_bands
+
+
+def test_band_cap_below_one_rejected():
+    """pmod(hash, size) < 0 never holds: a cap below 1 would drop every
+    member of every band, so the config refuses it."""
+    with pytest.raises(ValueError, match="max_band_size"):
+        DedupConfig(max_band_size=0)
+    with pytest.raises(ValueError, match="max_band_size"):
+        DedupConfig(max_band_size=-5)
+    assert DedupConfig(max_band_size=1).max_band_size == 1
 
 
 def test_candidate_pairs_are_deduped_and_ordered(spark):

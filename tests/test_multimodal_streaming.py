@@ -431,17 +431,17 @@ def test_incremental_dedup_aggregates_batch_hot_bands_once(
     from imageduplicatefinder_spark.streaming.dedup_stream import incremental_dedup
 
     computed = spark.sparkContext.accumulator(0)
-    real_hot_band_stats = lsh.hot_band_stats
+    real_hot_keys = lsh.hot_keys
 
-    def counted_hot_band_stats(bands, cfg):
+    def counted_hot_keys(rows, keys, cap, size_col):
         def seen(_):
             computed.add(1)
             return True
 
-        return real_hot_band_stats(bands, cfg).filter(
-            F.udf(seen, "boolean")("band_size"))
+        return real_hot_keys(rows, keys, cap, size_col).filter(
+            F.udf(seen, "boolean")(size_col))
 
-    monkeypatch.setattr(lsh, "hot_band_stats", counted_hot_band_stats)
+    monkeypatch.setattr(lsh, "hot_keys", counted_hot_keys)
 
     cfg = DedupConfig(max_band_size=4)
     hist_docs = spark.createDataFrame(

@@ -66,10 +66,11 @@ def main() -> None:
 
     from imageduplicatefinder_spark.config import DedupConfig
     from imageduplicatefinder_spark.operators.lsh import (
+        BAND_KEY,
         band_table,
-        hot_band_stats,
-        kept_bands_given_hot,
-        pairs_from_kept_bands,
+        hot_keys,
+        key_pairs,
+        kept_given_hot,
     )
     from imageduplicatefinder_spark.operators.prefix_join import (
         exact_candidates,
@@ -131,10 +132,11 @@ def main() -> None:
     def lsh(capped: bool):
         c = cfg if capped else DedupConfig(max_band_size=10**9)
         bands = band_table(sigs, c).localCheckpoint(eager=False)
-        hot = hot_band_stats(bands, c)
-        kept = kept_bands_given_hot(bands, hot, c)
+        cap = c.max_band_size
+        hot = hot_keys(bands, BAND_KEY, cap, "band_size")
+        kept = kept_given_hot(bands, hot, BAND_KEY, "doc_id", cap, "band_size")
         raw = raw_join_rows(kept)
-        pairs = pairs_from_kept_bands(kept)
+        pairs = key_pairs(kept, BAND_KEY, "doc_id")
         out = {"raw_join_rows": raw,
                "distinct_candidates": pairs.count(),
                "capped_bands": hot.count()}
