@@ -87,8 +87,7 @@ def _driver_guard(edges: DataFrame) -> tuple[DataFrame, DataFrame | None]:
     (self-loops label themselves, matching the distributed contract)
     and labels are the exact min-label fixpoint, so the output is
     row-identical to the contraction rounds. A null endpoint also
-    yields None — null-edge semantics stay on the distributed path,
-    the same fall-through style as ``_verify_pairs_vectorized``.
+    yields None — null-edge semantics stay on the distributed path.
     """
     import numpy as np
     import pandas as pd

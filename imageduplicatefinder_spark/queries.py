@@ -140,23 +140,18 @@ def _drop_hot_keys(rows: DataFrame, keys: list[str], cap: int) -> DataFrame:
     return rows.join(F.broadcast(hot), on=keys, how="left_anti")
 
 
-def _capped_shingle_table(docs: DataFrame, checkpoint: bool = True) -> DataFrame:
+def _capped_shingle_table(docs: DataFrame) -> DataFrame:
     """(doc_id, shingle) with the document-frequency cap applied: the
     hot set (df > _SHINGLE_DF_CAP — tiny, boilerplate) is removed via a
     BROADCAST anti-join, so no mega-key ever reaches the shingle
-    self-join. ``checkpoint=False`` keeps the lineage visible for plan
-    assertions; the default lazily materializes twice (pre-cap, so the
-    explode runs once for the hot-agg and the anti-join; post-cap, so
-    sizes and both self-join sides reuse one result)."""
+    self-join. Lazily materialized twice: pre-cap, so the explode runs
+    once for the hot-agg and the anti-join; post-cap, so sizes and both
+    self-join sides reuse one result."""
     sh = widen_if_narrow(docs).select("doc_id", _words().alias("w")).select(
         "doc_id", F.explode(_shingles_expr(F.col("w"))).alias("shingle")
-    )
-    if checkpoint:
-        sh = sh.localCheckpoint(eager=False)
-    sh = _drop_hot_keys(sh, ["shingle"], _SHINGLE_DF_CAP)
-    if checkpoint:
-        sh = sh.localCheckpoint(eager=False)
-    return sh
+    ).localCheckpoint(eager=False)
+    return _drop_hot_keys(sh, ["shingle"], _SHINGLE_DF_CAP).localCheckpoint(
+        eager=False)
 
 
 def _shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2392,9 +2387,11 @@ def q_source_mirror_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     most C(cap, 2) — the pair space is bounded by shared classes, not
     repos². Everything after is plain keyed aggregation."""
     docs = load_table(spark, sf_dir, "documents")
+    # materialized: the hot-class drop scans its input twice
     classes = (
         widen_if_narrow(docs).select("source", _token_set_hash().alias("sh"))
         .distinct()
+        .localCheckpoint(eager=False)
     )
     cf = _drop_hot_keys(classes, ["sh"], _MIRROR_MAX_SOURCE_DF)
     cf = cf.localCheckpoint(eager=False)

@@ -113,7 +113,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # parallelism-first coalescing only holds partitions at the core
         # count while they exceed minPartitionSize (default 1 MB). This
-        # repo's CPU-heavy stages (array_intersect verify, UDF
+        # repo's CPU-heavy stages (the verify attach joins, UDF
         # fingerprints) often shuffle only a few MB, so the default
         # merges them below the core count and idles executors exactly
         # where compute is densest. 16 KB keeps AQE's empty-partition

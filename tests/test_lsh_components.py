@@ -318,31 +318,54 @@ def test_cc_rounds_restore_session_confs(spark, monkeypatch):
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts
 
 
+#: each verify leg, forced: the module constants to set and the Python
+#: map node its plan runs
+_VERIFY_LEGS = {
+    "pad": ({}, "MapInPandas"),
+    "csr": ({"_PAD_MATRIX_MAX_BYTES": 0}, "MapInPandas"),
+    "shuffle": ({"BROADCAST_VERIFY_MAX_SIGS": 0}, "MapInArrow"),
+}
+
+
+def _verify_legs(monkeypatch, pairs, sigs, cfg, unique_ids=True, **kw):
+    """``verify_pairs`` rows (sorted) per forced leg. Each plan must run
+    the leg's Python map node and no JVM ``array_intersect``; with
+    duplicate ids every leg is the shuffle join."""
+    import imageduplicatefinder_spark.operators.verify as V
+
+    out = {}
+    for leg, (consts, node) in _VERIFY_LEGS.items():
+        with monkeypatch.context() as m:
+            for name, value in consts.items():
+                m.setattr(V, name, value)
+            df = V.verify_pairs(pairs, sigs, cfg, **kw)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert (node if unique_ids else "MapInArrow") in plan, plan
+            assert "array_intersect" not in plan, plan
+            out[leg] = sorted(
+                ((r.src, r.dst, r.hamming, r.jaccard, r.containment,
+                  r.verified) for r in df.collect()), key=repr)
+    return out
+
+
 def test_verify_pairs_null_shingles_are_unknown(spark, monkeypatch):
     """A pair with a NULL shingle side (a hand-built table) is UNKNOWN —
     NULL jaccard/containment/verified, dropped by filter(verified),
-    never a silent 0.0 — at either kernel guard setting (the kernel
-    refuses the NULL row, so both take the join), while pairs with both
-    sets still score."""
-    import imageduplicatefinder_spark.operators.verify as V
-
+    never a silent 0.0 — on every leg, while pairs with both sets still
+    score and an empty set scores 0.0."""
     cfg = DedupConfig()
     sigs = spark.createDataFrame(
-        [(1, 5, [1, 2, 3]), (2, 5, None), (3, 5, [1, 2, 3])],
+        [(1, 5, [1, 2, 3]), (2, 5, None), (3, 5, [1, 2, 3]), (4, 6, [])],
         "doc_id long, simhash long, shingles array<long>",
     )
-    pairs = spark.createDataFrame([(1, 2), (1, 3)], "src long, dst long")
-    for cap in (V.BROADCAST_VERIFY_MAX_SIGS, 0):
-        monkeypatch.setattr(V, "BROADCAST_VERIFY_MAX_SIGS", cap)
-        got = {(r.src, r.dst): r
-               for r in V.verify_pairs(pairs, sigs, cfg).collect()}
-        unknown = got[(1, 2)]
-        assert unknown.hamming == 0
-        assert unknown.jaccard is None and unknown.containment is None
-        assert unknown.verified is None
-        assert got[(1, 3)].jaccard == 1.0 and got[(1, 3)].verified
-        kept = V.verify_pairs(pairs, sigs, cfg, only_verified=True).collect()
-        assert [(r.src, r.dst) for r in kept] == [(1, 3)]
+    pairs = spark.createDataFrame([(1, 2), (1, 3), (1, 4)],
+                                  "src long, dst long")
+    want = [(1, 2, 0, None, None, None), (1, 3, 0, 1.0, 1.0, True),
+            (1, 4, 2, 0.0, 0.0, False)]
+    for leg, got in _verify_legs(monkeypatch, pairs, sigs, cfg).items():
+        assert got == want, leg
+    kept = _verify_legs(monkeypatch, pairs, sigs, cfg, only_verified=True)
+    assert all(got == [want[1]] for got in kept.values()), kept
 
 
 def _label_propagation(es):
@@ -460,15 +483,12 @@ def test_use_simhash_verify_flag_activates_hamming_clause(spark):
 
 
 def test_verify_kernel_pad_csr_and_join_paths_agree(spark, monkeypatch):
-    """The vectorized verify kernel ships either a padded rank matrix
-    or the CSR (flat, offs) payload depending on _PAD_MATRIX_MAX_BYTES;
-    both must produce evidence frames identical to each other AND to
-    the shuffle-join fallback, including ragged set sizes and absent
-    doc ids."""
+    """The broadcast leg ships either a padded rank matrix or the CSR
+    (flat, offs) payload depending on _PAD_MATRIX_MAX_BYTES; both must
+    produce evidence frames identical to each other AND to the shuffle
+    join leg, including ragged and empty set sizes and absent doc ids.
+    A duplicated doc_id duplicates its pairs' rows, as a join does."""
     import random
-
-    import imageduplicatefinder_spark.operators.verify as V
-    from imageduplicatefinder_spark.config import DedupConfig
 
     rng = random.Random(31)
     sig_rows = []
@@ -478,54 +498,38 @@ def test_verify_kernel_pad_csr_and_join_paths_agree(spark, monkeypatch):
             (d, rng.getrandbits(63),
              sorted(rng.sample(range(60), n)))
         )
-    sigs = spark.createDataFrame(
-        sig_rows, "doc_id long, simhash long, shingles array<long>"
-    )
+    sig_rows[-1] = (39, sig_rows[-1][1], [])  # an empty set scores 0.0
+    schema = "doc_id long, simhash long, shingles array<long>"
+    sigs = spark.createDataFrame(sig_rows, schema)
     pair_rows = [(a, b) for a in range(40) for b in range(a + 1, 40)]
-    pair_rows.append((7, 999))  # absent id: dropped by the kernels,
-    # unmatched by the join — both yield no row
+    pair_rows.append((7, 999))  # absent id: no row on any leg
     pairs = spark.createDataFrame(pair_rows, "src long, dst long")
     cfg = DedupConfig()
 
-    def rows(df):
-        return sorted(
-            (r.src, r.dst, r.hamming, r.jaccard, r.containment, r.verified)
-            for r in df.collect()
-        )
+    legs = _verify_legs(monkeypatch, pairs, sigs, cfg)
+    assert legs["pad"] == legs["csr"] == legs["shuffle"]
+    assert len(legs["pad"]) == len(pair_rows) - 1
+    assert all(r[3] == r[4] == 0.0 for r in legs["pad"] if r[1] == 39)
 
-    pad = rows(V.verify_pairs(pairs, sigs, cfg))
-    monkeypatch.setattr(V, "_PAD_MATRIX_MAX_BYTES", 0)
-    csr = rows(V.verify_pairs(pairs, sigs, cfg))
-    monkeypatch.setattr(V, "BROADCAST_VERIFY_MAX_SIGS", 0)
-    join = rows(V.verify_pairs(pairs, sigs, cfg))
-    assert pad == csr == join
-    assert len(pad) == len(pair_rows) - 1
+    dup = spark.createDataFrame(sig_rows + [(0, 1, [1, 2])], schema)
+    legs_dup = _verify_legs(monkeypatch, pairs, dup, cfg, unique_ids=False)
+    assert legs_dup["pad"] == legs_dup["csr"] == legs_dup["shuffle"]
+    assert len(legs_dup["pad"]) == len(pair_rows) - 1 + 39
 
 
-def test_verify_kernel_refuses_repeated_shingles(spark, monkeypatch):
-    """The vectorized kernel counts intersections by membership, so a
-    shingle array that repeats a value ([1,1,2] vs [1,2]) would score
-    jaccard 3/2 there and 2/3 under the join's array_intersect; such a
-    table must take the join path, giving the same rows either way."""
-    import imageduplicatefinder_spark.operators.verify as V
-    from imageduplicatefinder_spark.config import DedupConfig
-
+def test_verify_repeated_shingles_count_once(spark, monkeypatch):
+    """|A ∩ B| is a set count while |A| and |B| are the array lengths,
+    so a shingle array that repeats a value ([1,1,2] vs [1,2]) scores
+    jaccard 2/3 on every leg."""
     sigs = spark.createDataFrame(
         [(1, 5, [1, 1, 2]), (2, 7, [1, 2]), (3, 5, [2, 3, 4])],
         "doc_id long, simhash long, shingles array<long>",
     )
     pairs = spark.createDataFrame([(1, 2), (1, 3), (2, 3)],
                                   "src long, dst long")
-    cfg = DedupConfig()
-
-    def rows(df):
-        return sorted(
-            (r.src, r.dst, r.hamming, r.jaccard, r.containment, r.verified)
-            for r in df.collect()
-        )
-
-    default = rows(V.verify_pairs(pairs, sigs, cfg))
-    monkeypatch.setattr(V, "BROADCAST_VERIFY_MAX_SIGS", 0)
-    join = rows(V.verify_pairs(pairs, sigs, cfg))
-    assert default == join
-    assert default[0][3] == pytest.approx(2 / 3)
+    legs = _verify_legs(monkeypatch, pairs, sigs, DedupConfig())
+    assert legs["pad"] == legs["csr"] == legs["shuffle"]
+    got = {(r[0], r[1]): (r[3], r[4]) for r in legs["pad"]}
+    assert got[(1, 2)] == (pytest.approx(2 / 3), 1.0)
+    assert got[(1, 3)] == (pytest.approx(1 / 5), pytest.approx(1 / 3))
+    assert got[(2, 3)] == (pytest.approx(1 / 4), pytest.approx(1 / 2))

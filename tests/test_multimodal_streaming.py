@@ -282,6 +282,51 @@ def test_incremental_dedup_against_history(spark, tmp_path):
                for pair in got for a, b in [tuple(pair)])
 
 
+def test_incremental_dedup_shuffle_verify_equals_broadcast(
+        spark, tmp_path, monkeypatch):
+    """With ``BROADCAST_VERIFY_MAX_SIGS`` below the history size the
+    drain verifies on the shuffle leg; its edges, every evidence column
+    included, equal the default (broadcast) run's."""
+    import imageduplicatefinder_spark.operators.verify as V
+    from imageduplicatefinder_spark.config import DedupConfig
+    from imageduplicatefinder_spark.operators.signatures import compute_signatures
+    from imageduplicatefinder_spark.streaming.dedup_stream import incremental_dedup
+
+    cfg = DedupConfig()
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
+    other = "totally different content nothing shared here at all " * 5
+    hist_sigs = compute_signatures(spark.createDataFrame(
+        [("r", "old/base.py", "c0", "py", base),
+         ("r", "old/other.py", "c1", "py", other),
+         ("r", "old/host.py", "c2", "py", other + base)],
+        "repo string, path string, commit string, lang string, content string",
+    ), cfg)
+    t0 = datetime.datetime(2024, 1, 1)
+    src = spark.createDataFrame([
+        (t0, "r", "new/neardup.py", "c3", "py", base + "one tiny extra tail"),
+        (t0, "r", "new/neardup2.py", "c4", "py", base + "another tiny tail"),
+        (t0, "r", "new/other.py", "c5", "py", other + "x"),
+    ], STREAM_SCHEMA)
+    srcdir = str(tmp_path / "legs_src")
+    src.coalesce(1).write.parquet(srcdir)
+
+    def drain(tag):
+        stream = spark.readStream.schema(src.schema).parquet(srcdir)
+        out = str(tmp_path / f"{tag}_edges")
+        incremental_dedup(stream, hist_sigs, cfg, out,
+                          str(tmp_path / f"{tag}_ckpt")).awaitTermination(120)
+        return sorted(tuple(r) for r in spark.read.parquet(out).collect())
+
+    default = drain("broadcast")
+    shuffled = []
+    shuffle_leg = V._shuffle_leg
+    monkeypatch.setattr(V, "_shuffle_leg", lambda *a, **k: (
+        shuffled.append(1), shuffle_leg(*a, **k))[1])
+    monkeypatch.setattr(V, "BROADCAST_VERIFY_MAX_SIGS", 2)
+    assert drain("shuffle") == default
+    assert shuffled and len(default) >= 3
+
+
 def test_fetch_urls_fake_and_error_isolation(spark):
     """S10 data-plane analog: URL column -> binary payloads, with
     per-row error isolation (S4 analog) on the real-fetch path."""

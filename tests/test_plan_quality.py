@@ -123,14 +123,19 @@ def test_media_dedup_no_cartesian(spark):
 
 
 def test_shingle_hot_set_is_broadcast_anti_join(spark):
-    """The DF-cap anti-join must broadcast the (tiny) hot-shingle set,
-    not sort-merge the full shingle table against it. Checked on the
-    uncheckpointed lineage (the localCheckpoint leaf hides it)."""
-    from imageduplicatefinder_spark.queries import _capped_shingle_table
+    """The DF-cap anti-join that the capped catalog builders share must
+    broadcast the (tiny) hot-shingle set, not sort-merge the full
+    shingle table against it. Checked on an uncheckpointed (doc_id,
+    shingle) frame (a localCheckpoint leaf would hide its lineage)."""
+    from imageduplicatefinder_spark.queries import (
+        _SHINGLE_DF_CAP,
+        _drop_hot_keys,
+    )
     from imageduplicatefinder_spark.sources.tables import load_table
 
-    docs = load_table(spark, SF_DIR, "documents")
-    plan = plan_of(_capped_shingle_table(docs, checkpoint=False))
+    sh = load_table(spark, SF_DIR, "documents").select(
+        "doc_id", F.explode(F.split("text", " ")).alias("shingle"))
+    plan = plan_of(_drop_hot_keys(sh, ["shingle"], _SHINGLE_DF_CAP))
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
 
 

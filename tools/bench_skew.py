@@ -25,13 +25,16 @@ the join would emit), and the realized distinct candidate count:
                   naive implementation ships; quadratic on the
                   boilerplate shingles
 
-Usage: python tools/bench_skew.py [sf_dir] [--cpus N] [--frac F]
-                                  [--replicate R] [--skip-exact]
-Prints one JSON line per scheme. ``--replicate`` replays the corpus
-through bench.py's distinct-content replicator BEFORE planting the
-boilerplate (the block stays shared across copies), scaling the hostile
-band to R x 0.3 x n docs — the regime where the uncapped self-join
-degenerates for real. ``--skip-exact`` omits the exhaustive baseline
+Usage: python tools/bench_skew.py [sf_dir] [--cpus=N] [--frac=F]
+                                  [--replicate=R] [--skip-exact]
+Prints one JSON line per scheme, and exits non-zero if the capped leg
+caps no band (the corpus is then too small to show anything). The
+smallest run that engages the cap is sf0.01 with ``--replicate=3``
+(24 capped bands); sf0.01 alone caps none. ``--replicate`` replays
+the corpus through bench.py's distinct-content replicator BEFORE
+planting the boilerplate (the block stays shared across copies),
+scaling the hostile band to R x 0.3 x n docs — the regime where the
+uncapped self-join degenerates for real. ``--skip-exact`` omits the exhaustive baseline
 (quadratic in the boilerplate count; pointless to wait on at high R).
 """
 
@@ -126,6 +129,7 @@ def main() -> None:
         out["scheme"] = name
         out["wall_sec"] = round(wall, 2)
         print(json.dumps(out), flush=True)
+        return out
 
     do_verify = "--verify" in sys.argv
 
@@ -163,7 +167,10 @@ def main() -> None:
         return out
 
     verified_edges: dict[bool, object] = {}
-    run("lsh_capped", lambda: lsh(True))
+    if not run("lsh_capped", lambda: lsh(True))["capped_bands"]:
+        sys.exit(f"bench_skew: no band exceeds max_band_size="
+                 f"{cfg.max_band_size}, so the cap is not exercised; "
+                 "use a larger corpus (sf0.01 needs --replicate=3)")
     run("lsh_uncapped", lambda: lsh(False))
     if do_verify and len(verified_edges) == 2:
         from imageduplicatefinder_spark.operators.components import (
